@@ -3,10 +3,11 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -136,6 +137,84 @@ object ExpressionHelpers {
       i += 1
     }
     java.lang.Double.valueOf(acc)
+  }
+
+  /** Spark's SQL double ordering (`SQLOrderingUtil.compareDoubles`), null
+    * lowest: NaN is greatest and -0.0 equals 0.0.
+    */
+  private def compareScores(aNull: Boolean, a: Double,
+      bNull: Boolean, b: Double): Int =
+    if (aNull || bNull) java.lang.Boolean.compare(!aNull, !bNull)
+    else if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** [[vecDot]]'s index-order sum over dense arrays (the driver-side
+    * literal precomputations use it too, so their values match).
+    */
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** Where [[vecDot]] is null on dense copies ([[denseOrNull]]). */
+  private def dotNull(a: Array[Double], b: Array[Double]): Boolean =
+    a == null || b == null || a.length != b.length
+
+  /** A dense copy of `a`, or null when `a` or any element is null. */
+  def denseOrNull(a: ArrayData): Array[Double] =
+    if (a == null || (0 until a.numElements()).exists(a.isNullAt)) null
+    else a.toDoubleArray()
+
+  /** [[NearestCentroid]]'s per-row loop: the index of the winning
+    * centroid, -1 for an empty model. Scores divide as Spark's `Divide`
+    * does: a zero divisor gives null, or raises under ANSI when the dot
+    * product is not null.
+    */
+  def nearestCentroid(emb: Array[Double], normNull: Boolean, norm: Double,
+      embs: Array[Array[Double]], norms: Array[Double], ids: Array[Long],
+      ansi: Boolean): Int = {
+    var best = -1
+    var bestNull = true
+    var bestS = 0.0
+    var i = 0
+    while (i < ids.length) {
+      val div = norm * norms(i)
+      val dNull = dotNull(emb, embs(i))
+      if (ansi && !normNull && div == 0 && !dNull)
+        throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero in nearest_centroid")
+      val sNull = dNull || normNull || div == 0
+      val s = if (sNull) 0.0 else dot(emb, embs(i)) / div
+      val cmp = compareScores(sNull, s, bestNull, bestS)
+      if (best < 0 || cmp > 0 || (cmp == 0 && ids(i) < ids(best))) {
+        best = i; bestNull = sNull; bestS = s
+      }
+      i += 1
+    }
+    best
+  }
+
+  /** [[PqCode]]'s per-row loop over the code indices `cands` at the
+    * row's subspace: the index of the winning code, -1 when none.
+    */
+  def pqCode(xs: Array[Double], cands: Array[Int], cs: Array[Array[Double]],
+      n2: Array[Double], js: Array[Long]): Int = {
+    val xsxs = if (xs == null) 0.0 else dot(xs, xs)
+    var best = -1
+    var bestNull = true
+    var bestD = 0.0
+    var t = 0
+    while (t < cands.length) {
+      val c = cands(t)
+      val dNull = dotNull(xs, cs(c))
+      val d = if (dNull) 0.0 else (xsxs - 2.0 * dot(xs, cs(c))) + n2(c)
+      val cmp = compareScores(dNull, d, bestNull, bestD)
+      if (best < 0 || cmp < 0 || (cmp == 0 && js(c) < js(best))) {
+        best = c; bestNull = dNull; bestD = d
+      }
+      t += 1
+    }
+    best
   }
 
   /** One-pass verify step for the inverted-index similarity join
@@ -512,6 +591,127 @@ case class VecDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** The shape shared by [[NearestCentroid]] and [[PqCode]]: a vector, an
+  * argument and a foldable model literal (an array of 3-field structs)
+  * in, a non-null answer out. Subclasses decode the model once per
+  * expression instance into lazy fields, reached from generated code via
+  * an `addReferenceObj` handle (the [[BloomMightContain]] pattern). A row
+  * with no candidate raises, so callers drop such rows first.
+  */
+trait ModelLookup extends Expression {
+  /** Expected types of the first two children and of the model fields. */
+  protected def argTypes: Seq[DataType]
+  protected def fieldTypes: Seq[DataType]
+
+  /** The answer for one row: `arg` boxed, null for a null argument. */
+  def lookup(vector: ArrayData, arg: Any): Any
+
+  protected def model: Expression = children(2)
+  @transient protected lazy val modelRows: IndexedSeq[InternalRow] = {
+    val arr = model.eval(null).asInstanceOf[ArrayData]
+    (0 until arr.numElements()).map(arr.getStruct(_, 3))
+  }
+
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val want = argTypes :+ ArrayType(StructType(fieldTypes.map(StructField("", _))))
+    if (model.foldable && children.map(_.dataType).zip(want).forall {
+        case (got, w) => DataType.equalsStructurally(got, w, ignoreNullability = true) })
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires (" +
+      want.map(_.catalogString).mkString(", ") + ") with a foldable model, got " +
+      children.map(_.dataType.catalogString).mkString(", "))
+  }
+
+  override def eval(input: InternalRow): Any =
+    lookup(children(0).eval(input).asInstanceOf[ArrayData], children(1).eval(input))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+    val v = children(0).genCode(ctx)
+    val a = children(1).genCode(ctx)
+    val boxed = CodeGenerator.boxedType(children(1).dataType)
+    ev.copy(code = code"""
+      |${v.code}
+      |${a.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  (${CodeGenerator.boxedType(dataType)}) $ref.lookup(${v.isNull} ? null : ${v.value},
+      |    ${a.isNull} ? null : $boxed.valueOf(${a.value}));
+     """.stripMargin, isNull = FalseLiteral)
+  }
+}
+
+/** `nearest_centroid(emb array<double>, norm double,
+  * model array<struct<c_id bigint, c_emb array<double>, c_norm double>>)
+  * -> bigint`: the c_id with the greatest cosine `vec_dot(emb, c_emb) /
+  * (norm * c_norm)`, ties to the smallest c_id, a null score lowest and
+  * NaN highest. A row that scores null everywhere (null `emb`) gets the
+  * smallest c_id. The model must not be empty.
+  */
+case class NearestCentroid(emb: Expression, norm: Expression, cents: Expression,
+    ansi: Boolean = SQLConf.get.ansiEnabled) extends ModelLookup {
+
+  override def children: Seq[Expression] = Seq(emb, norm, cents)
+  override protected def argTypes = Seq(ArrayType(DoubleType), DoubleType)
+  override protected def fieldTypes = Seq(LongType, ArrayType(DoubleType), DoubleType)
+  override def dataType: DataType = LongType
+  override def prettyName: String = "nearest_centroid"
+
+  @transient private lazy val ids = modelRows.map(_.getLong(0)).toArray
+  @transient private lazy val embs =
+    modelRows.map(r => ExpressionHelpers.denseOrNull(r.getArray(1))).toArray
+  @transient private lazy val norms = modelRows.map(_.getDouble(2)).toArray
+
+  override def lookup(v: ArrayData, n: Any): Any = {
+    val i = ExpressionHelpers.nearestCentroid(ExpressionHelpers.denseOrNull(v),
+      n == null, if (n == null) 0.0 else n.asInstanceOf[Double], embs, norms, ids, ansi)
+    if (i < 0) throw new IllegalStateException(s"$prettyName: the model is empty")
+    ids(i)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): Expression = copy(emb = c(0), norm = c(1), cents = c(2))
+}
+
+/** `pq_code(xs array<double>, s int,
+  * codebook array<struct<j bigint, s int, cs array<double>>>)
+  * -> struct<j bigint, cs array<double>>`: of the codes at subspace `s`,
+  * the one with the least `d2 = (xs·xs − 2·xs·cs) + cs·cs` in that float
+  * grouping, ties to the smallest j, a null d2 first and NaN last. The
+  * codebook may be ragged: only the codes present at `s` compete, and a
+  * row whose `s` has none (or is null) has no answer.
+  */
+case class PqCode(xs: Expression, s: Expression, codebook: Expression)
+    extends ModelLookup {
+
+  override def children: Seq[Expression] = Seq(xs, s, codebook)
+  override protected def argTypes = Seq(ArrayType(DoubleType), IntegerType)
+  override protected def fieldTypes = Seq(LongType, IntegerType, ArrayType(DoubleType))
+  override def dataType: DataType = StructType(Seq(
+    StructField("j", LongType, nullable = false), StructField("cs", ArrayType(DoubleType))))
+  override def prettyName: String = "pq_code"
+
+  @transient private lazy val js = modelRows.map(_.getLong(0)).toArray
+  @transient private lazy val cs =
+    modelRows.map(r => ExpressionHelpers.denseOrNull(r.getArray(2))).toArray
+  @transient private lazy val n2 = cs.map(c => if (c == null) 0.0 else ExpressionHelpers.dot(c, c))
+  @transient private lazy val answers =
+    modelRows.map(r => InternalRow(r.getLong(0), r.getArray(2))).toArray
+  @transient private lazy val bySubspace: Map[Int, Array[Int]] =
+    modelRows.indices.groupBy(modelRows(_).getInt(1)).map { case (k, ix) => k -> ix.toArray }
+
+  override def lookup(x: ArrayData, si: Any): Any = {
+    val i = if (si == null) -1 else ExpressionHelpers.pqCode(ExpressionHelpers.denseOrNull(x),
+      bySubspace.getOrElse(si.asInstanceOf[Int], Array.emptyIntArray), cs, n2, js)
+    if (i < 0) throw new IllegalStateException(s"$prettyName: no code at subspace $si")
+    answers(i)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): Expression = copy(xs = c(0), s = c(1), codebook = c(2))
 }
 
 /** `bloom_might_contain(bigint, binary) -> boolean`, null-safe, codegen'd.

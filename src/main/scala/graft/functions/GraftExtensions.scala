@@ -49,17 +49,23 @@ object GraftFunctions {
       (args: Seq[Expression]) => BpeEncode(args(0), args(1))),
     (FunctionIdentifier("shingle_arr"),
       new ExpressionInfo(classOf[ShingleArr].getName, "shingle_arr"),
-      (args: Seq[Expression]) => ShingleArr(args(0), args(1))))
+      (args: Seq[Expression]) => ShingleArr(args(0), args(1))),
+    (FunctionIdentifier("nearest_centroid"),
+      new ExpressionInfo(classOf[NearestCentroid].getName, "nearest_centroid"),
+      (args: Seq[Expression]) => NearestCentroid(args(0), args(1), args(2))),
+    (FunctionIdentifier("pq_code"),
+      new ExpressionInfo(classOf[PqCode].getName, "pq_code"),
+      (args: Seq[Expression]) => PqCode(args(0), args(1), args(2))))
 
   /** Idempotent registration into an existing session: SQL functions into
     * the registry, [[VecDotRewrite]] into the experimental optimizer batch
     * (extensions can only be injected at session build; extraOptimizations
     * is the public hook for a live session).
     */
-  // once per session: registration is idempotent but not free (seven
-  // registry writes + three optimizer-batch scans), and the column DSL
-  // calls ensureRegistered on EVERY column construction — weak keys so a
-  // stopped session doesn't pin its state here
+  // once per session: registration is idempotent but not free (one
+  // registry write per function + three optimizer-batch scans), and the
+  // column DSL calls ensureRegistered on EVERY column construction — weak
+  // keys so a stopped session doesn't pin its state here
   private val registeredSessions =
     java.util.Collections.synchronizedSet(
       java.util.Collections.newSetFromMap(
@@ -143,6 +149,21 @@ object GraftFunctions {
     ensureRegistered()
     call_function("shingle_arr", text,
       org.apache.spark.sql.functions.lit(k))
+  }
+
+  /** [[NearestCentroid]] against literal `(c_id, c_emb, c_norm)` rows. */
+  def nearestCentroid(emb: Column, norm: Column,
+      cents: Seq[(Long, Seq[Double], Double)]): Column = {
+    ensureRegistered()
+    call_function("nearest_centroid", emb, norm,
+      org.apache.spark.sql.functions.typedlit(cents))
+  }
+
+  /** [[PqCode]] against literal `(j, s, cs)` codebook rows. */
+  def pqCode(xs: Column, s: Column, codes: Seq[(Long, Int, Seq[Double])]): Column = {
+    ensureRegistered()
+    call_function("pq_code", xs, s,
+      org.apache.spark.sql.functions.typedlit(codes))
   }
 
   /** Probe a serialized sketch BloomFilter with a pre-hashed long column

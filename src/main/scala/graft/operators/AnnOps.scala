@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.functions.GraftFunctions.vecDot
+import graft.functions.GraftFunctions.{pqCode, vecDot}
 
 /** Approximate/exact nearest-neighbor search over the `embeddings` table.
   *
@@ -263,7 +263,8 @@ object AnnOps {
     * `nProbes` nearest centroids per query (vec_id < 5, the gate's query
     * convention), and exactly score ONLY the probed cells. `cents` must
     * carry (c_id, c_emb, c_norm); a coarse quantizer is k << corpus by
-    * definition, so it broadcasts unconditionally.
+    * definition, so it is collected for the assignment and broadcast for
+    * the probe pick.
     */
   private[operators] def ivfSearch(e: DataFrame, cents: DataFrame,
       nProbes: Int = 2, topK: Int = 10): DataFrame =
@@ -321,7 +322,7 @@ object AnnOps {
   }
 
   /** ONE collect of the seeded model panel (vec_id < kSeeds, with norms):
-    * centroids, the PQ codebook grid ([[seededGrid]]), the probe pick and
+    * centroids, the PQ codebook rows ([[seededCodes]]), the probe pick and
     * the query panel all derive from these k rows driver-side — one
     * driver round-trip per gate invocation where r17 paid one per model
     * table (the honestly-recorded a03/a07 regression mechanism).
@@ -412,18 +413,9 @@ object AnnOps {
     // (sharded corpora), where a literal id threshold finds few or zero
     // seeds and the quantizer silently degenerates (r10 review finding).
     // Identical to the old convention whenever ids are dense from 0.
-    // r17 optimization (guide §2.2/§2.4): centroids are k rows by
-    // definition, so each Lloyd round materializes them AT THE DRIVER
-    // (the standard distributed-k-means shape) instead of threading a
-    // lazy k-row frame through the next round's plan. Assignment then
-    // runs through [[CentroidAssign.nearest]]'s inlined-literal form —
-    // a narrow projection, where the old crossJoin + max_by shuffled
-    // every corpus embedding once per iteration — and the element-wise
-    // mean is the only exchange left per round: a map-side-combined
-    // (c_id, pos) avg of k·dim rows per map partition. Assignment picks
-    // identical centroids (same csim floats, same ordering); the mean's
-    // float low bits may differ in summation order, which is why the
-    // trained path was always spec-pinned (recall floors), never hashed.
+    // Each Lloyd round holds the k centroids at the driver; the
+    // map-side-combined (c_id, pos) mean is its only exchange, and its
+    // float low bits depend on summation order (so: recall-pinned).
     val s = e.sparkSession
     import s.implicits._
     var cents: Seq[(Long, Seq[Double], Double)] =
@@ -432,8 +424,7 @@ object AnnOps {
         .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
     var i = 0
     while (i < iters && cents.nonEmpty) {
-      val centsDf = cents.toDF("c_id", "c_emb", "c_norm")
-      val means = CentroidAssign.nearest(e, centsDf, carry = Seq("emb"))
+      val means = CentroidAssign.nearestOf(e, cents, carry = Seq("emb"))
         .select(col("c_id"), posexplode(col("emb")).as(Seq("pos", "v")))
         .groupBy(col("c_id"), col("pos")).agg(avg(col("v")).as("m"))
         .collect()
@@ -471,10 +462,9 @@ object AnnOps {
     * replicate it exactly) — assigns every vector to its nearest centroid
     * by cosine; each query probes its 2 nearest centroids and scores
     * exactly ONLY the vectors in those cells. At 100 TB: assignment is
-    * one broadcast join + max_by (no shuffle of the big side beyond the
-    * cell groupBy), and search touches 2/16 of the corpus per query
-    * instead of all of it. The Lloyd-trained variant of the same search
-    * is [[ivfKnnTrained]].
+    * one narrow projection ([[CentroidAssign]], no shuffle), and search
+    * touches 2/16 of the corpus per query instead of all of it. The
+    * Lloyd-trained variant of the same search is [[ivfKnnTrained]].
     *
     * Retrieval quality (pinned by AnnRecallSpec): 2-probe of 16 cells
     * holds mean recall@10 ≥ 0.7 vs a01's exact top-k on the synthetic
@@ -589,20 +579,8 @@ object AnnOps {
     "a06_pq_adc",
     "product-quantization ADC top-k (8x8-dim subspaces, 16 seeded codes)",
     (s, dir) => {
-      // r18 (guide §2.4, the r17 encode-inline applied to the gate body
-      // it skipped): the old form joined every corpus subvector against
-      // the broadcast 16-code table and ranked with a corpus-wide
-      // (vec_id, s) window — an Exchange+sort of corpus×codes rows — and
-      // re-scanned the table twice more for the codebook and query
-      // subtrees. The codebook and queries are 16 rows of a model
-      // constant: ONE pushdown-pruned collect yields the inline encode
-      // grid ([[seededGrid]]/[[pqEncodeGrid]], the r17 a07/a11 form —
-      // same d2 floats, same (d2, j) tie-break) and the ADC LUT
-      // ([[adcLutRows]]: term = qs·cs with vecDot's exact summation).
-      // Plan: one corpus scan + narrow codegen encode + one broadcast
-      // LUT lookup + the ADC aggregate — the encode Exchange and two
-      // extra table scans are gone. Values identical; the a06 oracle
-      // hash is the arbiter.
+      // ONE collect of the 16 seed rows yields the codebook for the
+      // encode projection and the ADC LUT (vecDot's exact summation).
       import s.implicits._
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"),
@@ -615,10 +593,10 @@ object AnnOps {
       val seedEmb = e.filter(col("vec_id") < 16)
         .select(col("vec_id"), col("emb")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-      val (js, cs, n2) = seededGrid(seedEmb)
-      val encJ = pqEncodeGrid(subs.filter(col("vec_id") >= 5), js, cs, n2)
+      val codes = seededCodes(seedEmb)
+      val encJ = pqEncodeOf(subs.filter(col("vec_id") >= 5), codes)
         .select(col("vec_id"), col("s"), col("j"))
-      val lut = adcLutRows(seedEmb.filter(_._1 < 5), js, cs)
+      val lut = adcLutFromRows(seedEmb.filter(_._1 < 5), codes)
         .toDF("q_id", "s", "j", "term")
       val scored = encJ.join(broadcast(lut), Seq("s", "j"))
         .groupBy(col("q_id"), col("vec_id"))
@@ -656,36 +634,18 @@ object AnnOps {
       WHERE rank <= 10 ORDER BY q_id, rank"""))
 
   /** Per-subspace L2 Lloyd refinement of the PQ codebooks — the trained
-    * counterpart to a06's seed convention, exactly as [[kmeansCentroids]]
-    * stands beside a03 (but under PQ's metric: codebooks minimize
-    * EUCLIDEAN subspace distortion, so assignment is argmin d², update is
-    * the per-(code, dim) mean). `subs` carries `(vec_id, s, xs)`; returns
-    * `(s, j, cs)`. Deterministic structure: seeded start, fixed iteration
-    * count, smallest-code tie-break; empty cells keep their previous
-    * centroid (same migration argument as the cosine trainer).
+    * counterpart to a06's seed convention, as [[kmeansCentroids]] stands
+    * beside a03. `subs` carries `(vec_id, s, xs)`; returns `(j, s, cs)`,
+    * seeded from the subvectors of the k SMALLEST vec_ids present (not
+    * `vec_id < k`, which trains nothing for an offset id space such as an
+    * epoch of appended ids). Each of the `iters` rounds holds the codebook
+    * at the driver and assigns every subvector under [[pqEncode]]'s
+    * contract (one narrow projection); the per-(s, j, pos) mean is the
+    * round's only exchange, and a code with no subvectors keeps its
+    * centroid. The means' float low bits depend on summation order, so
+    * trained codebooks are recall-pinned, not hashed.
     */
   def pqCodebooks(subs: DataFrame, k: Int = 16, iters: Int = 2): DataFrame = {
-    // seed with the k SMALLEST vec_ids present — NOT `vec_id < k`: the
-    // same degenerate-seed hazard kmeansCentroids fixed (r10 review
-    // finding), which here silently trained EMPTY codebooks for any
-    // offset id space (an EpochIndex epoch of appended ids, a retrain
-    // over a live set whose low ids were deleted) and every downstream
-    // ADC join produced zero candidates. Identical to the old convention
-    // whenever ids are dense from 0.
-    // r17 optimization (the kmeansCentroids shape applied per subspace,
-    // guide §2.2/§2.4): the codebook is k·8 rows by definition, so each
-    // Lloyd round materializes it AT THE DRIVER and the assignment runs
-    // through the same inlined-literal argmin the encode uses
-    // ([[codeArgmin]]) — a narrow projection, where the old broadcast
-    // join + max_by shuffled every subvector row once per iteration
-    // (plus replayed the whole prior-round lineage, lazily, per
-    // reference). The per-(s, j, pos) mean is the only exchange left per
-    // round, map-side-combined to k·8·8 rows per partition. NaN-edge
-    // note: the old aggregate keyed max_by on struct(-d2, -j), which
-    // ordered a NaN d2 FIRST; the argmin form orders it last, matching
-    // the encode window's semantics ([[pqEncode]]) — the two paths now
-    // share one ordering definition (finite data is unaffected; trained
-    // floats were never hash-pinned).
     val s0 = subs.sparkSession
     import s0.implicits._
     val seedIds = subs.select(col("vec_id")).distinct()
@@ -696,30 +656,15 @@ object AnnOps {
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2))).toSeq
     var i = 0
     while (i < iters && cb.nonEmpty) {
-      val cbDf = cb.toDF("j", "s", "cs")
-      val means = collectCodebook(cbDf) match {
-        case Some((js, cs, n2)) =>
-          subs.withColumn("__best", codeArgmin(js, cs, n2))
-            .select(col("s"), col("__best.j").as("j"),
-              posexplode(col("xs")).as(Seq("pos", "v")))
-        case None => // oversized/ragged codebook: broadcast-join argmin
-          subs.join(broadcast(cbDf), Seq("s"))
-            .withColumn("d2",
-              vecDot(col("xs"), col("xs")) - lit(2) * vecDot(col("xs"), col("cs"))
-                + vecDot(col("cs"), col("cs")))
-            .groupBy(col("vec_id"), col("s"))
-            .agg(min_by(col("j"), struct(col("d2"), col("j"))).as("j"),
-              first(col("xs")).as("xs"))
-            .select(col("s"), col("j"), posexplode(col("xs")).as(Seq("pos", "v")))
-      }
-      val trained: Map[(Long, Int), Seq[Double]] = means
+      val trained: Map[(Long, Int), Seq[Double]] = withCode(subs, cb)
+        .select(col("s"), col("__code.j").as("j"),
+          posexplode(col("xs")).as(Seq("pos", "v")))
         .groupBy(col("s"), col("j"), col("pos")).agg(avg(col("v")).as("m"))
         .collect()
         .groupBy(r => (r.getLong(1), r.getInt(0)))
         .map { case (key, rows) =>
           key -> rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq
         }
-      // empty cells (no vectors assigned) keep their previous centroid
       cb = cb.map { case (j, si, prev) =>
         (j, si, trained.getOrElse((j, si), prev))
       }
@@ -746,9 +691,6 @@ object AnnOps {
     subs.count() // single fill: codebook training + encode + queries
     val cb = pqCodebooks(subs, k).cache()
     cb.count() // materialize: ADC references it twice per downstream use
-    // r17: the same encode [[pqEncode]] performs (argmin d2, ties to the
-    // smallest j) — the inline window duplicated it; the shared form is
-    // the narrow inlined-codebook projection, no Exchange
     val enc = pqEncode(subs.filter(col("vec_id") >= 5), cb)
       .select(col("vec_id"), col("s"), col("cs"))
     val q = subs.filter(col("vec_id") < 5)
@@ -799,11 +741,8 @@ object AnnOps {
     * every in-cell candidate. Returns `(q_id, vec_id, adc)` — rounded
     * 6-dp before any rank window, the a06 float convention.
     *
-    * r18 (r17 VERDICT Next #4/#5): ONE seed-panel collect feeds the
-    * centroids, the probe pick, the codebook grid AND the ADC LUT —
-    * r17's chain paid a collect in the assignment plus one in
-    * [[collectCodebook]]; the scoring join (codes ⋈ codebook ⋈ query-
-    * subvectors + per-row vecDot) collapses to one broadcast LUT lookup
+    * ONE seed-panel collect feeds the centroids, the probe pick, the
+    * codebook rows AND the ADC LUT; scoring is one broadcast LUT lookup
     * ([[adcScoreLut]]). The seeded queries (vec_id < 5) are a subset of
     * the seeds (vec_id < kCells ≥ 16), so no second panel read exists.
     */
@@ -822,10 +761,10 @@ object AnnOps {
       .filter(col("vec_id") >= 5)
       .select(col("q_id"), col("vec_id"))
     // the codebook convention is vec_id < 16 regardless of kCells
-    val (js, cs, n2) = seededGrid(seeds.filter(_._1 < 16).map(t => (t._1, t._2)))
-    val encJ = pqEncodeGrid(subvectors(e).filter(col("vec_id") >= 5), js, cs, n2)
+    val codes = seededCodes(seeds.filter(_._1 < 16).map(t => (t._1, t._2)))
+    val encJ = pqEncodeOf(subvectors(e).filter(col("vec_id") >= 5), codes)
       .select(col("vec_id"), col("s"), col("j"))
-    val lut = adcLutRows(qs.map(t => (t._1, t._2)), js, cs)
+    val lut = adcLutFromRows(qs.map(t => (t._1, t._2)), codes)
       .toDF("q_id", "s", "j", "term")
     adcScoreLut(cand, encJ, lut)
   }
@@ -853,153 +792,60 @@ object AnnOps {
     subs.filter(col("vec_id") < 16)
       .select(col("vec_id").as("j"), col("s"), col("xs").as("cs"))
 
-  /** Driver-side dot product with [[graft.functions.ExpressionHelpers.vecDot]]'s
-    * exact summation order — bit-identical, so literals precomputed here
-    * substitute for the Spark expression inside hash-gated plans.
+  /** Driver-side [[graft.functions.ExpressionHelpers.dot]] — vecDot's
+    * summation order, so literals precomputed here substitute for the
+    * Spark expression inside hash-gated plans.
     */
-  private def dotSeq(a: Seq[Double], b: Seq[Double]): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < a.length) { acc += a(i) * b(i); i += 1 }
-    acc
-  }
+  private def dotSeq(a: Seq[Double], b: Seq[Double]): Double =
+    graft.functions.ExpressionHelpers.dot(a.toArray, b.toArray)
 
-  /** Collected PQ codebook as an inlinable grid: code ids sorted asc,
-    * centroids and their squared norms indexed [code][subspace]. None
-    * when the grid is incomplete (a code missing some subspace) or too
-    * large to inline as one expression tree — the caller then takes the
-    * broadcast-join form. Bounds (r17 ADVICE doc alignment): the inline
-    * cap is 64 CODES — per row the argmin is one struct candidate per
-    * code, each with two vecDots, so 64 codes is where the codegen'd
-    * expression tree stays comfortably under the JVM method-size limit;
-    * this engine's 4-bit family (16 codes) always inlines, while a
-    * 65–256-code (7/8-bit) codebook takes the broadcast min_by fallback —
-    * value-identical, one map-side-combined shuffle instead of zero.
-    * Codebook size is a model constant, not a data size, so which path
-    * runs is fixed per deployment, not per corpus scale.
-    */
-  private def collectCodebook(cb: DataFrame)
-      : Option[(Array[Long], Array[Array[Seq[Double]]], Array[Array[Double]])] = {
-    val rows = cb.select(col("j").cast("long"), col("s").cast("int"), col("cs"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
-    if (rows.isEmpty) return None
-    val js = rows.map(_._1).distinct.sorted
-    val sMax = rows.map(_._2).max
-    if (js.length > 64 || sMax > 63 || rows.exists(_._2 < 0)) return None
-    val jIdx = js.zipWithIndex.toMap
-    val cs = Array.fill(js.length)(Array.fill[Seq[Double]](sMax + 1)(null))
-    rows.foreach { case (j, si, x) => cs(jIdx(j))(si) = x }
-    if (cs.exists(_.exists(_ == null))) return None // incomplete grid
-    Some((js, cs, cs.map(_.map(x => dotSeq(x, x)))))
-  }
+  /** A codebook frame `(j, s, cs)` collected as literal rows. */
+  private[operators] def collectCodes(cb: DataFrame): Seq[(Long, Int, Seq[Double])] =
+    cb.select(col("j").cast("long"), col("s").cast("int"), col("cs")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2))).toSeq
 
-  /** Per-row argmin over an INLINED codebook for a `(s, xs)` row: one
-    * candidate struct (d2, j, ji) per code — d2 in exactly the join
-    * form's float grouping ((xs·xs − 2·xs·cs) + cs·cs, the cs·cs term a
-    * driver-precomputed literal with [[dotSeq]]'s identical summation) —
-    * and `least` picks min (d2, j) under the same interpreted ordering
-    * the rank window used (nulls first, NaN last, ties to the smallest
-    * code id). `ji` rides along so the caller can decode `cs` from the
-    * same literal grid.
-    */
-  private def codeArgmin(js: Array[Long], cs: Array[Array[Seq[Double]]],
-      n2: Array[Array[Double]]): Column = {
-    val xsxs = vecDot(col("xs"), col("xs"))
-    val cands = js.indices.map { ji =>
-      struct(
-        (xsxs - lit(2) * vecDot(col("xs"),
-            element_at(typedLit(cs(ji).toSeq), col("s") + 1))
-          + element_at(typedLit(n2(ji).toSeq), col("s") + 1)).as("d2"),
-        lit(js(ji)).as("j"),
-        lit(ji).as("ji"))
-    }
-    if (cands.size == 1) cands.head else least(cands: _*)
-  }
-
-  /** PQ-encode each (vec_id, s, xs) row against codebook `cb`: argmin L2,
-    * ties to the smallest code j. Keeps BOTH the code id `j` (what an
-    * at-rest index stores — the 64×-compression story) and the decoded
-    * centroid `cs` (what ADC consumes directly).
-    *
-    * r17 optimization (guide §2.4): a codebook is a model CONSTANT
-    * (16–256 codes × 8 subspaces), so the encode is logically a map —
-    * the codebook is collected and inlined, and the whole encode becomes
-    * one narrow codegen projection with ZERO shuffle. The pre-r17 form
-    * (broadcast join × |codes|, then a corpus-wide rank window — a full
-    * Exchange+sort of corpus × codes rows) survives as the fallback for
-    * oversized/incomplete codebooks, upgraded from the window to a
-    * map-side-combining min_by (16× fewer shuffled rows, no sort).
-    * Value-identical either way: same d2 floats, same (d2, j) ordering.
+  /** PQ-encode `(vec_id, s, xs)` rows against codebook `cb` `(j, s, cs)`
+    * into `(vec_id, s, j, cs)`. A row's candidates are the codes at its
+    * `s`; the least `d2 = (xs·xs − 2·xs·cs) + cs·cs` (that float grouping,
+    * vecDot's summation order) wins, ties to the smallest j, under Spark's
+    * double ordering: a null d2 first, NaN last, -0.0 equal to 0.0. A row
+    * whose `s` has no codes is dropped, so an empty codebook gives no
+    * rows. `cb` is collected eagerly, when the frame is built, so it must
+    * be cheap (materialized, a pruned scan, or local). The plan is one
+    * codegen projection ([[graft.functions.PqCode]]), no exchange.
     */
   private[operators] def pqEncode(subs: DataFrame, cb: DataFrame): DataFrame =
-    collectCodebook(cb) match {
-      case Some((js, cs, n2)) => pqEncodeGrid(subs, js, cs, n2)
-      case None =>
-        subs.join(broadcast(cb), Seq("s"))
-          .withColumn("d2",
-            vecDot(col("xs"), col("xs")) - lit(2) * vecDot(col("xs"), col("cs"))
-              + vecDot(col("cs"), col("cs")))
-          .groupBy(col("vec_id"), col("s"))
-          .agg(min_by(struct(col("j"), col("cs")),
-            struct(col("d2"), col("j"))).as("__b"))
-          .select(col("vec_id"), col("s"), col("__b.j").as("j"),
-            col("__b.cs").as("cs"))
-    }
+    pqEncodeOf(subs, collectCodes(cb))
 
-  /** The inline-encode body from a PRE-COLLECTED grid (r18): callers that
-    * already hold the grid (the seeded gates derive it from one seed-
-    * panel collect — [[seededGrid]]) skip [[collectCodebook]]'s driver
-    * round-trip entirely.
-    */
-  private def pqEncodeGrid(subs: DataFrame, js: Array[Long],
-      cs: Array[Array[Seq[Double]]], n2: Array[Array[Double]]): DataFrame = {
-    val csLit = typedLit(cs.map(_.toSeq).toSeq) // [code][subspace] -> cs
-    subs
-      // behavior parity with the join fallback on RAGGED input (r17
-      // ADVICE): a subs row whose subspace id exceeds the collected
-      // grid was silently DROPPED by the inner join; without this
-      // filter the inline element_at would null/throw (ANSI) on it.
-      // Unreachable under the fixed 8-subspace contract — the
-      // predicate codegens to two comparisons per row.
-      .filter(col("s") >= 0 && col("s") < lit(cs.head.length))
-      .withColumn("__best", codeArgmin(js, cs, n2))
-      .select(col("vec_id"), col("s"), col("__best.j").as("j"),
-        element_at(element_at(csLit, col("__best.ji") + 1),
-          col("s") + 1).as("cs"))
-  }
+  /** [[pqEncode]] from codebook rows the caller already holds. */
+  private def pqEncodeOf(subs: DataFrame,
+      codes: Seq[(Long, Int, Seq[Double])]): DataFrame =
+    withCode(subs, codes).select(col("vec_id"), col("s"),
+      col("__code.j").as("j"), col("__code.cs").as("cs"))
 
-  /** The seeded codebook as [[collectCodebook]]'s grid shape, SLICED
-    * driver-side from collected seed embeddings — the subvector slice
-    * `emb.slice(s·8, s·8+8)` is exactly what `slice(emb, s*8+1, 8)`
-    * yields, so the grid is bit-identical to collecting
-    * [[seededCodebook]] while costing zero extra jobs.
-    */
-  private def seededGrid(seeds: Seq[(Long, Seq[Double])])
-      : (Array[Long], Array[Array[Seq[Double]]], Array[Array[Double]]) = {
-    val byId = seeds.toMap
-    val js = seeds.map(_._1).distinct.sorted.toArray
-    val cs = js.map(j => Array.tabulate(8)(si => byId(j).slice(si * 8, si * 8 + 8)))
-    (js, cs, cs.map(_.map(x => dotSeq(x, x))))
-  }
+  /** `subs` rows whose `s` has codes, plus the winning code as `__code`:
+    * the one lookup behind [[pqEncode]] and [[pqCodebooks]]. */
+  private def withCode(subs: DataFrame,
+      codes: Seq[(Long, Int, Seq[Double])]): DataFrame =
+    subs.filter(col("s").isin(codes.map(_._2).distinct: _*))
+      .withColumn("__code", pqCode(col("xs"), col("s"), codes))
 
-  /** Driver-side ADC lookup table (r17 VERDICT Next #4 — the classic
-    * |Q|×8×|codes| LUT): term(q, s, j) = qsubs(q,s)·cs(j,s) with
-    * [[dotSeq]]'s exact vecDot summation order, so every term is
-    * bit-identical to the join form's `vecDot(qs, cs)`. Scoring then
-    * needs ONE broadcast join of |Q|·8·|codes| literal rows instead of
-    * codebook ⋈ query-subvector joins plus a per-row dot product.
-    */
-  private def adcLutRows(qs: Seq[(Long, Seq[Double])], js: Array[Long],
-      cs: Array[Array[Seq[Double]]]): Seq[(Long, Int, Long, Double)] =
+  /** [[seededCodebook]]'s rows, sliced driver-side from collected seed
+    * embeddings (`emb.slice(s·8, s·8+8)` ≡ `slice(emb, s*8+1, 8)`). */
+  private def seededCodes(seeds: Seq[(Long, Seq[Double])])
+      : Seq[(Long, Int, Seq[Double])] =
     for {
-      (qid, qemb) <- qs
+      (j, emb) <- seeds.sortBy(_._1)
       si <- 0 until 8
-      ji <- js.indices.toSeq
-    } yield (qid, si, js(ji), dotSeq(qemb.slice(si * 8, si * 8 + 8), cs(ji)(si)))
+    } yield (j, si, emb.slice(si * 8, si * 8 + 8))
 
-  /** [[adcLutRows]] from raw (j, s, cs) codebook rows — the
-    * [[IndexStore]] query path's shape, where the codebook is a parquet
-    * table (possibly trained, any id set) rather than a seeded grid.
+  /** Driver-side ADC lookup table (the classic |Q|×8×|codes| LUT):
+    * term(q, s, j) = qsubs(q,s)·cs(j,s) with [[dotSeq]]'s exact vecDot
+    * summation order, so every term is bit-identical to the join form's
+    * `vecDot(qs, cs)`. Scoring then needs ONE broadcast join of literal
+    * rows instead of codebook ⋈ query-subvector joins plus a per-row dot
+    * product. Codebook rows come as `(j, s, cs)`: seeded or a persisted
+    * (possibly trained) [[IndexStore]] table.
     */
   private[operators] def adcLutFromRows(qs: Seq[(Long, Seq[Double])],
       cb: Seq[(Long, Int, Seq[Double])]): Seq[(Long, Int, Long, Double)] =
@@ -1009,8 +855,8 @@ object AnnOps {
     } yield (qid, si, j, dotSeq(qemb.slice(si * 8, si * 8 + 8), csv))
 
   /** ADC over candidates via the literal LUT: Σ_s term(q, s, code) per
-    * (q_id, vec_id), ROUND 6 before any rank window — the [[adcScore]]
-    * contract with the scoring join collapsed to one broadcast lookup.
+    * (q_id, vec_id), ROUND 6 (the a06 float convention) before any rank
+    * window, with the scoring join collapsed to one broadcast lookup.
     * `encJ` carries (vec_id, s, j); the join multiset is identical to
     * the cb⋈qsubs form (exactly one LUT row per (q_id, s, j)), so the
     * 8-term sums see the same values in the same partition order.
@@ -1026,17 +872,6 @@ object AnnOps {
   private[operators] def querySubs(subs: DataFrame): DataFrame =
     subs.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("s"), col("xs").as("qs"))
-
-  /** ADC over candidates: Σ_s qs·cs per (q_id, vec_id), ROUND 6 (the a06
-    * float convention) before any rank window.
-    */
-  private[operators] def adcScore(cand: DataFrame, enc: DataFrame,
-                                  qsubs: DataFrame): DataFrame =
-    cand.join(enc, Seq("vec_id"))
-      .join(broadcast(qsubs), Seq("q_id", "s"))
-      .withColumn("term", vecDot(col("qs"), col("cs")))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(round(sum(col("term")), 6).as("adc"))
 
   /** IVF-PQ with the standard REFINE step — the production retrieval
     * quality path (r9 VERDICT item 4): ADC ranks the probed candidates,
@@ -1171,59 +1006,25 @@ object AnnOps {
   val all: Seq[QueryDef] = Seq(a01, a02, a03, a04, a05, a06, a07)
 }
 
-/** The ONE nearest-centroid argmax for the whole centroid family —
-  * AnnOps' IVF candidate generation (a03/a06/a07) AND DedupOps' SemDeDup
-  * / diverse-sample assignment (d11/d14): cosine against a broadcast
-  * centroid table (`c_id, c_emb, c_norm`), ties to the smallest c_id.
-  * All five gates' oracles assume this single convention, so a change to
-  * the tie-break / norm handling made here reaches every consumer by
-  * construction — the r10 review found the definition duplicated across
-  * the two modules, one as max_by, one as a window, silently free to
-  * drift.
-  *
-  * `carry` names input columns to keep on the assigned rows (the dedup
-  * consumers need emb+norm for their within-cluster pairwise pass). The
-  * aggregate form (max_by over a carrying struct) gets map-side partial
-  * aggregation — one shuffle of pre-reduced groups instead of the window
-  * form's full sort.
+/** The ONE nearest-centroid assignment of the centroid family: IVF
+  * candidates (a03/a06/a07), [[AnnOps.kmeansCentroids]], the
+  * [[IndexStore]] IVF-PQ builds and DedupOps' d11/d14. Each row
+  * `(vec_id, emb, norm, ...)` gets the c_id with the greatest
+  * `csim = vec_dot(emb, c_emb) / (norm * c_norm)`, ties to the smallest
+  * c_id, under Spark's double ordering: a null csim lowest, NaN highest,
+  * -0.0 equal to 0.0 (so a null `emb` gets the smallest c_id). An empty
+  * model gives no rows. Output `(vec_id, c_id, carry...)`; the plan is
+  * one codegen projection ([[graft.functions.NearestCentroid]]), no
+  * exchange, at any k.
   */
 private[operators] object CentroidAssign {
-  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
-  import graft.functions.GraftFunctions.vecDot
+  import graft.functions.GraftFunctions.nearestCentroid
 
-  /** Inline cap = 128 CENTROIDS (r17 ADVICE doc alignment): the inlined
-    * form costs k vecDots per row in one codegen projection, and past
-    * ~128 candidates the expression tree pushes the JVM method-size
-    * limit; the aggregate form's broadcast shape is also simply right
-    * once the quantizer stops being a handful of rows. The bound is a
-    * codegen constant, independent of corpus scale — this engine's gate
-    * quantizers (k = 16) and production coarse quantizers up to 128
-    * cells assign with ZERO shuffle; larger ones take [[nearestAgg]]
-    * (value-identical, one map-side-combined shuffle).
-    */
-  private val inlineK = 128
-
-  /** Nearest centroid per row (r17 optimization, guide §2.4 "remove
-    * shuffles outright"): a coarse quantizer is k << corpus by
-    * definition, so the centroid table is COLLECTED (k rows) and inlined
-    * as k candidate structs per row — `greatest` over
-    * struct(csim, -c_id, c_id) picks max csim with ties to the smallest
-    * c_id under exactly the interpreted struct ordering max_by used
-    * (same TypeUtils ordering: NaN greatest, null-field smallest), so the
-    * assignment is VALUE-IDENTICAL to the aggregate form while the plan
-    * is one narrow whole-stage-codegen projection: the corpus-bytes
-    * Exchange the groupBy(vec_id) paid (every emb under `carry` rode the
-    * shuffle — d11's assignment shuffled the corpus embeddings) is gone.
-    * The pre-r17 aggregate form survives as [[nearestAgg]] for quantizers
-    * past [[inlineK]].
-    *
-    * API contract (r17 ADVICE): `cents` is COLLECTED EAGERLY at
-    * DataFrame-construction time — constructing the returned frame
-    * triggers a Spark job over `cents`, so the centroid frame must be
-    * cheap: materialized (cache+count), a pushdown-prunable scan, or a
-    * local relation. Passing an uncached trained-centroid frame replays
-    * its full lineage here and again at any other reference.
+  /** [[nearestOf]] against `cents` `(c_id, c_emb, c_norm)`, which is
+    * COLLECTED EAGERLY when the frame is built: it must be cheap
+    * (materialized, a pruned scan, or local), or its lineage replays here.
     */
   def nearest(e: DataFrame, cents: DataFrame,
               carry: Seq[String] = Nil): DataFrame = {
@@ -1233,46 +1034,11 @@ private[operators] object CentroidAssign {
     nearestOf(e, rows, carry)
   }
 
-  /** [[nearest]] from PRE-COLLECTED centroid rows (r18, r17 VERDICT Next
-    * #5): the seeded gates derive every model table from ONE collected
-    * seed panel, so the assignment must not pay a second driver
-    * round-trip to re-collect the same k rows. Same inline construction
-    * and [[inlineK]]/empty fallbacks as [[nearest]].
-    */
+  /** [[nearest]] from centroid rows the caller already holds. */
   private[operators] def nearestOf(e: DataFrame,
       rows: Seq[(Long, Seq[Double], Double)],
-      carry: Seq[String] = Nil): DataFrame = {
-    if (rows.isEmpty || rows.length > inlineK) {
-      val s = e.sparkSession
-      import s.implicits._
-      nearestAgg(e, rows.toDF("c_id", "c_emb", "c_norm"), carry)
-    } else {
-      val cands: Seq[Column] = rows.map { case (cid, cemb, cnorm) =>
-        struct(
-          (vecDot(col("emb"), typedLit(cemb))
-            / (col("norm") * lit(cnorm))).as("csim"),
-          lit(-cid).as("neg"),
-          lit(cid).as("c_id"))
-      }
-      val best = if (cands.size == 1) cands.head else greatest(cands: _*)
-      e.select(col("vec_id") +: best.getField("c_id").as("c_id") +:
-        carry.map(col): _*)
-    }
-  }
-
-  /** The pre-r17 aggregate form: cross join against the broadcast
-    * centroid table, max_by with map-side partial aggregation. One
-    * shuffle of one row per vector (plus every carried column).
-    */
-  private def nearestAgg(e: DataFrame, cents: DataFrame,
-              carry: Seq[String]): DataFrame = {
-    val kept = "c_id" +: carry
-    e.crossJoin(broadcast(cents))
-      .withColumn("__csim",
-        vecDot(col("emb"), col("c_emb")) / (col("norm") * col("c_norm")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(kept.map(col): _*),
-        struct(col("__csim"), -col("c_id"))).as("__best"))
-      .select(col("vec_id") +: kept.map(c => col(s"__best.$c").as(c)): _*)
-  }
+      carry: Seq[String] = Nil): DataFrame =
+    e.filter(lit(rows.nonEmpty)).select(col("vec_id") +:
+      nearestCentroid(col("emb"), col("norm"), rows).as("c_id") +:
+      carry.map(col): _*)
 }

@@ -977,9 +977,9 @@ object DedupOps {
     * the corpus's 0.35 cosine near-dup threshold (d04). In production k
     * grows ~√N (spark.ml KMeans — see [[graft.operators.AnnOps
     * .ivfKnnTrained]] for the trained-quantizer path), keeping expected
-    * cluster sizes bounded, and the centroid side stays broadcast by
-    * definition (k ≪ corpus). Assignment is a broadcast crossJoin + one
-    * per-vec argmax window; the pairwise stage shuffles on `c_id` only.
+    * cluster sizes bounded, and the centroids stay a small literal by
+    * definition (k ≪ corpus): assignment is one narrow projection
+    * ([[CentroidAssign]]); the pairwise stage shuffles on `c_id` only.
     * Cosine values are bit-identical across engines (sequential-fold
     * `vec_dot` ≡ DuckDB `list_dot_product`, the d04 argument), so the
     * ≥-threshold boundary is exact, and the output carries no floats.

@@ -549,9 +549,7 @@ object IndexStore {
     // subspaces, never the corpus.
     val scored = qPanel match {
       case Some(qRows) =>
-        val cbRows = tbl(s, m, "codebooks")
-          .select(col("j").cast("long"), col("s").cast("int"), col("cs")).collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2))).toSeq
+        val cbRows = AnnOps.collectCodes(tbl(s, m, "codebooks"))
         import s.implicits._
         val lut = AnnOps.adcLutFromRows(qRows, cbRows)
           .toDF("q_id", "s", "j", "term")

@@ -247,6 +247,65 @@ class ExpressionsSpec extends AnyFunSuite with graft.SparkTestSession {
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
     assert(plan.contains("WholeStageCodegen") || plan.contains("*("), plan)
+    // the model lookups: literal models, range-derived (non-foldable) rows
+    val lookups = spark.range(4)
+      .select(array(col("id").cast("double"), lit(1.0)).as("v"))
+      .select(
+        GraftFunctions.nearestCentroid(col("v"),
+          sqrt(GraftFunctions.vecDot(col("v"), col("v"))),
+          Seq((1L, Seq(1.0, 0.0), 1.0), (2L, Seq(0.0, 1.0), 1.0))).as("c"),
+        GraftFunctions.pqCode(col("v"), lit(0),
+          Seq((8L, 0, Seq(0.0, 1.0)), (9L, 0, Seq(3.0, 1.0)))).getField("j").as("j"))
+    assert(lookups.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((2L, 8L), (1L, 8L), (1L, 9L), (1L, 9L)))
+    val lplan = lookups.queryExecution.executedPlan.toString
+    assert(!lplan.contains("ScalaUDF") && !lplan.contains("Exchange"), lplan)
+    assert(lplan.contains("WholeStageCodegen") || lplan.contains("*("), lplan)
+  }
+
+  test("nearest_centroid / pq_code: codegen and interpreted evaluation agree on edge rows") {
+    import org.apache.spark.sql.types._
+    val nan = Double.NaN
+    // null, null-element, NaN, tie and zero-score rows; a NaN centroid, a
+    // duplicate pair, a negative norm (scores -0.0); a ragged codebook
+    // (code 5 lacks s = 1) with a NaN code and a duplicate pair
+    val rows = Seq[Row](Row(0L, 0, Seq(1.0, 0.0)), Row(1L, 1, null),
+      Row(2L, 0, Seq(1.0, null)), Row(3L, 1, Seq(nan, 0.0)),
+      Row(4L, 0, Seq(0.0, 0.0)), Row(5L, 1, Seq(-2.0, 0.5)),
+      Row(6L, 0, Seq(0.5, 0.5)), Row(7L, 1, Seq(0.0, 1.0)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("id", LongType), StructField("s", IntegerType),
+        StructField("v", ArrayType(DoubleType)))))
+    val cents = Seq((3L, Seq(0.0, 1.0), 1.0), (1L, Seq(0.0, 1.0), 1.0),
+      (7L, Seq(1.0, 0.0), -1.0), (5L, Seq(nan, 1.0), 1.0), (2L, Seq(1.0, 1.0), 2.0))
+    val codes = Seq((5L, 0, Seq(1.0, 0.0)), (4L, 0, Seq(1.0, 0.0)),
+      (6L, 0, Seq(nan, nan)), (6L, 1, Seq(nan, nan)), (4L, 1, Seq(0.0, 1.0)),
+      (8L, 1, Seq(-2.0, 0.5)))
+    def run(factoryMode: String, wholeStage: String) = {
+      spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try df.select(col("id"),
+          GraftFunctions.nearestCentroid(col("v"),
+            sqrt(GraftFunctions.vecDot(col("v"), col("v"))), cents).as("c"),
+          GraftFunctions.pqCode(col("v"), col("s"), codes).as("p"))
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          r.getStruct(2).getLong(0), r.getStruct(2).getSeq[Double](1).toList))
+        .sortBy(_._1).toSeq
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+    // the zero row (id 4) raises under ANSI, like Divide; compare without
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val compiled = run("CODEGEN_ONLY", "true")
+      assert(compiled == run("NO_CODEGEN", "false"))
+      val (x, y) = (List(1.0, 0.0), List(0.0, 1.0))
+      assert(compiled == Seq((0L, 5L, 4L, x), (1L, 1L, 4L, y), (2L, 1L, 4L, x),
+        (3L, 1L, 4L, y), (4L, 1L, 4L, x), (5L, 5L, 8L, List(-2.0, 0.5)),
+        (6L, 5L, 4L, x), (7L, 5L, 4L, y)), compiled)
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 
   test("shingle_arr: bit-exact differential vs the HOF formula, edges + random") {
