@@ -73,7 +73,7 @@ object CyberGraphQueries {
       .orderBy(col("nums").desc, col("attack_vector"))
 
   /** Q6 (relational part): 2-hop neighbourhood of a vertex over the union
-    * of all edge tables; the centrality itself is GraphAlgs.articleRank.
+    * of all edge tables; the centrality itself is [[GraphAlgs.articleRankDF]].
     */
   def q6TwoHopNeighbourhood(allEdges: DataFrame, start: String): DataFrame = {
     val undirected = allEdges.select(col("src"), col("dst"))

@@ -24,10 +24,15 @@ object GraphAlgs {
     * for g05+g06's shared Louvain at sf0.1 — none of it data); the
     * driver replay is milliseconds and produces IDENTICAL labels (see
     * [[louvainLocal]] / the union-find in [[connectedComponents]]).
+    * The hybrids: Louvain ([[louvainDF]], [[louvainUnd]]), connected
+    * components ([[connectedComponents]], [[connectedComponentsUnd]]),
+    * [[GraphQueries.triangleStats]] and ArticleRank ([[articleRankDF]],
+    * whose ranks agree with its distributed loop to float-summation
+    * noise rather than bit for bit).
     * 200k edge rows ≈ a few MB collected — far below driver pressure —
     * while any corpus-proportional graph sails past it onto the
     * distributed path, exactly the [[graft.er.EntityResolution]]
-    * driverCcLimit hybrid. Tests pin local/distributed label identity by
+    * driverCcLimit hybrid. Tests pin local/distributed agreement by
     * forcing the limit to 0.
     */
   val DefaultDriverGraphLimit: Int = 200000
@@ -76,12 +81,13 @@ object GraphAlgs {
     *
     *   AR(v) <- (1 - d) + d * sum_{u->v} AR(u) / (outDeg(u) + avgOutDeg)
     *
-    * Synchronous fixed-iteration loop in DataFrames: the static
-    * edge+degree table is cached once, each superstep is one shuffle
-    * keyed by dst plus one vertex join, and per-iteration persist/count/
-    * unpersist keeps the lineage depth constant (chaining GraphX graph
-    * views re-ships every prior superstep's vertices — quadratic; this
-    * formulation is the one that scales).
+    * Runs [[articleRankDF]] on the graph's edges: driver-local at or under
+    * [[DefaultDriverGraphLimit]] edges, else the synchronous
+    * fixed-iteration DataFrame loop, where the static edge+degree table
+    * is cached once, each superstep is one shuffle keyed by dst plus one
+    * vertex join, and a per-superstep localCheckpoint keeps the lineage
+    * depth constant (chaining GraphX graph views re-ships every prior
+    * superstep's vertices — quadratic; that loop is the one that scales).
     */
   def articleRank(g: Graph[Unit, Unit], iters: Int = 20,
                   damping: Double = 0.85): DataFrame = {
@@ -143,17 +149,34 @@ object GraphAlgs {
   }
 
   /** DataFrame-native ArticleRank over an (src, dst) edge table.
-    * `tol` > 0 opts into an L1-delta early exit; the check costs one
-    * extra vertex join + scan per superstep, and with damping 0.85 the
-    * delta shrinks only ~0.85^k per superstep — so it pays off ONLY when
-    * `iters` is large relative to the graph's mixing time (measured: at
-    * iters=20 on the gate graph it never fires and adds ~25%). Default
-    * 0.0 = fixed supersteps, no check, bit-reproducible.
+    *
+    * Path choice: one `limit(driverLimit + 1)` collect probes the edge
+    * rows. At or under `driverLimit` (default [[DefaultDriverGraphLimit]])
+    * with no null id, the supersteps run on the driver over one
+    * (dst, src)-sorted CSR ([[articleRankLocal]]) — the probe is the only
+    * Spark job. Otherwise (or with `driverLimit = 0`, which tests use to
+    * pin the two paths together) the distributed loop below runs: one
+    * edge⋈ranks shuffle, one dst aggregate and one localCheckpoint per
+    * superstep — the scale path. Both count edge multiplicities and
+    * self-loops in out-degree, avgDeg = E / V and messages.
+    *
+    * `tol` > 0 opts into an L1-delta early exit; on the distributed path
+    * the check costs one extra vertex join + scan per superstep, and with
+    * damping 0.85 the delta shrinks only ~0.85^k per superstep — so it
+    * pays off ONLY when `iters` is large relative to the graph's mixing
+    * time (measured: at iters=20 on the gate graph it never fires and adds
+    * ~25%). Default 0.0 = fixed supersteps, no check.
     */
   def articleRankDF(edges: DataFrame, iters: Int = 20,
                     damping: Double = 0.85, tol: Double = 0.0,
-                    checkpointStride: Int = 1): DataFrame = {
-    import org.apache.spark.sql.functions._
+                    driverLimit: Int = DefaultDriverGraphLimit): DataFrame = {
+    if (driverLimit > 0) {
+      val probe = edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .limit(driverLimit + 1).collect()
+      if (probe.length <= driverLimit && !probe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        return articleRankLocal(probe.map(_.getLong(0)), probe.map(_.getLong(1)),
+          iters, damping, tol)
+    }
     val e = edges.select(col("src").cast("long"), col("dst").cast("long")).cache()
     val vertices = e.select(col("src").as("node_id"))
       .union(e.select(col("dst").as("node_id"))).distinct().cache()
@@ -177,12 +200,6 @@ object GraphAlgs {
     // executor churn, swap for reliable checkpoint(dir) — same shape.)
     var ranks = vertices.select(col("node_id"), lit(1.0).as("rank"))
       .localCheckpoint(true)
-    // the last MATERIALIZED checkpoint — tracked separately from the
-    // running plan because with checkpointStride > 1 `ranks` is a lazy
-    // intermediate on off-stride steps, and unpersisting THAT was a
-    // no-op that leaked one checkpoint's blocks per stride window
-    // (r10 review finding)
-    var lastCk = ranks
     var i = 0
     while (i < iters) {
       val msgs = edgesWithDeg
@@ -191,64 +208,139 @@ object GraphAlgs {
         .groupBy(col("dst")).agg(sum(col("contrib")).as("msg"))
       val newRank =
         lit(1.0 - damping) + lit(damping) * coalesce(col("msg"), lit(0.0))
-      val base = vertices
+      // without tol the checkpoint is eager. With tol, the opt-in
+      // convergence check is an L1-delta against the pre-checkpoint
+      // ranks, computed as a SEPARATE query after the checkpoint. Two
+      // things hide here: (a) the delta scan is the lazy checkpoint's
+      // first action, so it materializes in the same job (eager would pay
+      // a separate job per superstep); (b) the checkpointed plan must
+      // reference `ranks` exactly ONCE (via msgs) — joining prev-rank into
+      // the checkpointed plan references ranks twice, and
+      // localCheckpoint's stats rewrite then SQUARES the estimated
+      // sizeInBytes every superstep: double-exponential BigInt growth
+      // that freezes Catalyst's stats visitor after ~30 supersteps.
+      val next = vertices
         .join(small(msgs), vertices("node_id") === msgs("dst"), "left")
-      if (tol > 0) {
-        // opt-in convergence: L1-delta against the pre-checkpoint ranks,
-        // computed as a SEPARATE query after the checkpoint. Two things
-        // hide here: (a) the delta scan is the checkpoint's first action,
-        // so the lazy checkpoint materializes in the same job (eager
-        // would pay a separate job per superstep); (b) the checkpointed
-        // plan must reference `ranks` exactly ONCE (via msgs) — the
-        // previous form joined prev-rank into the checkpointed plan,
-        // referencing ranks twice, and localCheckpoint's stats rewrite
-        // then SQUARES the estimated sizeInBytes every superstep:
-        // double-exponential BigInt growth that freezes Catalyst's stats
-        // visitor after ~30 supersteps.
-        val next = base.select(col("node_id"), newRank.as("rank"))
-          .localCheckpoint(false)
-        val delta = next
-          .join(small(ranks.select(col("node_id").as("pid"), col("rank").as("prev"))),
-            col("node_id") === col("pid"))
-          .agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0)
-        lastCk.unpersist(blocking = false)
-        ranks = next
-        lastCk = next
-        i += 1
-        if (delta < tol) i = iters
-      } else {
-        // checkpointStride > 1 defers materialization so several
-        // supersteps run as one job — measured SLOWER here (each deferred
-        // superstep nests another broadcast-collect barrier inside the
-        // next plan, outweighing the saved job dispatches), so the
-        // default is 1; the knob stays for cluster-mode experiments where
-        // job scheduling dominates.
-        val nextLazy = base.select(col("node_id"), newRank.as("rank"))
-        i += 1
-        if (i % checkpointStride == 0 || i == iters) {
-          val next = nextLazy.localCheckpoint(true)
-          lastCk.unpersist(blocking = false)
-          ranks = next
-          lastCk = next
-        } else {
-          ranks = nextLazy
-        }
-      }
+        .select(col("node_id"), newRank.as("rank"))
+        .localCheckpoint(tol <= 0)
+      val converged = tol > 0 && next
+        .join(small(ranks.select(col("node_id").as("pid"), col("rank").as("prev"))),
+          col("node_id") === col("pid"))
+        .agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0) < tol
+      ranks.unpersist(blocking = false)
+      ranks = next
+      i = if (converged) iters else i + 1
     }
-    // the loop always exits on a materialized checkpoint (i == iters
-    // forces one), whose blocks are lineage-independent of these caches —
-    // release them so repeated calls don't accumulate edge-sized frames
-    // in executor storage for the session lifetime (r10 review finding)
+    // the loop exits on a materialized checkpoint, whose blocks are
+    // lineage-independent of these caches — release them so repeated
+    // calls don't accumulate edge-sized frames in executor storage for
+    // the session lifetime
     Seq(e, vertices, edgesWithDeg).foreach(_.unpersist(blocking = false))
     ranks.select(col("node_id"), col("rank"))
   }
 
+  /** Driver-local ArticleRank over collected edge endpoints — the
+    * under-limit path of [[articleRankDF]], with its semantics: vertices
+    * are the distinct endpoints, multiplicities and self-loops count in
+    * out-degree, in avgDeg = E / V and in messages. The edges become one
+    * (dst, src)-sorted CSR over dense sorted-id indices, and the
+    * supersteps are [[articleRankPull]]'s own recurrence
+    * ([[articleRankSteps]]) over that single slice, so two runs are
+    * bit-identical and differ from the distributed loop only in float
+    * summation order.
+    */
+  private def articleRankLocal(src: Array[Long], dst: Array[Long], iters: Int,
+                               damping: Double, tol: Double): DataFrame = {
+    val spark = SparkSession.active
+    import spark.implicits._
+    val ids = (src ++ dst).distinct.sorted
+    val nV = ids.length
+    if (nV == 0) return Seq.empty[(Long, Double)].toDF("node_id", "rank")
+    // (dst index << 32 | src index) sorts as (dst, src): indices are < 2^31
+    val keys = Array.tabulate(src.length) { j =>
+      (java.util.Arrays.binarySearch(ids, dst(j)).toLong << 32) |
+        java.util.Arrays.binarySearch(ids, src(j)).toLong
+    }
+    java.util.Arrays.sort(keys)
+    val dArr = keys.map(k => (k >>> 32).toInt)
+    val sArr = keys.map(_.toInt)
+    val outDeg = new Array[Int](nV)
+    sArr.foreach(s => outDeg(s) += 1)
+    val avgDeg = keys.length.toDouble / nV
+    val rank = articleRankSteps(outDeg.map(_.toDouble + avgDeg), iters, damping, tol) {
+      contrib => Array(dstRunSums(dArr, sArr, contrib))
+    }
+    ids.indices.map(j => (ids(j), rank(j))).toDF("node_id", "rank")
+  }
+
+  /** Per-dst message sums over one (dst, src)-sorted CSR slice: each dst
+    * run sums `contrib(src)` in src order into one (dst, msg) pair. The
+    * sorted runs fix the summation order, so a slice's sums are
+    * bit-reproducible.
+    */
+  private def dstRunSums(dArr: Array[Int], sArr: Array[Int],
+                         contrib: Array[Double]): (Array[Int], Array[Double]) = {
+    val outD = Array.newBuilder[Int]
+    val outM = Array.newBuilder[Double]
+    var j = 0
+    while (j < dArr.length) {
+      val d = dArr(j)
+      var s = 0.0
+      while (j < dArr.length && dArr(j) == d) { s += contrib(sArr(j)); j += 1 }
+      outD += d
+      outM += s
+    }
+    (outD.result(), outM.result())
+  }
+
+  /** The ArticleRank superstep loop over dense vertex indices, shared by
+    * [[articleRankPull]] and [[articleRankLocal]]: per superstep the
+    * driver forms contrib = rank / denom, `runSums` turns it into
+    * [[dstRunSums]] slices (on executors or on the driver), and
+    *
+    *   rank(v) <- (1 - d) + d * msg(v)
+    *
+    * with `1 - d` for vertices no slice names (no in-edges). `tol > 0`
+    * stops after the first superstep whose L1 delta is under `tol`, as
+    * the distributed loop of [[articleRankDF]] does.
+    */
+  private def articleRankSteps(denom: Array[Double], iters: Int, damping: Double,
+                               tol: Double)(
+      runSums: Array[Double] => Array[(Array[Int], Array[Double])]): Array[Double] = {
+    val nV = denom.length
+    var rank = Array.fill(nV)(1.0)
+    var i = 0
+    while (i < iters) {
+      val contrib = new Array[Double](nV)
+      var c = 0
+      while (c < nV) { contrib(c) = rank(c) / denom(c); c += 1 }
+      val next = new Array[Double](nV)
+      java.util.Arrays.fill(next, 1.0 - damping)
+      runSums(contrib).foreach { case (dArr, mArr) =>
+        var j = 0
+        while (j < dArr.length) {
+          next(dArr(j)) = (1.0 - damping) + damping * mArr(j)
+          j += 1
+        }
+      }
+      val converged = tol > 0 && {
+        var delta = 0.0
+        c = 0
+        while (c < nV) { delta += math.abs(next(c) - rank(c)); c += 1 }
+        delta < tol
+      }
+      rank = next
+      i = if (converged) iters else i + 1
+    }
+    rank
+  }
+
   /** ArticleRank on the GraphX runtime — the cheap path for many
-    * supersteps. [[articleRankDF]] pays one DataFrame job dispatch plus
-    * an eager localCheckpoint per superstep (~constant seconds each,
-    * regardless of data size — it dominated the r2 bench at 37 % of
-    * suite time); here the 20 supersteps run executor-side over RDDs
-    * that GraphX keeps co-partitioned via its routing tables, the same
+    * supersteps. Above its driver limit, [[articleRankDF]] pays one
+    * DataFrame job dispatch plus an eager localCheckpoint per superstep
+    * (~constant seconds each, regardless of data size); here the 20
+    * supersteps run executor-side over RDDs that GraphX keeps
+    * co-partitioned via its routing tables, the same
     * loop shape as GraphX's own staticPageRank (aggregateMessages +
     * outerJoinVertices, materialize then unpersist the parent). Both
     * implementations compute the identical recurrence
@@ -305,8 +397,9 @@ object GraphAlgs {
     * same guard the DF path's broadcast uses).
     *
     * The per-superstep shuffle is the scale bottleneck of both other
-    * formulations: [[articleRankDF]] shuffles E message rows per
-    * superstep, [[articleRankGraphX]] ships a replicated vertex view.
+    * distributed formulations: [[articleRankDF]]'s loop (above its
+    * driver limit) shuffles E message rows per superstep,
+    * [[articleRankGraphX]] ships a replicated vertex view.
     * Here the EDGES shuffle exactly ONCE — DataFrame `repartition(dst)` +
     * `sortWithinPartitions(dst, src)`, which stays in Tungsten — into
     * cached per-partition CSR-style int arrays. Every superstep is
@@ -320,7 +413,7 @@ object GraphAlgs {
     * Determinism: the sorted CSR fixes the per-dst summation order, and
     * partitions own disjoint dst ranges so collect order is irrelevant —
     * bit-identical across runs. The float ops per edge/vertex are the
-    * SAME division/multiply-add sequence as the other two paths, so the
+    * SAME division/multiply-add sequence as the other paths, so the
     * cross-engine 6-dp oracle argument (float summation order only,
     * ~1e-13) carries over unchanged.
     *
@@ -498,49 +591,17 @@ object GraphAlgs {
       x
     }
     val avgDeg = nDirected.toDouble / nV
-    val denom = new Array[Double](nV)
-    var k = 0
-    while (k < nV) { denom(k) = outDeg(k).toDouble + avgDeg; k += 1 }
-
-    var rank = Array.fill(nV)(1.0)
-    var i = 0
-    while (i < iters) {
-      val contrib = new Array[Double](nV)
-      var c = 0
-      while (c < nV) { contrib(c) = rank(c) / denom(c); c += 1 }
-      val bC = sc.broadcast(contrib)
-      // one narrow job: per-dst sums over the dst-contiguous sorted arrays;
-      // partitions own disjoint dsts, so collect order is irrelevant
-      val partials = csr.map { case (dArr, sArr) =>
-        val cv = bC.value
-        val outD = Array.newBuilder[Int]
-        val outM = Array.newBuilder[Double]
-        var j = 0
-        while (j < dArr.length) {
-          val d = dArr(j)
-          var s = 0.0
-          while (j < dArr.length && dArr(j) == d) { s += cv(sArr(j)); j += 1 }
-          outD += d
-          outM += s
-        }
-        (outD.result(), outM.result())
-      }.collect()
-      bC.destroy()
-      val next = new Array[Double](nV)
-      java.util.Arrays.fill(next, 1.0 - damping)
-      partials.foreach { case (dArr, mArr) =>
-        var j = 0
-        while (j < dArr.length) {
-          next(dArr(j)) = (1.0 - damping) + damping * mArr(j)
-          j += 1
-        }
-      }
-      rank = next
-      i += 1
+    val rank = articleRankSteps(outDeg.map(_.toDouble + avgDeg), iters, damping, 0.0) {
+      contrib =>
+        val bC = sc.broadcast(contrib)
+        // one narrow job: per-dst sums over the dst-contiguous sorted
+        // arrays; partitions own disjoint dsts, so collect order is
+        // irrelevant
+        try csr.map { case (dArr, sArr) => dstRunSums(dArr, sArr, bC.value) }.collect()
+        finally bC.destroy()
     }
     csr.unpersist(blocking = false)
-    val out = rank
-    sc.parallelize(ids.indices.map(j => (ids(j), out(j))), math.max(1, parts))
+    sc.parallelize(ids.indices.map(j => (ids(j), rank(j))), math.max(1, parts))
       .toDF("node_id", "rank")
   }
 

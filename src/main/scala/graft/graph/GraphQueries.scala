@@ -139,10 +139,13 @@ object GraphQueries {
     * superstep is one shuffle-free narrow job against a broadcast
     * V-sized contribution vector — the right plan whenever the vertex
     * set fits the broadcast guard (it falls back to the GraphX
-    * shuffle-superstep path above 1M vertices). Cross-path float parity
-    * with [[GraphAlgs.articleRankDF]]/[[GraphAlgs.articleRankGraphX]] is
-    * pinned in GraphAlgsSpec; the 6-dp-rounded result is oracled in
-    * DuckDB by an unrolled 20-step CTE chain.
+    * shuffle-superstep path above 1M vertices). It calls the pull path
+    * directly, without [[GraphAlgs.articleRankDF]]'s driver-limit probe.
+    * Cross-path float parity with
+    * [[GraphAlgs.articleRankDF]] (both of its paths) and
+    * [[GraphAlgs.articleRankGraphX]] is pinned in GraphAlgsSpec; the
+    * 6-dp-rounded result is oracled in DuckDB by an unrolled 20-step CTE
+    * chain.
     */
   val g04 = QueryDef(
     "g04_articlerank",

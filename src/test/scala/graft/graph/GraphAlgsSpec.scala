@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graphx.Graph
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-computed fixtures for the iterative graph algorithms (they have no
@@ -11,6 +12,23 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
   private def edgeDf(pairs: (Long, Long)*) = {
     import spark.implicits._
     pairs.toDF("src", "dst")
+  }
+
+  private def rankMap(df: DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** articleRankDF's distributed superstep loop, forced below its driver limit. */
+  private def distributedRanks(g: Graph[Unit, Unit], iters: Int): Map[Long, Double] = {
+    import spark.implicits._
+    rankMap(GraphAlgs.articleRankDF(g.edges.map(e => (e.srcId, e.dstId)).toDF("src", "dst"),
+      iters = iters, driverLimit = 0))
+  }
+
+  private def assertClose(name: String, want: Map[Long, Double], got: Map[Long, Double]): Unit = {
+    assert(got.keySet == want.keySet, name)
+    want.foreach { case (k, v) =>
+      assert(math.abs(got(k) - v) < 1e-12, s"$name node $k: ${got(k)} vs $v")
+    }
   }
 
   test("connectedComponents: two components get min-id labels") {
@@ -103,6 +121,10 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
       GraphAlgs.buildGraph(star, "src", "dst", undirected = true),
       iters = 20).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(r1 == r2, "must be bit-deterministic")
+    // the forced distributed loop is bit-deterministic too, and agrees
+    val d1 = distributedRanks(g, iters = 20)
+    assert(d1 == distributedRanks(g, iters = 20), "distributed loop must be bit-deterministic")
+    assertClose("star distributed", r1, d1)
   }
 
   test("articleRank: one hand-computed iteration on a 2-node cycle") {
@@ -121,29 +143,29 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
     // check never changes the computed ranks — and that the tol path
     // survives 40 supersteps at all (it used to double-exponentiate the
     // checkpoint's estimated sizeInBytes by referencing ranks twice,
-    // freezing Catalyst's stats visitor after ~30 supersteps)
+    // freezing Catalyst's stats visitor after ~30 supersteps). Both
+    // paths: driver-local and the forced distributed loop
     val e = edgeDf(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 1L, 4L -> 1L,
       4L -> 2L, 5L -> 4L, 1L -> 5L)
-    val full = GraphAlgs.articleRankDF(e, iters = 40).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val checked = GraphAlgs.articleRankDF(e, iters = 40, tol = 1e-12).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(full.keySet == checked.keySet)
-    full.foreach { case (k, v) =>
-      assert(math.abs(checked(k) - v) < 1e-12, s"node $k: ${checked(k)} vs $v")
+    for (limit <- Seq(GraphAlgs.DefaultDriverGraphLimit, 0)) {
+      val full = rankMap(GraphAlgs.articleRankDF(e, iters = 40, driverLimit = limit))
+      val checked = rankMap(
+        GraphAlgs.articleRankDF(e, iters = 40, tol = 1e-12, driverLimit = limit))
+      assertClose(s"driverLimit=$limit", full, checked)
+      // an absurdly large tol fires after the very first delta scan, so the
+      // result must equal the fixed one-superstep run exactly
+      val one = rankMap(GraphAlgs.articleRankDF(e, iters = 1, driverLimit = limit))
+      val fired = rankMap(
+        GraphAlgs.articleRankDF(e, iters = 40, tol = Double.MaxValue, driverLimit = limit))
+      assert(fired == one, s"driverLimit=$limit: huge tol must stop after superstep 1")
     }
-    // an absurdly large tol fires after the very first delta scan, so the
-    // result must equal the fixed one-superstep run exactly
-    val one = GraphAlgs.articleRankDF(e, iters = 1).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val fired = GraphAlgs.articleRankDF(e, iters = 40, tol = Double.MaxValue).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(fired == one, "huge tol must stop after superstep 1")
   }
 
   test("articleRankGraphX == articleRankDF to float-summation noise (incl. sinks)") {
     // star (undirected), a directed chain WITH a sink (4 has no out-edges),
-    // and a denser mixed graph — the three degree regimes
+    // and a denser mixed graph — the three degree regimes. articleRank(g)
+    // takes the driver-local path; the forced distributed loop is the
+    // third input
     val graphs = Seq(
       ("star", edgeDf(0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 4L), true),
       ("chain+sink", edgeDf(1L -> 2L, 2L -> 3L, 3L -> 4L, 1L -> 4L), false),
@@ -151,15 +173,11 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
         4L -> 2L, 5L -> 4L, 1L -> 5L), false))
     graphs.foreach { case (name, e, und) =>
       val g = GraphAlgs.buildGraph(e, "src", "dst", undirected = und)
-      val viaGraphX = GraphAlgs.articleRankGraphX(g, iters = 20).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val viaDF = GraphAlgs.articleRank(
-        GraphAlgs.buildGraph(e, "src", "dst", undirected = und),
-        iters = 20).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(viaGraphX.keySet == viaDF.keySet, name)
-      viaDF.foreach { case (k, v) =>
-        assert(math.abs(viaGraphX(k) - v) < 1e-12, s"$name node $k: ${viaGraphX(k)} vs $v")
-      }
+      val viaGraphX = rankMap(GraphAlgs.articleRankGraphX(g, iters = 20))
+      val viaDF = rankMap(GraphAlgs.articleRank(
+        GraphAlgs.buildGraph(e, "src", "dst", undirected = und), iters = 20))
+      assertClose(name, viaDF, viaGraphX)
+      assertClose(s"$name distributed", viaDF, distributedRanks(g, iters = 20))
     }
     // and the hand-computed 2-node-cycle value holds on the GraphX path too
     val cyc = GraphAlgs.articleRankGraphX(
@@ -180,10 +198,9 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
       val viaDF = GraphAlgs.articleRank(
         GraphAlgs.buildGraph(e, "src", "dst", undirected = und),
         iters = 20).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(viaPull.keySet == viaDF.keySet, name)
-      viaDF.foreach { case (k, v) =>
-        assert(math.abs(viaPull(k) - v) < 1e-12, s"$name node $k: ${viaPull(k)} vs $v")
-      }
+      assertClose(name, viaDF, viaPull)
+      assertClose(s"$name distributed", viaDF,
+        distributedRanks(GraphAlgs.buildGraph(e, "src", "dst", undirected = und), iters = 20))
       // vertexLimit below the vertex count forces the GraphX fallback;
       // values must agree to the same noise bound
       val fallback = GraphAlgs.articleRankPull(e, iters = 20, undirected = und,
@@ -200,6 +217,69 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
     val r2 = GraphAlgs.articleRankPull(e, iters = 20).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(r1 == r2, "must be bit-deterministic")
+  }
+
+  test("articleRankDF: driver-local path == forced distributed loop on a random multigraph") {
+    import spark.implicits._
+    // deterministic LCG multigraph: duplicate edges, self-loops, sinks
+    // (ids 40..47 only ever appear as dst) and a source-only vertex (100)
+    var state = 0x2545f4914f6cdd1dL
+    def nextInt(bound: Int): Int = {
+      state = state * 6364136223846793005L + 1442695040888963407L
+      (((state >>> 33) % bound + bound) % bound).toInt
+    }
+    val base = (0 until 300).map(_ => (nextInt(40).toLong, nextInt(48).toLong))
+    val pairs = base ++ base.take(30) ++ (0 until 6).map(i => (i.toLong, i.toLong)) ++
+      Seq(100L -> 0L, 100L -> 0L)
+    assert(pairs.distinct.size < pairs.size && pairs.exists(p => p._1 == p._2))
+    val e = pairs.toDF("src", "dst")
+    for (tol <- Seq(0.0, 1e-12, Double.MaxValue)) {
+      val local = rankMap(GraphAlgs.articleRankDF(e, tol = tol))
+      val dist = rankMap(GraphAlgs.articleRankDF(e, tol = tol, driverLimit = 0))
+      assertClose(s"tol=$tol", dist, local)
+    }
+    // a vertex with no in-edges gets exactly 1 - d
+    val local = rankMap(GraphAlgs.articleRankDF(e))
+    val noIn = local.keySet -- pairs.map(_._2).toSet
+    assert(noIn.contains(100L))
+    noIn.foreach(v => assert(local(v) == 1.0 - 0.85, s"node $v"))
+    // the driver-local path is bit-identical run to run
+    assert(local == rankMap(GraphAlgs.articleRankDF(e)), "must be bit-deterministic")
+  }
+
+  test("articleRankDF: a null endpoint takes the distributed loop, unchanged") {
+    import spark.implicits._
+    // 1 -> 2, 2 -> 1, 2 -> 3, 3 -> null. Vertices {1, 2, 3, null}: V = 4,
+    // E = 4, avgDeg = 1, so denom(1) = 2, denom(2) = 3, denom(3) = 2. The
+    // null dst never joins a vertex, so null keeps 1 - d and 3's
+    // contribution is dropped:
+    //   r1 <- .15 + .85 * r2 / 3,  r2 <- .15 + .85 * r1 / 2,  r3 <- .15 + .85 * r2 / 3
+    val e = Seq((1L, Option(2L)), (2L, Option(1L)), (2L, Option(3L)), (3L, None))
+      .toDF("src", "dst")
+    def ranks(df: DataFrame): Map[Option[Long], Double] =
+      df.collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getDouble(1)).toMap
+    def expected(iters: Int): Map[Option[Long], Double] = {
+      var r1 = 1.0
+      var r2 = 1.0
+      var r3 = 1.0
+      (1 to iters).foreach { _ =>
+        val (n1, n2, n3) = (0.15 + 0.85 * r2 / 3, 0.15 + 0.85 * r1 / 2, 0.15 + 0.85 * r2 / 3)
+        r1 = n1; r2 = n2; r3 = n3
+      }
+      Map(None -> 0.15, Some(1L) -> r1, Some(2L) -> r2, Some(3L) -> r3)
+    }
+    // superstep 1 by hand: r1 = r3 = .15 + .85 / 3, r2 = .15 + .85 / 2
+    assert(math.abs(expected(1)(Some(1L)) - 0.4333333333333333) < 1e-12)
+    assert(math.abs(expected(1)(Some(2L)) - 0.575) < 1e-12)
+    for (iters <- Seq(1, 20)) {
+      val got = ranks(GraphAlgs.articleRankDF(e, iters = iters))
+      assert(got == ranks(GraphAlgs.articleRankDF(e, iters = iters, driverLimit = 0)))
+      val want = expected(iters)
+      assert(got.keySet == want.keySet, got.toString)
+      want.foreach { case (k, v) =>
+        assert(math.abs(got(k) - v) < 1e-12, s"iters=$iters node $k: ${got(k)} vs $v")
+      }
+    }
   }
 
   test("labelPropagation: two triangles joined by a bridge split into two communities") {
