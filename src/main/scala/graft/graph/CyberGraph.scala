@@ -87,8 +87,7 @@ object CyberGraphQueries {
   }
 
   /** Q7 (relational part): community histogram — the community column
-    * comes from GraphAlgs.louvainDF (real modularity Louvain;
-    * labelPropagation remains as the cheaper fallback).
+    * comes from GraphAlgs.louvainDF (real modularity Louvain).
     */
   def q7CommunitySizes(communities: DataFrame): DataFrame =
     communities.groupBy(col("community"))

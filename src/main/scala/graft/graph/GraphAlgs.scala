@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.SparkException
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,9 +27,9 @@ object GraphAlgs {
     * [[louvainLocal]] / the union-find in [[connectedComponents]]).
     * The hybrids: Louvain ([[louvainDF]], [[louvainUnd]]), connected
     * components ([[connectedComponents]], [[connectedComponentsUnd]]),
-    * [[GraphQueries.triangleStats]] and ArticleRank ([[articleRankDF]],
-    * whose ranks agree with its distributed loop to float-summation
-    * noise rather than bit for bit).
+    * [[GraphQueries.triangleStats]] and ArticleRank ([[articleRankDF]]:
+    * above the limit it runs [[articleRankPull]], whose ranks agree with
+    * the driver path to float-summation noise).
     * 200k edge rows ≈ a few MB collected — far below driver pressure —
     * while any corpus-proportional graph sails past it onto the
     * distributed path, exactly the [[graft.er.EntityResolution]]
@@ -75,33 +76,13 @@ object GraphAlgs {
     Graph.fromEdges(e, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** ArticleRank (Neo4j GDS variant of PageRank, Writeup.pdf §Queries Q1):
-    * the neighbour contribution is damped by (outDeg(u) + avgOutDeg)
-    * instead of outDeg(u), so low-degree neighbours count less.
-    *
-    *   AR(v) <- (1 - d) + d * sum_{u->v} AR(u) / (outDeg(u) + avgOutDeg)
-    *
-    * Runs [[articleRankDF]] on the graph's edges: driver-local at or under
-    * [[DefaultDriverGraphLimit]] edges, else the synchronous
-    * fixed-iteration DataFrame loop, where the static edge+degree table
-    * is cached once, each superstep is one shuffle keyed by dst plus one
-    * vertex join, and a per-superstep localCheckpoint keeps the lineage
-    * depth constant (chaining GraphX graph views re-ships every prior
-    * superstep's vertices — quadratic; that loop is the one that scales).
-    */
-  def articleRank(g: Graph[Unit, Unit], iters: Int = 20,
-                  damping: Double = 0.85): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    val edges = g.edges.map(e => (e.srcId, e.dstId)).toDF("src", "dst")
-    articleRankDF(edges, iters, damping)
-  }
-
   /** Vertex-side tables produced by localCheckpoint have no Catalyst
     * stats, so AQE would sort-merge them against the (much larger) edge
-    * table every superstep. Below ~1M vertices the ranks/labels table is
-    * broadcast explicitly; above, the joins fall back to shuffles against
-    * edges pre-partitioned on src (the co-partitioned plan a 100 TB graph
+    * table every superstep. Below ~1M vertices Louvain's community tables
+    * are broadcast explicitly and [[articleRankPull]] broadcasts its
+    * V-sized rank vector; above, the Louvain joins fall back to shuffles
+    * against edges pre-partitioned on src and ArticleRank to
+    * [[articleRankGraphX]] (the co-partitioned plans a 100 TB graph
     * needs — broadcast of V rows would not survive there).
     */
   private val broadcastVertexLimit = 1000000L
@@ -148,109 +129,55 @@ object GraphAlgs {
     }
   }
 
-  /** DataFrame-native ArticleRank over an (src, dst) edge table.
+  /** ArticleRank (Neo4j GDS variant of PageRank, Writeup.pdf §Queries Q6)
+    * over an (src, dst) edge table: the neighbour contribution is damped
+    * by (outDeg(u) + avgOutDeg) instead of outDeg(u), so low-degree
+    * neighbours count less.
+    *
+    *   AR(v) <- (1 - d) + d * sum_{u->v} AR(u) / (outDeg(u) + avgOutDeg)
+    *
+    * Vertices are the distinct endpoints; edge multiplicities and
+    * self-loops count in out-degree, in avgDeg = E / V and in messages.
     *
     * Path choice: one `limit(driverLimit + 1)` collect probes the edge
     * rows. At or under `driverLimit` (default [[DefaultDriverGraphLimit]])
-    * with no null id, the supersteps run on the driver over one
-    * (dst, src)-sorted CSR ([[articleRankLocal]]) — the probe is the only
-    * Spark job. Otherwise (or with `driverLimit = 0`, which tests use to
-    * pin the two paths together) the distributed loop below runs: one
-    * edge⋈ranks shuffle, one dst aggregate and one localCheckpoint per
-    * superstep — the scale path. Both count edge multiplicities and
-    * self-loops in out-degree, avgDeg = E / V and messages.
+    * the supersteps run on the driver over one (dst, src)-sorted CSR
+    * ([[articleRankLocal]]) — the probe is the only Spark job. Above it,
+    * or with `driverLimit = 0` (which tests use to pin the paths
+    * together), [[articleRankPull]] runs with `dedupeEdges = false`, and
+    * above its vertex guard that hands over to [[articleRankGraphX]].
     *
-    * `tol` > 0 opts into an L1-delta early exit; on the distributed path
-    * the check costs one extra vertex join + scan per superstep, and with
-    * damping 0.85 the delta shrinks only ~0.85^k per superstep — so it
-    * pays off ONLY when `iters` is large relative to the graph's mixing
-    * time (measured: at iters=20 on the gate graph it never fires and adds
-    * ~25%). Default 0.0 = fixed supersteps, no check.
+    * A null `src` or `dst` has no vertex to rank: every path rejects it
+    * with an IllegalArgumentException naming the column.
     */
-  def articleRankDF(edges: DataFrame, iters: Int = 20,
-                    damping: Double = 0.85, tol: Double = 0.0,
+  def articleRankDF(edges: DataFrame, iters: Int = 20, damping: Double = 0.85,
                     driverLimit: Int = DefaultDriverGraphLimit): DataFrame = {
     if (driverLimit > 0) {
       val probe = edges.select(col("src").cast("long"), col("dst").cast("long"))
         .limit(driverLimit + 1).collect()
-      if (probe.length <= driverLimit && !probe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      probe.find(r => r.isNullAt(0) || r.isNullAt(1)).foreach { r =>
+        throw nullEndpoint(if (r.isNullAt(0)) "src" else "dst")
+      }
+      if (probe.length <= driverLimit)
         return articleRankLocal(probe.map(_.getLong(0)), probe.map(_.getLong(1)),
-          iters, damping, tol)
+          iters, damping)
     }
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long")).cache()
-    val vertices = e.select(col("src").as("node_id"))
-      .union(e.select(col("dst").as("node_id"))).distinct().cache()
-    val outDeg = e.groupBy(col("src").as("node_id"))
-      .agg(count(lit(1)).cast("double").as("deg"))
-    val nVerts = vertices.count().toDouble
-    val avgDeg = e.count().toDouble / nVerts
-    def small(df: DataFrame): DataFrame =
-      if (nVerts < broadcastVertexLimit) broadcast(df) else df
-    // static per-edge damping denominator, cached once, partitioned by the
-    // per-iteration join key so the big side never re-shuffles
-    val edgesWithDeg = e.join(outDeg, e("src") === outDeg("node_id"))
-      .select(col("src"), col("dst"), (col("deg") + avgDeg).as("denom"))
-      .repartition(col("src"))
-      .cache()
-    edgesWithDeg.count()
-
-    // localCheckpoint TRUNCATES the logical plan each superstep — without
-    // it the analyzed plan doubles per iteration and the driver spends
-    // exponential time in Catalyst, not in the data. (On a cluster with
-    // executor churn, swap for reliable checkpoint(dir) — same shape.)
-    var ranks = vertices.select(col("node_id"), lit(1.0).as("rank"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val msgs = edgesWithDeg
-        .join(small(ranks), edgesWithDeg("src") === col("node_id"))
-        .select(col("dst"), (col("rank") / col("denom")).as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("msg"))
-      val newRank =
-        lit(1.0 - damping) + lit(damping) * coalesce(col("msg"), lit(0.0))
-      // without tol the checkpoint is eager. With tol, the opt-in
-      // convergence check is an L1-delta against the pre-checkpoint
-      // ranks, computed as a SEPARATE query after the checkpoint. Two
-      // things hide here: (a) the delta scan is the lazy checkpoint's
-      // first action, so it materializes in the same job (eager would pay
-      // a separate job per superstep); (b) the checkpointed plan must
-      // reference `ranks` exactly ONCE (via msgs) — joining prev-rank into
-      // the checkpointed plan references ranks twice, and
-      // localCheckpoint's stats rewrite then SQUARES the estimated
-      // sizeInBytes every superstep: double-exponential BigInt growth
-      // that freezes Catalyst's stats visitor after ~30 supersteps.
-      val next = vertices
-        .join(small(msgs), vertices("node_id") === msgs("dst"), "left")
-        .select(col("node_id"), newRank.as("rank"))
-        .localCheckpoint(tol <= 0)
-      val converged = tol > 0 && next
-        .join(small(ranks.select(col("node_id").as("pid"), col("rank").as("prev"))),
-          col("node_id") === col("pid"))
-        .agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0) < tol
-      ranks.unpersist(blocking = false)
-      ranks = next
-      i = if (converged) iters else i + 1
-    }
-    // the loop exits on a materialized checkpoint, whose blocks are
-    // lineage-independent of these caches — release them so repeated
-    // calls don't accumulate edge-sized frames in executor storage for
-    // the session lifetime
-    Seq(e, vertices, edgesWithDeg).foreach(_.unpersist(blocking = false))
-    ranks.select(col("node_id"), col("rank"))
+    articleRankPull(edges.select(col("src"), col("dst")), iters, damping,
+      dedupeEdges = false)
   }
 
+  private def nullEndpoint(column: String): IllegalArgumentException =
+    new IllegalArgumentException(s"ArticleRank: null vertex id in edge column $column")
+
   /** Driver-local ArticleRank over collected edge endpoints — the
-    * under-limit path of [[articleRankDF]], with its semantics: vertices
-    * are the distinct endpoints, multiplicities and self-loops count in
-    * out-degree, in avgDeg = E / V and in messages. The edges become one
-    * (dst, src)-sorted CSR over dense sorted-id indices, and the
-    * supersteps are [[articleRankPull]]'s own recurrence
+    * under-limit path of [[articleRankDF]], with its semantics. The edges
+    * become one (dst, src)-sorted CSR over dense sorted-id indices, and
+    * the supersteps are [[articleRankPull]]'s own recurrence
     * ([[articleRankSteps]]) over that single slice, so two runs are
-    * bit-identical and differ from the distributed loop only in float
-    * summation order.
+    * bit-identical.
     */
   private def articleRankLocal(src: Array[Long], dst: Array[Long], iters: Int,
-                               damping: Double, tol: Double): DataFrame = {
+                               damping: Double): DataFrame = {
     val spark = SparkSession.active
     import spark.implicits._
     val ids = (src ++ dst).distinct.sorted
@@ -267,7 +194,7 @@ object GraphAlgs {
     val outDeg = new Array[Int](nV)
     sArr.foreach(s => outDeg(s) += 1)
     val avgDeg = keys.length.toDouble / nV
-    val rank = articleRankSteps(outDeg.map(_.toDouble + avgDeg), iters, damping, tol) {
+    val rank = articleRankSteps(outDeg.map(_.toDouble + avgDeg), iters, damping) {
       contrib => Array(dstRunSums(dArr, sArr, contrib))
     }
     ids.indices.map(j => (ids(j), rank(j))).toDF("node_id", "rank")
@@ -300,12 +227,9 @@ object GraphAlgs {
     *
     *   rank(v) <- (1 - d) + d * msg(v)
     *
-    * with `1 - d` for vertices no slice names (no in-edges). `tol > 0`
-    * stops after the first superstep whose L1 delta is under `tol`, as
-    * the distributed loop of [[articleRankDF]] does.
+    * with `1 - d` for vertices no slice names (no in-edges).
     */
-  private def articleRankSteps(denom: Array[Double], iters: Int, damping: Double,
-                               tol: Double)(
+  private def articleRankSteps(denom: Array[Double], iters: Int, damping: Double)(
       runSums: Array[Double] => Array[(Array[Int], Array[Double])]): Array[Double] = {
     val nV = denom.length
     var rank = Array.fill(nV)(1.0)
@@ -323,33 +247,26 @@ object GraphAlgs {
           j += 1
         }
       }
-      val converged = tol > 0 && {
-        var delta = 0.0
-        c = 0
-        while (c < nV) { delta += math.abs(next(c) - rank(c)); c += 1 }
-        delta < tol
-      }
       rank = next
-      i = if (converged) iters else i + 1
+      i += 1
     }
     rank
   }
 
-  /** ArticleRank on the GraphX runtime — the cheap path for many
-    * supersteps. Above its driver limit, [[articleRankDF]] pays one
-    * DataFrame job dispatch plus an eager localCheckpoint per superstep
-    * (~constant seconds each, regardless of data size); here the 20
-    * supersteps run executor-side over RDDs that GraphX keeps
-    * co-partitioned via its routing tables, the same
-    * loop shape as GraphX's own staticPageRank (aggregateMessages +
-    * outerJoinVertices, materialize then unpersist the parent). Both
-    * implementations compute the identical recurrence
+  /** ArticleRank on the GraphX runtime — the path above
+    * [[articleRankPull]]'s vertex guard, where a V-sized driver vector no
+    * longer fits. The supersteps run executor-side over RDDs that GraphX
+    * keeps co-partitioned via its routing tables, the same loop shape as
+    * GraphX's own staticPageRank (aggregateMessages + outerJoinVertices,
+    * materialize then unpersist the parent). It computes the recurrence
+    * of [[articleRankDF]]
     *
     *   AR(v) <- (1 - d) + d * sum_{u->v} AR(u) / (outDeg(u) + avgOutDeg)
     *
-    * with one IEEE rounding per op in the same order, so they agree to
-    * float-summation noise (~1e-13) — pinned by the parity test in
-    * GraphAlgsSpec and, rounded to 6 dp, by g04's unrolled-CTE oracle.
+    * with one IEEE rounding per op in the same order as the other paths,
+    * so they agree to float-summation noise (~1e-13) — pinned by the
+    * parity tests in GraphAlgsSpec and, rounded to 6 dp, by g04's
+    * unrolled-CTE oracle.
     */
   def articleRankGraphX(g: Graph[Unit, Unit], iters: Int = 20,
                         damping: Double = 0.85): DataFrame = {
@@ -372,9 +289,9 @@ object GraphAlgs {
       .cache()
     var i = 0
     while (i < iters) {
-      // same IEEE op as the tuple form and articleRankDF: one DIVISION
+      // same IEEE op as the other ArticleRank paths: one DIVISION
       // rank/denom per edge (not multiply-by-reciprocal, which rounds
-      // differently), so the parity pins hold unchanged
+      // differently), so the parity pins hold
       val msgs = rg.aggregateMessages[Double](
         ctx => ctx.sendToDst(ctx.srcAttr / ctx.attr), _ + _,
         TripletFields.Src) // dst attrs not read: halves the shipped bytes
@@ -392,23 +309,22 @@ object GraphAlgs {
     rg.vertices.map { case (id, r) => (id, r) }.toDF("node_id", "rank")
   }
 
-  /** ArticleRank via BROADCAST-PULL supersteps — the fast path when the
-    * vertex set fits a driver vector (V <= [[broadcastVertexLimit]], the
-    * same guard the DF path's broadcast uses).
+  /** ArticleRank via BROADCAST-PULL supersteps — the distributed path
+    * while the vertex set fits a driver vector (V <= `vertexLimit`,
+    * default [[broadcastVertexLimit]]). [[articleRankDF]] runs it above
+    * [[DefaultDriverGraphLimit]] edges; g04 calls it directly.
     *
-    * The per-superstep shuffle is the scale bottleneck of both other
-    * distributed formulations: [[articleRankDF]]'s loop (above its
-    * driver limit) shuffles E message rows per superstep,
-    * [[articleRankGraphX]] ships a replicated vertex view.
-    * Here the EDGES shuffle exactly ONCE — DataFrame `repartition(dst)` +
-    * `sortWithinPartitions(dst, src)`, which stays in Tungsten — into
-    * cached per-partition CSR-style int arrays. Every superstep is
-    * then ONE narrow job: broadcast the V-sized contribution vector
-    * (rank/denom, computed on the driver in O(V)), each partition scans
-    * its static edge arrays accumulating per-dst sums (dst-contiguous
-    * because sorted), and collects |its dsts| (dst, msg) pairs — vertex-
-    * proportional driver traffic, never edge-proportional. 20 supersteps
-    * = 20 shuffle-free jobs.
+    * A superstep that shuffles is the scale bottleneck of a distributed
+    * ArticleRank: [[articleRankGraphX]] ships a replicated vertex view
+    * per superstep. Here the EDGES shuffle exactly ONCE — DataFrame
+    * `repartition(dst)` + `sortWithinPartitions(dst, src)`, which stays
+    * in Tungsten — into cached per-partition CSR-style int arrays. Every
+    * superstep is then ONE narrow job: broadcast the V-sized
+    * contribution vector (rank/denom, computed on the driver in O(V)),
+    * each partition scans its static edge arrays accumulating per-dst
+    * sums (dst-contiguous because sorted), and collects |its dsts|
+    * (dst, msg) pairs — vertex-proportional driver traffic, never
+    * edge-proportional. 20 supersteps = 20 shuffle-free jobs.
     *
     * Determinism: the sorted CSR fixes the per-dst summation order, and
     * partitions own disjoint dst ranges so collect order is irrelevant —
@@ -419,8 +335,11 @@ object GraphAlgs {
     *
     * Above the vertex guard the method falls back to
     * [[articleRankGraphX]] — V-sized driver vectors are exactly what a
-    * 100 TB-scale billion-vertex graph forbids; the shuffle-superstep
-    * path remains the correct plan there.
+    * 100 TB-scale billion-vertex graph forbids.
+    *
+    * A null endpoint is rejected in the pack step (no extra job) with an
+    * IllegalArgumentException naming the column; read as a long it would
+    * become id 0 and merge into a real vertex 0.
     */
   def articleRankPull(edges: DataFrame, iters: Int = 20,
                       damping: Double = 0.85, undirected: Boolean = false,
@@ -456,6 +375,9 @@ object GraphAlgs {
         var lastS = 0L
         var first = true
         it.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1))
+            throw nullEndpoint(if (undirected) s"$srcCol or $dstCol"
+              else if (r.isNullAt(0)) srcCol else dstCol)
           val s = r.getLong(0)
           val d = r.getLong(1)
           if (first || !dedupeEdges || d != lastD || s != lastS) {
@@ -465,7 +387,12 @@ object GraphAlgs {
         }
         Iterator.single((dB.result(), sB.result()))
       }.persist(StorageLevel.MEMORY_AND_DISK)
-    rawCsr.foreachPartition(_ => ())
+    try rawCsr.foreachPartition(_ => ())
+    catch {
+      case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
+        rawCsr.unpersist(blocking = false)
+        throw e.getCause
+    }
 
     // vertex guard BEFORE any vertex-proportional collect: per-partition
     // distinct-dst counts are exact and disjoint (dst-partitioned); the
@@ -591,7 +518,7 @@ object GraphAlgs {
       x
     }
     val avgDeg = nDirected.toDouble / nV
-    val rank = articleRankSteps(outDeg.map(_.toDouble + avgDeg), iters, damping, 0.0) {
+    val rank = articleRankSteps(outDeg.map(_.toDouble + avgDeg), iters, damping) {
       contrib =>
         val bC = sc.broadcast(contrib)
         // one narrow job: per-dst sums over the dst-contiguous sorted
@@ -699,83 +626,6 @@ object GraphAlgs {
       .map { case (id, comp) => (id, comp) }.toDF("node_id", "component")
   }
 
-  /** Deterministic synchronous label propagation (community detection —
-    * the LPA stand-in for gds.louvain, divergence documented in SURVEY
-    * §2.10 Q7). GraphX's LabelPropagation breaks frequency ties by map
-    * iteration order (nondeterministic); here ties break on the SMALLEST
-    * label, so goldens are stable.
-    */
-  def labelPropagation(g: Graph[Unit, Unit], iters: Int = 10): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    val edges = g.edges.map(e => (e.srcId, e.dstId)).toDF("src", "dst")
-    labelPropagationDF(edges, iters)
-  }
-
-  /** DataFrame-native deterministic LPA: per superstep, each node adopts
-    * the most frequent neighbour label (ties → smallest label), computed
-    * as groupBy(node, label).count + row_number window — same bounded-
-    * lineage persist/count/unpersist loop as articleRankDF.
-    */
-  def labelPropagationDF(edges: DataFrame, iters: Int = 10): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val und = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(col("src")).cache()
-    val vertices = und.select(col("src").as("node_id")).distinct().cache()
-    val nVerts = vertices.count()
-    def small(df: DataFrame): DataFrame =
-      if (nVerts < broadcastVertexLimit) broadcast(df) else df
-
-    var labels = vertices.select(col("node_id"), col("node_id").as("community"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val freq = und
-        .join(small(labels), und("src") === labels("node_id"))
-        .groupBy(col("dst"), col("community"))
-        .agg(count(lit(1)).as("n"))
-      // max_by struct = "most frequent, ties to smallest label" in one
-      // partial-aggregatable shuffle instead of a window sort
-      val elected = freq.groupBy(col("dst"))
-        .agg(max_by(col("community"), struct(col("n"), -col("community")))
-          .as("new_community"))
-      val next = vertices
-        .join(small(elected), vertices("node_id") === elected("dst"), "left")
-        .select(col("node_id"),
-          coalesce(col("new_community"), col("node_id")).as("community"))
-        .localCheckpoint(true) // plan truncation, see articleRankDF
-      labels.unpersist(blocking = false)
-      labels = next
-      i += 1
-    }
-    // final labels are a materialized checkpoint — free the edge- and
-    // vertex-sized loop caches (same session-lifetime hygiene as
-    // articleRankDF)
-    Seq(und, vertices).foreach(_.unpersist(blocking = false))
-    labels.select(col("node_id"), col("community"))
-  }
-
-  /** Deterministic distributed Louvain (gds.louvain.write, Writeup.pdf
-    * §Queries Q7 — the real modularity algorithm, replacing the LPA
-    * stand-in): synchronous modularity-greedy local moves with
-    * parity-alternating move sets (only nodes with id parity == sweep
-    * parity move, killing the two-node swap oscillation of naive
-    * synchronous Louvain), then community contraction, repeated until the
-    * community count stops shrinking or `maxLevels`. Ties break on the
-    * smallest community id and the final labels are relabeled to the
-    * minimum member node id, so results are partitioning-stable.
-    *
-    * Scale shape: every sweep is one edge⋈labels shuffle + two
-    * vertex-sized aggregates; contraction is one groupBy. The same
-    * bounded-lineage localCheckpoint loop as [[articleRankDF]].
-    *
-    * Internal representation: directed-both-ways weighted rows for
-    * non-loops plus DOUBLED self-loops — then k_i = sum(w) by src,
-    * 2m = sum(w) overall, and contraction preserves the representation
-    * level-to-level (intra-community mass lands on the loop row already
-    * doubled).
-    */
   /** Driver-local replay of [[louvainRep]]'s EXACT move sequence over a
     * collected edge array — same parity-alternating sweeps, same
     * candidate set (neighbour communities ∪ own), same ΔQ formula with
@@ -876,6 +726,31 @@ object GraphAlgs {
     globalMap.iterator.map { case (n, c) => (n, cmin(c)) }.toSeq
   }
 
+  /** Deterministic Louvain (gds.louvain.write, Writeup.pdf §Queries Q7 —
+    * the real modularity algorithm) over an (src, dst[, weight]) edge
+    * table, read as undirected: synchronous modularity-greedy local moves
+    * with parity-alternating move sets (only nodes with id parity ==
+    * sweep parity move, killing the two-node swap oscillation of naive
+    * synchronous Louvain), then community contraction, repeated until the
+    * community count stops shrinking or `maxLevels`. Ties break on the
+    * smallest community id and the final labels are relabeled to the
+    * minimum member node id, so results are partitioning-stable.
+    *
+    * Path choice ([[louvainRep]]): at or under `driverLimit` (default
+    * [[DefaultDriverGraphLimit]]) representation rows with integer-valued
+    * weights, [[louvainLocal]] replays the move sequence on the driver,
+    * label-identical; otherwise, or with `driverLimit = 0`, the
+    * distributed loop runs. There every sweep is one edge⋈labels shuffle
+    * + two vertex-sized aggregates and contraction is one groupBy; each
+    * sweep and level ends in a localCheckpoint, which keeps the plan
+    * depth constant.
+    *
+    * Internal representation: directed-both-ways weighted rows for
+    * non-loops plus DOUBLED self-loops — then k_i = sum(w) by src,
+    * 2m = sum(w) overall, and contraction preserves the representation
+    * level-to-level (intra-community mass lands on the loop row already
+    * doubled).
+    */
   def louvainDF(edges: DataFrame, maxLevels: Int = 3,
                 maxSweeps: Int = 8,
                 driverLimit: Int = DefaultDriverGraphLimit): DataFrame = {
@@ -1108,25 +983,5 @@ object GraphAlgs {
     out
     } finally vertices.unpersist(blocking = false)
     }
-  }
-
-  /** Louvain over a GraphX graph (edge list extracted, same as the other
-    * wrappers).
-    */
-  def louvain(g: Graph[Unit, Unit], maxLevels: Int = 3,
-              maxSweeps: Int = 8): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    val edges = g.edges.map(e => (e.srcId, e.dstId)).toDF("src", "dst")
-    louvainDF(edges, maxLevels, maxSweeps)
-  }
-
-  /** Static PageRank passthrough (Q6 family baseline for ArticleRank). */
-  def pageRank(g: Graph[Unit, Unit], iters: Int = 20,
-               resetProb: Double = 0.15): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    g.staticPageRank(iters, resetProb).vertices
-      .map { case (id, r) => (id, r) }.toDF("node_id", "rank")
   }
 }

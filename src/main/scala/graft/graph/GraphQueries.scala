@@ -140,9 +140,10 @@ object GraphQueries {
     * V-sized contribution vector — the right plan whenever the vertex
     * set fits the broadcast guard (it falls back to the GraphX
     * shuffle-superstep path above 1M vertices). It calls the pull path
-    * directly, without [[GraphAlgs.articleRankDF]]'s driver-limit probe.
-    * Cross-path float parity with
-    * [[GraphAlgs.articleRankDF]] (both of its paths) and
+    * directly, without [[GraphAlgs.articleRankDF]]'s driver-limit probe
+    * and with the default `dedupeEdges = true` (the oracle's distinct
+    * undirected edges). Float parity
+    * with [[GraphAlgs.articleRankDF]]'s driver-local path and
     * [[GraphAlgs.articleRankGraphX]] is pinned in GraphAlgsSpec; the
     * 6-dp-rounded result is oracled in DuckDB by an unrolled 20-step CTE
     * chain.

@@ -17,12 +17,18 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
   private def rankMap(df: DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
-  /** articleRankDF's distributed superstep loop, forced below its driver limit. */
-  private def distributedRanks(g: Graph[Unit, Unit], iters: Int): Map[Long, Double] = {
+  private def edgesOf(g: Graph[Unit, Unit]): DataFrame = {
     import spark.implicits._
-    rankMap(GraphAlgs.articleRankDF(g.edges.map(e => (e.srcId, e.dstId)).toDF("src", "dst"),
-      iters = iters, driverLimit = 0))
+    g.edges.map(e => (e.srcId, e.dstId)).toDF("src", "dst")
   }
+
+  /** articleRankDF's driver-local path (the graph is under its limit). */
+  private def localRanks(g: Graph[Unit, Unit], iters: Int): Map[Long, Double] =
+    rankMap(GraphAlgs.articleRankDF(edgesOf(g), iters = iters))
+
+  /** articleRankDF's distributed route (articleRankPull), forced below its driver limit. */
+  private def distributedRanks(g: Graph[Unit, Unit], iters: Int): Map[Long, Double] =
+    rankMap(GraphAlgs.articleRankDF(edgesOf(g), iters = iters, driverLimit = 0))
 
   private def assertClose(name: String, want: Map[Long, Double], got: Map[Long, Double]): Unit = {
     assert(got.keySet == want.keySet, name)
@@ -111,19 +117,16 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
     // undirected 5-node star centered at 0
     val star = edgeDf(0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 4L)
     val g = GraphAlgs.buildGraph(star, "src", "dst", undirected = true)
-    val r1 = GraphAlgs.articleRank(g, iters = 20).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val r1 = localRanks(g, iters = 20)
     val center = r1(0L)
     val leaves = (1L to 4L).map(r1)
     assert(leaves.forall(center > _), s"center $center vs leaves $leaves")
     assert(leaves.distinct.size == 1, "leaves must be symmetric")
-    val r2 = GraphAlgs.articleRank(
-      GraphAlgs.buildGraph(star, "src", "dst", undirected = true),
-      iters = 20).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val r2 = localRanks(GraphAlgs.buildGraph(star, "src", "dst", undirected = true), iters = 20)
     assert(r1 == r2, "must be bit-deterministic")
-    // the forced distributed loop is bit-deterministic too, and agrees
+    // the forced distributed route is bit-deterministic too, and agrees
     val d1 = distributedRanks(g, iters = 20)
-    assert(d1 == distributedRanks(g, iters = 20), "distributed loop must be bit-deterministic")
+    assert(d1 == distributedRanks(g, iters = 20), "distributed route must be bit-deterministic")
     assertClose("star distributed", r1, d1)
   }
 
@@ -131,41 +134,16 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
     // 1 <-> 2 (directed both ways). N=2, E=2, avgDeg=1, outDeg=1 each.
     // iter1: msg to each = 1.0/(1+1)=0.5 -> rank = 0.15 + 0.85*0.5 = 0.575
     val g = GraphAlgs.buildGraph(edgeDf(1L -> 2L, 2L -> 1L), "src", "dst")
-    val got = GraphAlgs.articleRank(g, iters = 1).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = localRanks(g, iters = 1)
     assert(math.abs(got(1L) - 0.575) < 1e-12)
     assert(math.abs(got(2L) - 0.575) < 1e-12)
   }
 
-  test("articleRankDF tol path: delta check changes no values; huge tol exits after one superstep") {
-    // mixed graph (cycles + sink feeds). tol=1e-12 cannot fire inside 40
-    // supersteps (delta ~ 0.85^k), so this pins that ADDING the delta
-    // check never changes the computed ranks — and that the tol path
-    // survives 40 supersteps at all (it used to double-exponentiate the
-    // checkpoint's estimated sizeInBytes by referencing ranks twice,
-    // freezing Catalyst's stats visitor after ~30 supersteps). Both
-    // paths: driver-local and the forced distributed loop
-    val e = edgeDf(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 1L, 4L -> 1L,
-      4L -> 2L, 5L -> 4L, 1L -> 5L)
-    for (limit <- Seq(GraphAlgs.DefaultDriverGraphLimit, 0)) {
-      val full = rankMap(GraphAlgs.articleRankDF(e, iters = 40, driverLimit = limit))
-      val checked = rankMap(
-        GraphAlgs.articleRankDF(e, iters = 40, tol = 1e-12, driverLimit = limit))
-      assertClose(s"driverLimit=$limit", full, checked)
-      // an absurdly large tol fires after the very first delta scan, so the
-      // result must equal the fixed one-superstep run exactly
-      val one = rankMap(GraphAlgs.articleRankDF(e, iters = 1, driverLimit = limit))
-      val fired = rankMap(
-        GraphAlgs.articleRankDF(e, iters = 40, tol = Double.MaxValue, driverLimit = limit))
-      assert(fired == one, s"driverLimit=$limit: huge tol must stop after superstep 1")
-    }
-  }
-
   test("articleRankGraphX == articleRankDF to float-summation noise (incl. sinks)") {
     // star (undirected), a directed chain WITH a sink (4 has no out-edges),
-    // and a denser mixed graph — the three degree regimes. articleRank(g)
-    // takes the driver-local path; the forced distributed loop is the
-    // third input
+    // and a denser mixed graph — the three degree regimes. The reference
+    // is articleRankDF's driver-local path; its forced distributed route
+    // is the third input
     val graphs = Seq(
       ("star", edgeDf(0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 4L), true),
       ("chain+sink", edgeDf(1L -> 2L, 2L -> 3L, 3L -> 4L, 1L -> 4L), false),
@@ -174,8 +152,7 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
     graphs.foreach { case (name, e, und) =>
       val g = GraphAlgs.buildGraph(e, "src", "dst", undirected = und)
       val viaGraphX = rankMap(GraphAlgs.articleRankGraphX(g, iters = 20))
-      val viaDF = rankMap(GraphAlgs.articleRank(
-        GraphAlgs.buildGraph(e, "src", "dst", undirected = und), iters = 20))
+      val viaDF = localRanks(g, iters = 20)
       assertClose(name, viaDF, viaGraphX)
       assertClose(s"$name distributed", viaDF, distributedRanks(g, iters = 20))
     }
@@ -195,12 +172,10 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
     graphs.foreach { case (name, e, und) =>
       val viaPull = GraphAlgs.articleRankPull(e, iters = 20, undirected = und)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val viaDF = GraphAlgs.articleRank(
-        GraphAlgs.buildGraph(e, "src", "dst", undirected = und),
-        iters = 20).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val g = GraphAlgs.buildGraph(e, "src", "dst", undirected = und)
+      val viaDF = localRanks(g, iters = 20)
       assertClose(name, viaDF, viaPull)
-      assertClose(s"$name distributed", viaDF,
-        distributedRanks(GraphAlgs.buildGraph(e, "src", "dst", undirected = und), iters = 20))
+      assertClose(s"$name distributed", viaDF, distributedRanks(g, iters = 20))
       // vertexLimit below the vertex count forces the GraphX fallback;
       // values must agree to the same noise bound
       val fallback = GraphAlgs.articleRankPull(e, iters = 20, undirected = und,
@@ -233,13 +208,13 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
       Seq(100L -> 0L, 100L -> 0L)
     assert(pairs.distinct.size < pairs.size && pairs.exists(p => p._1 == p._2))
     val e = pairs.toDF("src", "dst")
-    for (tol <- Seq(0.0, 1e-12, Double.MaxValue)) {
-      val local = rankMap(GraphAlgs.articleRankDF(e, tol = tol))
-      val dist = rankMap(GraphAlgs.articleRankDF(e, tol = tol, driverLimit = 0))
-      assertClose(s"tol=$tol", dist, local)
-    }
-    // a vertex with no in-edges gets exactly 1 - d
     val local = rankMap(GraphAlgs.articleRankDF(e))
+    // the distributed route (articleRankPull, multiplicities kept) and its
+    // GraphX fallback (vertex guard below V) against the local path
+    assertClose("pull", local, rankMap(GraphAlgs.articleRankDF(e, driverLimit = 0)))
+    assertClose("graphx", local,
+      rankMap(GraphAlgs.articleRankPull(e, dedupeEdges = false, vertexLimit = 2)))
+    // a vertex with no in-edges gets exactly 1 - d
     val noIn = local.keySet -- pairs.map(_._2).toSet
     assert(noIn.contains(100L))
     noIn.foreach(v => assert(local(v) == 1.0 - 0.85, s"node $v"))
@@ -247,66 +222,25 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(local == rankMap(GraphAlgs.articleRankDF(e)), "must be bit-deterministic")
   }
 
-  test("articleRankDF: a null endpoint takes the distributed loop, unchanged") {
+  test("articleRankDF: a null endpoint is rejected on every route") {
     import spark.implicits._
-    // 1 -> 2, 2 -> 1, 2 -> 3, 3 -> null. Vertices {1, 2, 3, null}: V = 4,
-    // E = 4, avgDeg = 1, so denom(1) = 2, denom(2) = 3, denom(3) = 2. The
-    // null dst never joins a vertex, so null keeps 1 - d and 3's
-    // contribution is dropped:
-    //   r1 <- .15 + .85 * r2 / 3,  r2 <- .15 + .85 * r1 / 2,  r3 <- .15 + .85 * r2 / 3
-    val e = Seq((1L, Option(2L)), (2L, Option(1L)), (2L, Option(3L)), (3L, None))
+    // vertex 0 is real, so a null read as id 0 would merge into it silently
+    val nullDst = Seq((0L, Option(1L)), (1L, Option(0L)), (1L, Option(2L)), (2L, None))
       .toDF("src", "dst")
-    def ranks(df: DataFrame): Map[Option[Long], Double] =
-      df.collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getDouble(1)).toMap
-    def expected(iters: Int): Map[Option[Long], Double] = {
-      var r1 = 1.0
-      var r2 = 1.0
-      var r3 = 1.0
-      (1 to iters).foreach { _ =>
-        val (n1, n2, n3) = (0.15 + 0.85 * r2 / 3, 0.15 + 0.85 * r1 / 2, 0.15 + 0.85 * r2 / 3)
-        r1 = n1; r2 = n2; r3 = n3
-      }
-      Map(None -> 0.15, Some(1L) -> r1, Some(2L) -> r2, Some(3L) -> r3)
-    }
-    // superstep 1 by hand: r1 = r3 = .15 + .85 / 3, r2 = .15 + .85 / 2
-    assert(math.abs(expected(1)(Some(1L)) - 0.4333333333333333) < 1e-12)
-    assert(math.abs(expected(1)(Some(2L)) - 0.575) < 1e-12)
-    for (iters <- Seq(1, 20)) {
-      val got = ranks(GraphAlgs.articleRankDF(e, iters = iters))
-      assert(got == ranks(GraphAlgs.articleRankDF(e, iters = iters, driverLimit = 0)))
-      val want = expected(iters)
-      assert(got.keySet == want.keySet, got.toString)
-      want.foreach { case (k, v) =>
-        assert(math.abs(got(k) - v) < 1e-12, s"iters=$iters node $k: ${got(k)} vs $v")
+    val nullSrc = Seq((Option(0L), 1L), (Option(1L), 0L), (None, 0L)).toDF("src", "dst")
+    for ((e, column) <- Seq(nullDst -> "dst", nullSrc -> "src")) {
+      val routes = Seq(
+        ("driver-local", () => GraphAlgs.articleRankDF(e), column),
+        ("forced distributed", () => GraphAlgs.articleRankDF(e, driverLimit = 0), column),
+        ("pull", () => GraphAlgs.articleRankPull(e), column),
+        ("graphx fallback", () => GraphAlgs.articleRankPull(e, vertexLimit = 2), column),
+        // both directions are edges, so either column may hold the null
+        ("pull undirected", () => GraphAlgs.articleRankPull(e, undirected = true), "src or dst"))
+      for ((route, run, named) <- routes) {
+        val err = intercept[IllegalArgumentException](run().collect())
+        assert(err.getMessage.endsWith(s"edge column $named"), s"$route: ${err.getMessage}")
       }
     }
-  }
-
-  test("labelPropagation: two triangles joined by a bridge split into two communities") {
-    val g = GraphAlgs.buildGraph(
-      edgeDf(1L -> 2L, 2L -> 3L, 3L -> 1L, // triangle A
-             10L -> 11L, 11L -> 12L, 12L -> 10L, // triangle B
-             3L -> 10L), // bridge
-      "src", "dst")
-    val got = GraphAlgs.labelPropagation(g, iters = 10).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // triangle A vertices agree on a community; triangle B likewise
-    // (the bridge endpoints 3/10 may be pulled either way, hence <= 2)
-    assert(Set(got(1L), got(2L)).size == 1 || Set(got(1L), got(2L), got(3L)).size <= 2)
-    assert(got(10L) == got(11L) && got(11L) == got(12L) ||
-           Set(got(10L), got(11L), got(12L)).size <= 2)
-    // the split itself: the algorithm must NOT collapse everything into
-    // one community (the vacuous-pass the old assertions allowed), and
-    // the triangle interiors (farthest from the bridge) must disagree
-    assert(got.values.toSet.size >= 2, s"all one community: $got")
-    assert(got(1L) != got(12L), s"triangles collapsed across the bridge: $got")
-    // deterministic across runs
-    val again = GraphAlgs.labelPropagation(
-      GraphAlgs.buildGraph(
-        edgeDf(1L -> 2L, 2L -> 3L, 3L -> 1L, 10L -> 11L, 11L -> 12L,
-               12L -> 10L, 3L -> 10L), "src", "dst"),
-      iters = 10).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == again)
   }
 
   test("louvain: two 4-cliques joined by a bridge resolve to the two cliques") {
@@ -408,14 +342,5 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
         .collect().map(_.toString).toSeq
       assert(drv == dist, s"path divergence on ${edges.length} edges")
     }
-  }
-
-  test("pageRank: star center outranks leaves") {
-    val g = GraphAlgs.buildGraph(
-      edgeDf(0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 4L), "src", "dst",
-      undirected = true)
-    val r = GraphAlgs.pageRank(g, iters = 20).collect()
-      .map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    assert((1L to 4L).forall(l => r(0L) > r(l)))
   }
 }
