@@ -12,7 +12,7 @@ import graft.sim.SimilarityJoin
   * deterministic distributed pipeline:
   *
   *   token blocking → pairwise similarity scoring → threshold →
-  *   GraphX connected components → cluster ids → best-label election →
+  *   connected components → cluster ids → best-label election →
   *   edge weights
   *
   * The reference's learned blocking + logistic scoring is stochastic;
@@ -23,8 +23,9 @@ import graft.sim.SimilarityJoin
   *
   * Scale: blocking is an inverted-index self-join (no cross join);
   * scoring runs only on blocked candidates; the transitive closure is
-  * GraphX CC (O(E) per iteration, log-ish rounds) — each stage is a
-  * bounded shuffle.
+  * [[GraphAlgs.connectedComponents]] — a driver union-find over the
+  * thresholded edges up to its driver limit, GraphX CC (O(E) per
+  * iteration, log-ish rounds) above it — each stage is a bounded shuffle.
   */
 object EntityResolution {
 
@@ -456,9 +457,12 @@ object EntityResolution {
 
   /** Cluster ids from thresholded pair edges via connected components;
     * singletons keep their own id as cluster. Per-type thresholds like the
-    * reference's c44 map. `scorer` defaults to the deterministic
-    * threshold features; pass a trained logistic model to score with
-    * P(match) instead (the learned J7 variant).
+    * reference's c44 map. The block+score plan runs once, inside
+    * [[GraphAlgs.connectedComponents]]'s edge probe; when no pair passes
+    * the threshold it yields no components and every label stays a
+    * singleton. `scorer` defaults to the deterministic threshold
+    * features; pass a trained logistic model to score with P(match)
+    * instead (the learned J7 variant).
     */
   def cluster(labels: DataFrame, thresholds: Map[String, Double],
               defaultThreshold: Double = 0.6,
@@ -478,10 +482,7 @@ object EntityResolution {
     }
     val edges = pairs.filter(col("score") >= thr)
       .select(col("id_a"), col("id_b"))
-    val comp =
-      if (edges.isEmpty) labels.select(col("id").as("node_id"), col("id").as("component"))
-      else GraphAlgs.connectedComponents(
-        GraphAlgs.buildGraph(edges, "id_a", "id_b"))
+    val comp = GraphAlgs.connectedComponents(edges, "id_a", "id_b")
     labels.join(comp, labels("id") === comp("node_id"), "left")
       .select(col("id"), col("label"), col("type"),
         coalesce(col("component"), col("id")).as("cluster_id"))
@@ -574,30 +575,14 @@ object EntityResolution {
             coalesce(col("cb"), col("id_b")).as("id_b"))
       })
       // the contracted band is component-granular — orders of magnitude
-      // smaller than the corpus — so up to `driverCcLimit` edges the
-      // transitive closure is a driver union-find, and ONE limit-probe
-      // collect both fetches the edges and decides the path (a separate
-      // count would cost a whole extra job per threshold; the fixed
-      // per-job cost, not data, dominates this profiling loop). Beyond
-      // the limit: distributed CC, sized to the band. Both keep
-      // root = min member id, so the running assignment stays
-      // label-identical either way.
-      val probe = m.limit(driverCcLimit + 1).collect()
-      var mCached: Option[DataFrame] = None
-      if (probe.nonEmpty) {
-        val merged = (if (probe.length <= driverCcLimit) {
-          // ONE union-find definition repo-wide (GraphAlgs.unionFindMin,
-          // r10 review finding): the sweep's "identical to from-scratch
-          // CC" invariant depends on root = min reachable id, and a
-          // hand-copy here could silently drift from the shared one
-          GraphAlgs.unionFindMin(Iterator.empty,
-              probe.iterator.map(r => (r.getLong(0), r.getLong(1))))
-            .toSeq.toDF("node_id", "component")
-        } else {
-          val mC = m.cache()
-          mCached = Some(mC)
-          GraphAlgs.connectedComponentsSized(mC, "id_a", "id_b", mC.count())
-        }).select(col("node_id").as("cnode"), col("component").as("root"))
+      // smaller than the corpus — so the sweep closes up to
+      // `driverCcLimit` band edges on the driver (one probe collect per
+      // threshold: the fixed per-job cost, not data, dominates this
+      // profiling loop). Either path keeps root = min member id, so the
+      // running assignment stays label-identical.
+      val cc = GraphAlgs.connectedComponents(m, "id_a", "id_b", driverCcLimit)
+      if (!cc.isEmpty) {
+        val merged = cc.select(col("node_id").as("cnode"), col("component").as("root"))
         val next = (comp match {
           case None => merged.select(col("cnode").as("node_id"), col("root").as("component"))
           case Some(c) =>
@@ -615,7 +600,6 @@ object EntityResolution {
         }).localCheckpoint(true)
         comp.foreach(_.unpersist(blocking = false))
         comp = Some(next)
-        mCached.foreach(_.unpersist(blocking = false)) // next materialized
         // the assignment changed: recompute the per-type stats
         lastStats = comp match {
           case None => Map.empty

@@ -26,25 +26,26 @@ object GraphAlgs {
     * driver replay is milliseconds and produces IDENTICAL labels (see
     * [[louvainLocal]] / the union-find in [[connectedComponents]]).
     * The hybrids: Louvain ([[louvainDF]], [[louvainUnd]]), connected
-    * components ([[connectedComponents]], [[connectedComponentsUnd]]),
-    * [[GraphQueries.triangleStats]] and ArticleRank ([[articleRankDF]]:
-    * above the limit it runs [[articleRankPull]], whose ranks agree with
-    * the driver path to float-summation noise).
+    * components ([[connectedComponents]] — the entry of ER's `cluster`,
+    * the d06/d13/d16 near-dup closures and g03 — and
+    * [[connectedComponentsUnd]]), [[GraphQueries.triangleStats]] and
+    * ArticleRank ([[articleRankDF]]: above the limit it runs
+    * [[articleRankPull]], whose ranks agree with the driver path to
+    * float-summation noise).
     * 200k edge rows ≈ a few MB collected — far below driver pressure —
     * while any corpus-proportional graph sails past it onto the
-    * distributed path, exactly the [[graft.er.EntityResolution]]
-    * driverCcLimit hybrid. Tests pin local/distributed agreement by
-    * forcing the limit to 0.
+    * distributed path. The [[graft.er.EntityResolution]] elbow sweep
+    * calls [[connectedComponents]] with its own, larger driverCcLimit.
+    * Tests pin local/distributed agreement by forcing the limit to 0.
     */
   val DefaultDriverGraphLimit: Int = 200000
 
   /** Driver union-find over an edge array: component = min reachable id,
     * the same label [[org.apache.spark.graphx.lib.ConnectedComponents]]
     * converges to (roots merge toward the smaller id, so the final root
-    * of every set is its minimum). `verts` seeds isolated vertices.
+    * of every set is its minimum).
     */
-  private[graft] def unionFindMin(verts: Iterator[Long],
-                                  edges: Iterator[(Long, Long)]): Map[Long, Long] = {
+  private[graft] def unionFindMin(edges: Iterator[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -53,7 +54,6 @@ object GraphAlgs {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    verts.foreach(v => parent.getOrElseUpdate(v, v))
     edges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
@@ -532,45 +532,33 @@ object GraphAlgs {
       .toDF("node_id", "rank")
   }
 
-  /** Connected components (GraphX built-in: component id = min vertex id
-    * reachable — matches a min-label-propagation oracle).
+  /** Connected components of a (src, dst) edge DataFrame, direction
+    * ignored: component = min reachable vertex id (the label GraphX CC
+    * converges to — matches a min-label-propagation oracle). Vertices are
+    * the edges' endpoints, so an empty frame yields no rows.
+    *
+    * ONE `limit(driverLimit + 1)` collect both fetches the edges and
+    * picks the path, so the edge plan runs once on the driver path: at
+    * or under `driverLimit` edge rows the edges close through the driver
+    * union-find ([[unionFindMin]]); above it they are cached and counted,
+    * [[connectedComponentsSized]] runs over them, and its result is
+    * materialized before the edge cache is released.
     */
-  def connectedComponents(g: Graph[Unit, Unit],
+  def connectedComponents(edges: DataFrame, src: String, dst: String,
                           driverLimit: Int = DefaultDriverGraphLimit): DataFrame = {
-    val spark = SparkSession.active
+    val spark = edges.sparkSession
     import spark.implicits._
-    if (driverLimit > 0) {
-      // limit-probe decides the path AND fetches the edges (the
-      // EntityResolution driverCcLimit shape): union-find labels are
-      // min-reachable-id, identical to GraphX CC, and direction is
-      // irrelevant to a union
-      val probe = g.edges.take(driverLimit + 1)
-      if (probe.length <= driverLimit) {
-        // vertex seed: fromEdges-built graphs derive vertices from edge
-        // endpoints (already in the probe), but a caller-constructed
-        // Graph may carry edgeless vertices. The vertex side needs its
-        // own bound — few edges does NOT imply few vertices for a
-        // caller-constructed Graph — so probe it too (2*driverLimit+1
-        // covers the fromEdges case where |V| <= 2|E|) and fall through
-        // to the distributed path if it overflows.
-        val vProbe = g.vertices.map(_._1).take(2 * driverLimit + 2)
-        if (vProbe.length <= 2 * driverLimit + 1) {
-          val comp = unionFindMin(
-            vProbe.iterator,
-            probe.iterator.map(e => (e.srcId, e.dstId)))
-          return comp.toSeq.toDF("node_id", "component")
-        }
-      }
+    val pairs = edges.select(col(src).cast("long").as("src"),
+      col(dst).cast("long").as("dst"))
+    val probe = pairs.limit(driverLimit + 1).collect()
+    if (probe.length <= driverLimit)
+      unionFindMin(probe.iterator.map(r => (r.getLong(0), r.getLong(1))))
+        .toSeq.toDF("node_id", "component")
+    else {
+      val cached = pairs.cache()
+      try connectedComponentsSized(cached, "src", "dst", cached.count()).localCheckpoint()
+      finally cached.unpersist(blocking = false)
     }
-    // keep g.vertices: fromEdges would derive the vertex set from edge
-    // endpoints only, silently dropping caller-supplied isolated vertices
-    // on exactly the overflow path the vProbe fall-through above exists
-    // for (r10 review finding) — the driver path labels them, so the
-    // distributed path must too
-    val sym = Graph(g.vertices,
-      g.edges.flatMap(e => Iterator(e, Edge(e.dstId, e.srcId, e.attr))), ())
-    sym.connectedComponents().vertices
-      .map { case (id, comp) => (id, comp) }.toDF("node_id", "component")
   }
 
   /** Connected components over an ALREADY-SYMMETRIZED (src, dst) edge
@@ -588,8 +576,7 @@ object GraphAlgs {
       val probe = und.select(col("src").cast("long"), col("dst").cast("long"))
         .limit(driverLimit + 1).collect()
       if (probe.length <= driverLimit) {
-        val comp = unionFindMin(Iterator.empty,
-          probe.iterator.map(r => (r.getLong(0), r.getLong(1))))
+        val comp = unionFindMin(probe.iterator.map(r => (r.getLong(0), r.getLong(1))))
         return comp.toSeq.toDF("node_id", "component")
       }
     }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 
+import graft.FanOut
 import graft.sources.Csv
 
 /** K6: the engine/graph-store boundary — the final node/edge tables as a
@@ -16,16 +17,22 @@ import graft.sources.Csv
 object GraphExport {
   /** Write each named table to `outDir/<name>` as header CSV. Returns
     * per-table row counts (the count is observed from the written data —
-    * an export-completeness check, not a separate recompute).
+    * an export-completeness check, not a separate recompute). The tables
+    * are independent, so each table's write and read-back run as one
+    * thunk of [[FanOut.inParallel]]: their jobs overlap, and a table that
+    * fails cancels the others' jobs before its error is rethrown.
     */
   def writeAll(tables: Map[String, DataFrame], outDir: String,
-               quoteAll: Boolean = true, shards: Int = 1): Map[String, Long] =
-    tables.map { case (name, df) =>
+               quoteAll: Boolean = true, shards: Int = 1): Map[String, Long] = {
+    val named = tables.toSeq
+    val counts = FanOut.inParallel(named.map { case (name, df) => () =>
       val path = s"$outDir/$name"
       Csv.write(df, path, quoteAll = quoteAll, shards = shards)
       // Csv.read is the documented mirror of Csv.write's quote/escape
       // convention — reading back through it keeps the completeness count
       // valid if that convention ever changes
-      name -> Csv.read(df.sparkSession, path).count()
-    }
+      Csv.read(df.sparkSession, path).count()
+    })
+    named.map(_._1).zip(counts).toMap
+  }
 }

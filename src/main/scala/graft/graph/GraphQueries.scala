@@ -71,15 +71,15 @@ object GraphQueries {
       FROM e x JOIN e y ON x.b = y.b AND x.a < y.a
       GROUP BY x.a, y.a ORDER BY cust_a, cust_b"""))
 
-  /** GraphX connected components vs a recursive min-label-propagation SQL
-    * oracle (both define component = min reachable node id).
+  /** [[GraphAlgs.connectedComponents]] vs a recursive min-label-propagation
+    * SQL oracle (both define component = min reachable node id).
     */
   val g03 = QueryDef(
     "g03_connected_components",
     "GraphX CC on sparsified graph vs recursive-SQL min-label oracle",
     (s, dir) => {
-      val g = GraphAlgs.buildGraph(edges(s, dir, filtered = true), "a", "b")
-      GraphAlgs.connectedComponents(g).orderBy(col("node_id"))
+      GraphAlgs.connectedComponents(edges(s, dir, filtered = true), "a", "b")
+        .orderBy(col("node_id"))
     },
     Some("""WITH RECURSIVE
       edges AS (SELECT DISTINCT o_custkey*2 AS a, l_suppkey*2+1 AS b

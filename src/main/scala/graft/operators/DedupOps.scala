@@ -832,9 +832,10 @@ object DedupOps {
     * keep-list is `doc_id == canonical_id`; everything else drops.
     *
     * Scale shape: pairs come from the LSH join (never quadratic), the
-    * closure is GraphX CC over |pairs| edges (log-ish rounds of bounded
-    * shuffles), and the final map is one left join against the corpus
-    * keyed by doc_id. The oracle replays the same minhash chain in SQL
+    * closure is [[graft.graph.GraphAlgs.connectedComponents]] over
+    * |pairs| edges (a driver union-find up to its driver limit, GraphX
+    * CC's log-ish rounds of bounded shuffles above it), and the final map
+    * is one left join against the corpus keyed by doc_id. The oracle replays the same minhash chain in SQL
     * and closes it with the recursive min-label CTE used by g03.
     */
   /** d06 core, reused by d13: the total (doc_id → canonical_id) map from
@@ -843,8 +844,7 @@ object DedupOps {
     */
   private[graft] def canonicalMap(docs: DataFrame): DataFrame = {
     val pairs = minhashLshPairs(docs).select(col("doc_a"), col("doc_b"))
-    val comp = graft.graph.GraphAlgs.connectedComponents(
-      graft.graph.GraphAlgs.buildGraph(pairs, "doc_a", "doc_b"))
+    val comp = graft.graph.GraphAlgs.connectedComponents(pairs, "doc_a", "doc_b")
     docs.select(col("doc_id")).distinct()
       .join(comp, col("doc_id") === col("node_id"), "left")
       .select(col("doc_id"),

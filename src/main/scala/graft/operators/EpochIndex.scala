@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.QueryDef
+import graft.{FanOut, QueryDef}
 
 /** Per-epoch IVF-PQ index family — the rung ABOVE the monolithic
   * maintenance ladder (append → rebalance → retrain), for the regime
@@ -53,29 +53,6 @@ import graft.QueryDef
   */
 object EpochIndex {
   def epochLoc(root: String, epoch: String): String = s"$root/epoch-$epoch"
-
-  /** Run independent thunks as CONCURRENT Spark jobs (optimization guide
-    * §2.6 "overlap independent jobs"): actions are only sequential
-    * because driver code calls them sequentially, and per-epoch work —
-    * two parity builds, K independent query legs — is embarrassingly
-    * independent, so later jobs' tasks back-fill executors idled by the
-    * current job's tail. Results come back in input order (deterministic
-    * for every consumer); the pool is daemon + bounded and always shut
-    * down. Single-element input short-circuits to a plain call.
-    */
-  private[operators] def inParallel[A](fs: Seq[() => A]): Seq[A] =
-    if (fs.size <= 1) fs.map(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(fs.size, 8),
-        (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = fs.map(f => scala.concurrent.Future(f()))
-      try futs.map(scala.concurrent.Await.result(_,
-        scala.concurrent.duration.Duration.Inf))
-      finally pool.shutdown()
-    }
 
   private def fs(s: SparkSession, path: String) =
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -266,7 +243,7 @@ object EpochIndex {
         val qRows = e.filter(col("vec_id") < 5)
           .select(col("vec_id"), col("emb")).collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-        inParallel(eps.map(name => () => IndexStore.ivfPqRefinedFromIndex(
+        FanOut.inParallel(eps.map(name => () => IndexStore.ivfPqRefinedFromIndex(
           s, dir, epochLoc(root, name), nProbes, topK, refineFactor,
           ownEmbCache = false, qPanel = Some(qRows))))
       } finally e.unpersist(blocking = false)
@@ -522,7 +499,7 @@ object EpochIndex {
     * cached [[AnnOps.embTable]] so both builds read one fill.
     */
   private def ingestParityEpochs(e: DataFrame, root: String): Unit = {
-    inParallel(Seq(
+    FanOut.inParallel(Seq(
       () => ingest(e.filter(col("vec_id") >= 5 && pmod(col("vec_id"), lit(2)) === 0),
         root, "even"),
       () => ingest(e.filter(col("vec_id") >= 5 && pmod(col("vec_id"), lit(2)) === 1),

@@ -211,8 +211,7 @@ object CorpusPipeline {
     val pairs = DedupOps
       .minhashLshPairsFromArrs(sharedArrs, cfg.nearDupMinJac)
       .select(col("doc_a"), col("doc_b"))
-    val comp = graft.graph.GraphAlgs.connectedComponents(
-      graft.graph.GraphAlgs.buildGraph(pairs, "doc_a", "doc_b"))
+    val comp = graft.graph.GraphAlgs.connectedComponents(pairs, "doc_a", "doc_b")
     val cm = docs.select(col("doc_id")).distinct()
       .join(comp, col("doc_id") === col("node_id"), "left")
       .select(col("doc_id"),

@@ -89,8 +89,7 @@ object ErPhaseProbe {
           .filter(col("score") >= 0.6).count()
       }
       val (tCc, nClusters) = secs {
-        GraphAlgs.connectedComponents(
-            GraphAlgs.buildGraph(edges, "id_a", "id_b"))
+        GraphAlgs.connectedComponents(edges, "id_a", "id_b")
           .select(col("component")).distinct().count()
       }
       blocked.unpersist(blocking = true)

@@ -37,36 +37,63 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
     }
   }
 
+  private def ccMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("connectedComponents: two components get min-id labels") {
     // component {1,2,3} (chain) and {10,11}
-    val g = GraphAlgs.buildGraph(edgeDf(1L -> 2L, 2L -> 3L, 10L -> 11L), "src", "dst")
-    val got = GraphAlgs.connectedComponents(g).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = ccMap(GraphAlgs.connectedComponents(
+      edgeDf(1L -> 2L, 2L -> 3L, 10L -> 11L), "src", "dst"))
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("connectedComponentsSized matches connectedComponents (elbow-sweep distributed path)") {
     // the elbow sweep's beyond-driver-cap fallback: directed pairs in,
     // symmetrized internally, edge-proportional partitioning — labels
-    // must be the same min-member ids the GraphX path produces
+    // must be the same min-member ids the driver path produces
     val e = edgeDf(1L -> 2L, 2L -> 3L, 10L -> 11L, 7L -> 3L, 20L -> 20L)
-    val viaSized = GraphAlgs.connectedComponentsSized(e, "src", "dst", 5L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaGraph = GraphAlgs.connectedComponents(
-      GraphAlgs.buildGraph(e, "src", "dst")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaSized == viaGraph)
+    val viaSized = ccMap(GraphAlgs.connectedComponentsSized(e, "src", "dst", 5L))
+    val viaEntry = ccMap(GraphAlgs.connectedComponents(e, "src", "dst"))
+    assert(viaSized == viaEntry)
     assert(viaSized(7L) == 1L && viaSized(11L) == 10L && viaSized(20L) == 20L)
   }
 
   test("connectedComponents: forced distributed path matches the driver union-find") {
     val e = edgeDf(1L -> 2L, 2L -> 3L, 10L -> 11L, 7L -> 3L, 20L -> 20L)
-    val g = GraphAlgs.buildGraph(e, "src", "dst")
-    val local = GraphAlgs.connectedComponents(g).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = GraphAlgs.connectedComponents(g, driverLimit = 0).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val local = ccMap(GraphAlgs.connectedComponents(e, "src", "dst"))
+    val dist = ccMap(GraphAlgs.connectedComponents(e, "src", "dst", driverLimit = 0))
     assert(local == dist)
+  }
+
+  test("connectedComponents: an empty edge frame has no rows on either path") {
+    val empty = edgeDf()
+    assert(GraphAlgs.connectedComponents(empty, "src", "dst").isEmpty)
+    assert(GraphAlgs.connectedComponents(empty, "src", "dst", driverLimit = 0).isEmpty)
+  }
+
+  test("connectedComponents: duplicate edges and self-loops agree across the two paths") {
+    val e = edgeDf(1L -> 2L, 1L -> 2L, 2L -> 1L, 5L -> 5L, 5L -> 6L, 9L -> 9L, 6L -> 5L)
+    val want = Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L)
+    assert(ccMap(GraphAlgs.connectedComponents(e, "src", "dst")) == want)
+    assert(ccMap(GraphAlgs.connectedComponents(e, "src", "dst", driverLimit = 0)) == want)
+  }
+
+  test("connectedComponents: below the driver limit the edge plan runs once") {
+    import spark.implicits._
+    val edges = (0L until 60L).map(i => (i, (i * 7) % 60))
+    val runs = spark.sparkContext.longAccumulator("edge rows")
+    // behind a shuffle, like ER's scored edges: any action re-runs the
+    // whole map side, however few rows it takes
+    val counted = spark.sparkContext.parallelize(edges, 3)
+      .map { p => runs.add(1); p }.toDF("src", "dst").repartition(2)
+    GraphAlgs.connectedComponents(counted, "src", "dst").collect()
+    assert(runs.value == edges.size)
+    // the accumulator does see a second run: an emptiness probe before a
+    // GraphX edge probe (the shape ER's cluster had) reads every row twice
+    runs.reset()
+    assert(!counted.isEmpty)
+    GraphAlgs.buildGraph(counted, "src", "dst").edges.take(GraphAlgs.DefaultDriverGraphLimit + 1)
+    assert(runs.value >= 2L * edges.size)
   }
 
   test("louvain: forced distributed path is label-identical to the driver replay") {
