@@ -246,8 +246,8 @@ object Bench {
     val designedComparator = Map(
       "d04_embed_dup" -> "d20_embed_dup_guarded",
       "st10_stream_decontam" -> "st11_stream_decontam_fixed",
-      "d11_semantic_dedup" -> "semanticDedupTrained k~sqrt(N) (measured: tools/SemDedupScale)",
-      "t23_curate_learned" -> "curateLearnedScalable approx_percentile (measured: tools/CurateBench)")
+      "d11_semantic_dedup" -> "semanticDedupTrained k~sqrt(N) (measured: BENCH_100x_full.json)",
+      "t23_curate_learned" -> "curateLearnedScalable approx_percentile (measured: BENCH_100x.json)")
 
     // non-finite guard (r16 ADVICE): a NaN/Infinity anywhere — e.g. a
     // forced-refloor gate erroring into a non-finite floor — would emit

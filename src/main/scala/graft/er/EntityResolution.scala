@@ -120,39 +120,6 @@ object EntityResolution {
     if (dropPureDigit) keys.filter(!col("tok").rlike("^[0-9]+$")) else keys
   }
 
-  /** Probe-facing decomposition of [[blockPairs]]'s candidate volume by
-    * blocking-key FAMILY — (family, pairs) rows for `word` (plural-folded
-    * token channel), `gram` (char-3-gram channel), `gram_digit`
-    * (pairs discoverable through a digit-bearing 3-gram alone), and
-    * `gram_pure_digit` (through a pure-digit gram alone — the
-    * `dropPureDigitGrams` target population): the
-    * attribution tool for candidate-curve shifts. The cap is applied per
-    * channel over the FULL key population (exactly as [[blockPairs]]
-    * applies it) before any family filter, so each count is "what this
-    * family contributes under production capping"; families overlap, so
-    * the rows do not sum to the distinct union [[blockPairs]] emits.
-    */
-  private[graft] def blockPairsByFamily(labels: DataFrame,
-      gramDfCap: Int = 1000,
-      dropPureDigitGrams: Boolean = false): Seq[(String, Long)] = {
-    val words = capHotKeys(wordKeys(labels), gramDfCap)
-    val grams = capHotKeys(gramKeys(labels, dropPureDigitGrams), gramDfCap)
-    Seq(
-      "word" -> blockSelfJoin(words).distinct().count(),
-      "gram" -> blockSelfJoin(grams).distinct().count(),
-      "gram_digit" -> blockSelfJoin(
-        grams.filter(col("tok").rlike("[0-9]"))).distinct().count(),
-      // pairs discoverable through a PURE-digit gram alone — exactly the
-      // population `dropPureDigitGrams` removes (0 rows with it on)
-      "gram_pure_digit" -> blockSelfJoin(
-        grams.filter(col("tok").rlike("^[0-9]+$"))).distinct().count(),
-      // digit-BEARING but not pure ("y12") — the version-number recall
-      // hook the policy keeps, and the post-policy attribution candidate
-      "gram_digit_boundary" -> blockSelfJoin(
-        grams.filter(col("tok").rlike("[0-9]") &&
-          !col("tok").rlike("^[0-9]+$"))).distinct().count())
-  }
-
   /** Per-corpus `dropPureDigitGrams` opt-out ADVISORY (r16 VERDICT Next
     * #4 — the `maintainEpoch` advisory pattern applied to blocking): the
     * policy's measured boundary of applicability is "does entity

@@ -312,21 +312,6 @@ object GraphQueries {
       }
     }
 
-  /** The weighted-edge construction exactly as [[computeFusedStats]]
-    * builds it (uncached) — exposed for plan capture only (r18 VERDICT
-    * Next #8: verify the construction scan prunes columns at the source).
-    */
-  private[graft] def edgeBuildProbe(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "orders")
-      .join(Tables.load(s, dir, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey"), col("l_suppkey"), col("l_quantity"),
-        col("l_shipdate"))
-      .filter(col("l_quantity") === 1 && month(col("l_shipdate")) === 1)
-      .groupBy((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .agg(count(lit(1)).cast("long").as("weight"))
-
   /** One edge build, one Louvain, one CC, THREE scalar jobs (VERDICT r6
     * item 5 — the per-invariant actions used to be ~6 separate jobs):
     *   1. validity/counts/refinement aggregate over the full-outer

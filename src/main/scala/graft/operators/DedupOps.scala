@@ -407,8 +407,7 @@ object DedupOps {
     * self-join's pair work is Θ(nBands · N²/2^perBand) — at growing N,
     * widen perBand ≈ log2(N / target_bucket) to hold bucket sizes flat
     * (recall per band drops, so nBands rises with it: the standard
-    * LSH band/width trade, measurable per-corpus with
-    * [[graft.tools.BandProbe]] — BENCH_BANDS.json carries the measured
+    * LSH band/width trade — BENCH_BANDS.json carries the measured
     * curve on the committed corpus plus the theory cross-check:
     * per-band collision is (1 − acos(s)/π)^perBand, so wide bands pay
     * off exactly when the threshold is high, the production text-dedup

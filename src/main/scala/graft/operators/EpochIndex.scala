@@ -136,9 +136,10 @@ object EpochIndex {
   def refreshEpochs(root: String): Unit = knownEpochs.remove(root)
 
   /** The query fan-out's epoch resolution, exposed for deployer
-    * introspection and measurement (ReadConcurrencyBench `epoch_resolve`
-    * leg: warm stays flat as epochs grow; cold pays the LIST plus one
-    * manifest resolve per epoch). `maxStaleMs` as in [[searchTopK]].
+    * introspection and measurement (BENCH_INDEX.json
+    * `read_concurrency.epoch_resolve`: warm stays flat as epochs grow;
+    * cold pays the LIST plus one manifest resolve per epoch).
+    * `maxStaleMs` as in [[searchTopK]].
     */
   def resolveEpochs(s: SparkSession, root: String,
       maxStaleMs: Long = -1L): Seq[String] =
@@ -216,8 +217,7 @@ object EpochIndex {
     * deployer cannot refresh: -1 (default) = never re-LIST once warm
     * (the refresh/explicit-set contract), N ≥ 0 = a cross-process epoch
     * cut joins this reader's fan-out within N ms, at one amortized LIST
-    * per window (measured flat at a 60 s bound — ReadConcurrencyBench
-    * `epoch_resolve.warm_ttl_us`).
+    * per window.
     */
   def searchTopK(s: SparkSession, dir: String, root: String,
       nProbes: Int = 4, topK: Int = 10, refineFactor: Int = 8,
@@ -291,8 +291,8 @@ object EpochIndex {
     * The skip bound is a HEURISTIC, not a proof — a cell can contain
     * members closer to the query than its centroid by up to the cell's
     * angular radius, which is why the knob ships opt-in with a
-    * recall-parity A/B measured per DriftProbe run
-    * (`epoch_query_pruned_sec` / `recall_epoch_split_pruned` /
+    * recall-parity A/B (BENCH_INDEX.json drift sections:
+    * `epoch_query_pruned_sec` / `recall_epoch_split_pruned` /
     * `epochs_visited` next to the full fan-out's columns). Returns the
     * merged top-k plus the visited epoch names (the prune audit).
     *
@@ -305,8 +305,7 @@ object EpochIndex {
     * over the prefetched prefix is ~max, not sum. A prefetched leg is
     * unconditionally visited, so the visited set is a SUPERSET of the
     * serial prune's (recall can only match or improve); the merge is
-    * unchanged. Measured per DriftProbe run as `epoch_query_pruned2_sec`
-    * / `epochs_visited2` beside the serial columns.
+    * unchanged.
     */
   def searchTopKPruned(s: SparkSession, dir: String, root: String,
       nProbes: Int = 4, topK: Int = 10, refineFactor: Int = 8,
@@ -324,7 +323,7 @@ object EpochIndex {
     // under a caller's handle forced every leg to re-cache it. As of
     // r17 the legs run with ownEmbCache = false for the same reason,
     // so the fill is paid ONCE per call; the caller that created the
-    // embTable handle (the a16 gate, DriftProbe) releases it.
+    // embTable handle (the a16 gate) releases it.
     // per-epoch best coarse-centroid cosine per query: one broadcast-
     // shaped comparison, computed driver-side (the tables are tiny)
     val best: Map[String, Map[Long, Double]] = eps.map { name =>
@@ -449,8 +448,7 @@ object EpochIndex {
     * `dir`, not the epoch), so it is computed ONCE here, cached, and
     * passed to every per-epoch probe — per-epoch probe cost drops to
     * one refined search + one tiny join instead of a brute-force corpus
-    * scan each (measured: ReadConcurrencyBench `epoch_sweep`, shared vs
-    * per-call at 4/16 epochs). `maxProbesPerTick` bounds the expensive
+    * scan each. `maxProbesPerTick` bounds the expensive
     * term per tick: only that many epochs (rotating deterministically by
     * `tick`, natural order) get the probe rungs this call, the rest
     * return "skipped"; every epoch is probed within ceil(K/max) ticks.

@@ -113,8 +113,8 @@ object RetrievalOps {
   }
 
   /** Byte threshold above which the doclen side of the scoring join is
-    * Bloom-pruned (r18, guide §3.2). System property first so focused
-    * tests/probes can force the path, env for deployments, default
+    * Bloom-pruned (r18, guide §3.2). The `spark.graft.bm25.dlBloomBytes`
+    * system property lets focused tests force the path; the default is
     * 256 MB: far above any gate SF (sf0.1's whole doclen table is < 1 MB,
     * so the driver bench's plans are byte-identical to r17's), and about
     * the point where the dl side stops broadcasting and would otherwise
@@ -122,7 +122,6 @@ object RetrievalOps {
     */
   private[operators] def dlBloomBytes: Long =
     sys.props.get("spark.graft.bm25.dlBloomBytes")
-      .orElse(sys.env.get("SPARK_GRAFT_BM25_DL_BLOOM_BYTES"))
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(256L << 20)
 

@@ -22,8 +22,9 @@ import org.apache.spark.sql.functions._
   * scalar + narrow merge map), which computes the identical merge
   * sequence (forced-path parity pinned in BpeTrainerSpec).
   *
-  * PATH DECISION at real merge counts (r9 VERDICT item 5, measured by
-  * tools/BpeBench on a 50k-word Zipf vocabulary): the incremental driver
+  * PATH DECISION at real merge counts (r9 VERDICT item 5, measured on a
+  * 50k-word Zipf vocabulary; BENCH_10x_r11.json `tokenize_at_scale`
+  * holds the round-11 readings): the incremental driver
   * loop trains 1k merges in ~11 s and 4k in ~4 s more (vs the naive
   * full-recount loop's 75 s / 276 s), while the distributed loop costs
   * ~1 s PER MERGE in job dispatch (~66 s for 64 merges at sf0.1) —
@@ -96,7 +97,8 @@ object BpeTrainer {
     * filtered by an adjacency re-check). Identical (max count, then
     * lexicographically smallest pair) total order as the naive and
     * distributed loops — BpeTrainerSpec pins all three path-parities, and
-    * BpeBench carries the ≥1k-merge measurement behind the path decision.
+    * BENCH_10x_r11.json carries the ≥1k-merge measurement behind the path
+    * decision.
     */
   private[graft] def trainLocalIncremental(
       vocab0: Array[(Array[String], Long)],

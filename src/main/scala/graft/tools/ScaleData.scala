@@ -65,7 +65,7 @@ object ScaleData {
     "event_id" -> "events", "user_id" -> "events",
     "doc_id" -> "documents", "vec_id" -> "embeddings")
 
-  def scaleTable(spark: SparkSession, srcDir: String, name: String,
+  private def scaleTable(spark: SparkSession, srcDir: String, name: String,
                  copies: Int, strides: String => Long): DataFrame = {
     val base = Tables.load(spark, srcDir, name)
     if (name == "region" || name == "nation") return base

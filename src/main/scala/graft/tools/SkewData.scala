@@ -40,7 +40,7 @@ object SkewData {
       "world wide web available today in your region"
 
   /** 8 tokens → 6 hot 3-shingles at df ≈ 0.4·N. */
-  val boilerPrefix: String =
+  private val boilerPrefix: String =
     "all rights reserved terms of service apply everywhere"
 
   def main(args: Array[String]): Unit = {

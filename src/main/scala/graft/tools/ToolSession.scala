@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 import graft.Tables
 
-/** The ONE local-session builder for every dev/rehearsal driver in
-  * `graft.tools` (BpeBench, GuardFlip, PipelineBench, Profile, ScaleData,
-  * TwinBench). Each used to inline the identical six-line incantation —
+/** The ONE local-session builder for the driver-contract mains (Verify,
+  * Bench, CyberPipeline) and the `graft.tools` drivers (PipelineBench,
+  * RepeatCheck, ScaleData, SkewData, StreamBatchBench). Each used to
+  * inline the identical six-line incantation —
   * requiredConf fold, `SPARK_GRAFT_CPUS` master, 32 shuffle partitions,
   * UTC session timezone, UI off — and the copies had already started to
   * drift (one missing the UTC pin, one hardcoding the core count). A
@@ -18,7 +19,7 @@ object ToolSession {
     * (the driver-contract mains' convention — Verify/Bench/CyberPipeline
     * run narrow local sessions where 32-wide shuffles just add overhead).
     */
-  def local(logLevel: String = "WARN", defaultCpus: String = "32",
+  def local(defaultCpus: String = "32",
             shuffleFromCpus: Boolean = false): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = Tables.requiredConf.foldLeft(SparkSession.builder()
@@ -27,7 +28,7 @@ object ToolSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel(logLevel)
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 }

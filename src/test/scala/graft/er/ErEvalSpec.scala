@@ -302,10 +302,30 @@ class ErEvalSpec extends AnyFunSuite with graft.SparkTestSession {
       "fixture exercised no pruning — every pair's bound cleared the threshold")
   }
 
+  /** Hostile blocking vocabulary: 1218·scale entities × 3 spelling
+    * variants ("EntityN Corp" / "EntityN Corp inc" / "EntityN Corps")
+    * across the 4 NER types — 3,654 labels per unit scale, the
+    * reference's label count. Deterministic, seedless.
+    */
+  private def loadLabels(scale: Int): DataFrame = {
+    val types = Seq("ORG", "GPE", "PERSON", "PRODUCT")
+    val nEnts = 1218 * scale
+    spark.range(0, nEnts.toLong * 3)
+      .select(col("id"),
+        (col("id") / 3).cast("long").as("ent"),
+        pmod(col("id"), lit(3)).as("v"))
+      .select(col("id"),
+        concat(lit("Entity"), col("ent"),
+          element_at(array(lit(" Corp"), lit(" Corp inc"), lit(" Corps")),
+            (col("v") + 1).cast("int"))).as("label"),
+        element_at(typedLit(types), (pmod(col("ent"), lit(4)) + 1).cast("int"))
+          .as("type"))
+  }
+
   test("blockPairs: gramDfCap keeps the candidate curve sub-quadratic in labels") {
-    // The r12-VERDICT load pin at fixture scale (tools.ErLoadProbe
-    // measures the same curve at 1x/10x/100x the reference's 3.6k
-    // labels): the ErLoadProbe vocabulary shape — 3 variants per entity,
+    // The r12-VERDICT load pin at fixture scale (BENCH_ER.json holds the
+    // same curve at 1x/10x/100x the reference's 3.6k labels): the
+    // loadLabels vocabulary shape — 3 variants per entity,
     // the "corp"/"inc" word tokens (and "ent"/"nti"/… grams) hot across
     // every label of a type. Growing labels 4x must grow CAPPED
     // candidates ~linearly (cap drops the hot keys from blocking, so
@@ -314,8 +334,7 @@ class ErEvalSpec extends AnyFunSuite with graft.SparkTestSession {
     val cap = 25 // small enough that the hot keys cross it at both scales
     def n(scale: Int, dfCap: Int): Long =
       EntityResolution.blockPairs(
-        graft.tools.ErLoadProbe.labels(spark, scale)
-          .filter(org.apache.spark.sql.functions.col("id") < 60L * 3 * scale),
+        loadLabels(scale).filter(col("id") < 60L * 3 * scale),
         dfCap).count()
     val (cap1, cap4) = (n(1, cap), n(4, cap))
     val (un1, un4) = (n(1, Int.MaxValue), n(4, Int.MaxValue))

@@ -44,7 +44,7 @@ class EpochIndexSpec extends AnyFunSuite with graft.SparkTestSession {
   }
 
   test("an offset-id epoch trains real codebooks (the vec_id<k seed bug)") {
-    // Regression pin for the bug the DriftProbe epoch leg surfaced:
+    // Regression pin for the bug the drift rehearsal's epoch leg surfaced:
     // pqCodebooks seeded codes with a literal `vec_id < k`, so an epoch
     // whose ids are all large (every appended batch in a sharded/epoched
     // corpus) trained EMPTY codebooks and its queries returned zero rows

@@ -768,8 +768,8 @@ class IndexStoreSpec extends AnyFunSuite with graft.SparkTestSession {
   }
 
   test("vacuum keeps a contiguous suffix even when manifest mtimes are inverted") {
-    // r15 ADVICE: a copyDir-cloned loc (DriftProbe clones indexes,
-    // resetting every mtime) or clock skew can make an OLDER manifest
+    // r15 ADVICE: a copyDir-cloned loc (cloning an index resets
+    // every mtime) or clock skew can make an OLDER manifest
     // read young; count∪age retention would then keep a gappy set and
     // the resolve fast path could stop at a pre-gap version. Retention
     // must be contiguous by construction.

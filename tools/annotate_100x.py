@@ -53,7 +53,7 @@ art["named_causes"] = {
         "semanticDedupTrained with k ~ sqrt(N), bounding pairs at "
         "~N*sqrt(N)/2"
         + (": measured on this corpus -- trained k=%d reads %.1f s vs "
-           "the seeded-16 gate form's %.1f s (tools.SemDedupScale)."
+           "the seeded-16 gate form's %.1f s (see semdedup_scale_probe)."
            % (semscale["k_sqrtN"], semscale["trained_sqrtN_sec"],
               semscale["seeded_16_sec"]) if semscale else "."),
     ),
