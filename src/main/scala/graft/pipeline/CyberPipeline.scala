@@ -16,10 +16,11 @@ import graft.text.TextClean
   * munge/extraction → NER + entity resolution → GitHub enrichment →
   * named node/edge CSV set.
   *
-  * Every stage boundary is a skip-if-exists parquet checkpoint
-  * ([[Checkpoints.checkpoint]]) — the reference's feather-cache pattern:
-  * a re-run resumes from the last materialized stage, and each stage's
-  * lineage is cut so the final export doesn't re-parse NVD JSON.
+  * Every stage boundary is a content-keyed parquet checkpoint
+  * ([[Checkpoints.checkpoint]]) — the reference's feather-cache pattern,
+  * keyed by the files each stage reads (not by its code or NER model): a
+  * re-run resumes from the last stage whose inputs are unchanged, and each
+  * stage's lineage is cut so the final export doesn't re-parse NVD JSON.
   *
   * The two genuinely-external boundaries stay pluggable: NER inference is
   * a [[NerModel]] (N2) and the GitHub API payloads arrive as parquet of
@@ -66,18 +67,19 @@ object CyberPipeline {
     // full corpus), so the scan is SHARED via persist across the three
     // consumers (Nvd.parseAll's shape) instead of re-parsing four times
     // (cpeNodes alone references the parse twice), and released once the
-    // checkpoints are on disk. Skip-if-exists runs never touch it.
-    var itemsTouched = false // lazy: a fully-checkpointed re-run must not list nvdGlob
+    // checkpoints are on disk. Runs that reuse all three never parse.
+    var itemsTouched = false
     lazy val items = { itemsTouched = true; Nvd.readItems(spark, conf.nvdGlob).persist() }
-    val cves = Checkpoints.checkpoint(Nvd.cveNodes(items), s"$work/cve_node_data")
-    val refs = Checkpoints.checkpoint(Nvd.cveReferences(items), s"$work/cve_references")
-    val cpes = Checkpoints.checkpoint(Nvd.cpeNodes(items), s"$work/cpe_node_data")
+    val nvd = Seq(conf.nvdGlob)
+    val cves = Checkpoints.checkpoint(Nvd.cveNodes(items), s"$work/cve_node_data", nvd)
+    val refs = Checkpoints.checkpoint(Nvd.cveReferences(items), s"$work/cve_references", nvd)
+    val cpes = Checkpoints.checkpoint(Nvd.cpeNodes(items), s"$work/cpe_node_data", nvd)
     if (itemsTouched) items.unpersist(blocking = false)
 
     // stage B: MITRE STIX bundle → techniques (mitre_json_to_csv.py)
     val techniques = Checkpoints.checkpoint(
       Mitre.techniques(spark, Mitre.readBundle(spark, conf.mitreBundle)),
-      s"$work/enterprise_attack")
+      s"$work/enterprise_attack", Seq(conf.mitreBundle))
 
     // stage C0 (optional, S4 streaming): RSS/Atom advisories drained
     // through the production file-sink shape — readStream over the feed
@@ -88,8 +90,8 @@ object CyberPipeline {
     // c1-c11) per SURVEY §7: the feed path and the scrape path meet
     // BEFORE cleanup, so every downstream stage treats both identically.
     val scraped = spark.read.parquet(conf.alertsParquet)
-    val (rawAlerts, feedFresh, recordFeedState) = conf.rssFeedDir match {
-      case None => (scraped, false, () => ())
+    val (rawAlerts, alertInputs) = conf.rssFeedDir match {
+      case None => (scraped, Seq(conf.alertsParquet))
       case Some(feedDir) =>
         import org.apache.spark.sql.streaming.Trigger
         val sink = s"$work/rss_entries"
@@ -103,43 +105,25 @@ object CyberPipeline {
         try q.processAllAvailable() finally q.stop()
         // an empty feed dir produces no sink output at all — read back
         // well-typed either way (entrySchema pins the column types)
+        val data = new org.apache.hadoop.fs.Path(s"$sink/data")
         val entries =
-          if (new java.io.File(s"$sink/data").isDirectory)
+          if (data.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(data))
             spark.read.schema(graft.sources.Rss.entrySchema).parquet(s"$sink/data")
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             graft.sources.Rss.entrySchema)
-        // Are the alerts_clean / alert_ner checkpoints stale against the
-        // feed? The signal must be DURABLE, not "drained > 0 this run":
-        // the stream's own source checkpoint commits before the forced
-        // rewrites below, so a crash in between would leave drained == 0
-        // forever and the new advisories would never reach extraction.
-        // Instead compare the sink's total entry count with the count
-        // recorded (by recordFeedState, AFTER both dependents rewrote)
-        // when alerts_clean was last built — any mismatch re-forces until
-        // every write has landed, which is idempotent.
-        val entryCount = entries.count()
-        val marker = java.nio.file.Paths.get(s"$work/alerts_clean_feed_count")
-        val recorded =
-          if (java.nio.file.Files.exists(marker))
-            scala.util.Try(new String(java.nio.file.Files.readAllBytes(marker),
-              "UTF-8").trim.toLong).getOrElse(-1L)
-          else -1L
+        // drained entries are new sink files: they re-key alerts_clean
         (scraped.unionByName(
           graft.sources.Rss.entriesAsAlerts(entries)
             .select(scraped.columns.map(col).toSeq: _*)),
-         entryCount != recorded,
-         () => {
-           java.nio.file.Files.write(marker,
-             entryCount.toString.getBytes("UTF-8")); ()
-         })
+         Seq(conf.alertsParquet, s"$sink/data"))
     }
 
     // stage C: scraped (+ feed) alerts → munge + CVE/TTP extraction
     // (c7-c18)
     val alerts = Checkpoints.checkpoint(
       Alerts.cleanAlerts(rawAlerts),
-      s"$work/alerts_clean", force = feedFresh)
+      s"$work/alerts_clean", alertInputs)
     val alertNodes = Alerts.alertNodes(alerts)
     val alertCve = Alerts.alertCveEdges(alerts)
     val alertTtp = Alerts.alertTtpEdges(alerts, techniques)
@@ -160,10 +144,7 @@ object CyberPipeline {
     val ner = Checkpoints.checkpoint(
       mentions.join(vocab, Seq("label", "type"))
         .select(col("alert_id"), col("id"), col("label"), col("type")),
-      s"$work/alert_ner", force = feedFresh)
-    // both feed-dependent checkpoints are durably rewritten — record the
-    // feed state so the next run's staleness check sees them as current
-    recordFeedState()
+      s"$work/alert_ner", Seq(s"$work/alerts_clean"))
     val (clustered, best, weights) =
       EntityResolution.resolve(ner, conf.erThresholds,
         defaultThreshold = if (conf.erScorer.isDefined) 0.5 else 0.6,

@@ -119,28 +119,35 @@ class PipelineSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(labels == Set("evil", "initech systems"))
   }
 
+  // a third advisory arriving by feed: CVE + the fixture TTP in the
+  // summary, advisory code in the title (the CISA convention)
+  private val feedXml =
+    """<?xml version="1.0" encoding="UTF-8"?>
+      |<rss version="2.0"><channel>
+      |  <title>CISA Cybersecurity Advisories</title>
+      |  <item>
+      |    <title>AA22-003A: Feed Alert</title>
+      |    <link>https://www.cisa.gov/alert/aa22-003a</link>
+      |    <pubDate>Wed, 06 Apr 2022 00:00:00 GMT</pubDate>
+      |    <guid>https://www.cisa.gov/alert/aa22-003a</guid>
+      |    <description>Feed actors exploit CVE-2022-0003 using [T1064] macros.</description>
+      |  </item>
+      |</channel></rss>""".stripMargin
+
+  /** A feed drop dir under `base` holding [[feedXml]]. */
+  private def feedDirWithOneAdvisory(base: String): String = {
+    val feedDir = s"$base/feeds"
+    Files.createDirectories(java.nio.file.Paths.get(feedDir))
+    Files.write(java.nio.file.Paths.get(s"$feedDir/alerts.xml"),
+      feedXml.getBytes("UTF-8"))
+    feedDir
+  }
+
   test("pipeline: RSS feed entries flow through the streaming path into every stage") {
     // fresh work/out dirs: this test must not resume from the other
     // tests' alerts_clean checkpoint, which predates the feed union
     val base2 = Files.createTempDirectory("graft_pipeline_rss").toString
-    val feedDir = s"$base2/feeds"
-    Files.createDirectories(java.nio.file.Paths.get(feedDir))
-    // a third advisory arriving by feed: CVE + the fixture TTP in the
-    // summary, advisory code in the title (the CISA convention)
-    val feedXml =
-      """<?xml version="1.0" encoding="UTF-8"?>
-        |<rss version="2.0"><channel>
-        |  <title>CISA Cybersecurity Advisories</title>
-        |  <item>
-        |    <title>AA22-003A: Feed Alert</title>
-        |    <link>https://www.cisa.gov/alert/aa22-003a</link>
-        |    <pubDate>Wed, 06 Apr 2022 00:00:00 GMT</pubDate>
-        |    <guid>https://www.cisa.gov/alert/aa22-003a</guid>
-        |    <description>Feed actors exploit CVE-2022-0003 using [T1064] macros.</description>
-        |  </item>
-        |</channel></rss>""".stripMargin
-    Files.write(java.nio.file.Paths.get(s"$feedDir/alerts.xml"),
-      feedXml.getBytes("UTF-8"))
+    val feedDir = feedDirWithOneAdvisory(base2)
     val rssConf = conf.copy(workDir = s"$base2/work", outDir = s"$base2/out",
       rssFeedDir = Some(feedDir))
     val counts = CyberPipeline.run(spark, rssConf, nerFixture)
@@ -160,11 +167,12 @@ class PipelineSpec extends AnyFunSuite with graft.SparkTestSession {
 
     // a NEW feed file lands after the first run — the stream drains only
     // it (checkpointed source), and the alerts_clean/alert_ner checkpoints
-    // must be invalidated (feedFresh) or the new advisory would never
-    // reach extraction/export on the re-run. The advisory uses the older
-    // TA advisory-code prefix, pinning the [A-Z]{2} id extraction: the id
-    // must come from the title code (not the link basename) and the title
-    // must have the code stripped, matching what the scrape path yields.
+    // must be invalidated (the new sink file changes their input key) or
+    // the new advisory would never reach extraction/export on the re-run.
+    // The advisory uses the older TA advisory-code prefix, pinning the
+    // [A-Z]{2} id extraction: the id must come from the title code (not the
+    // link basename) and the title must have the code stripped, matching
+    // what the scrape path yields.
     val feedXml2 =
       """<?xml version="1.0" encoding="UTF-8"?>
         |<rss version="2.0"><channel>
@@ -195,19 +203,47 @@ class PipelineSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(marker.lastModified == mtime,
       "alerts_clean was recomputed although no new feed files arrived")
 
-    // crash-safety of the staleness signal: the feed-count marker is
-    // written only AFTER the dependent checkpoints rewrite, so a run that
-    // died in between leaves a mismatch — simulated here by deleting the
-    // marker — and the next run must re-force (idempotently) rather than
-    // serve the stale parquet forever
-    val feedMarker = new java.io.File(s"${rssConf.workDir}/alerts_clean_feed_count")
-    assert(feedMarker.exists, "feed-count marker missing after a feed run")
-    assert(feedMarker.delete())
+    // crash-safety: the _INPUTS key is written only AFTER the parquet
+    // commit, so a run that died in between leaves no key — simulated
+    // here by deleting it — and the next run must recompute
+    // (idempotently) rather than serve a possibly stale parquet forever
+    assert(new java.io.File(s"${rssConf.workDir}/alerts_clean/_INPUTS").delete())
     val counts4 = CyberPipeline.run(spark, rssConf, nerFixture)
     assert(counts4("alert_nodes") == 4)
     assert(marker.lastModified != mtime,
-      "interrupted-run recovery did not re-force the alerts checkpoint")
-    assert(feedMarker.exists, "marker not re-recorded after the recovery run")
+      "interrupted-run recovery did not recompute the alerts checkpoint")
+  }
+
+  test("pipeline: RSS feed with a file: URI work dir reaches every stage") {
+    // the sink-output check goes through the Hadoop FileSystem, so a
+    // qualified URI work dir still reads the drained advisory back
+    val b = Files.createTempDirectory("graft_pipeline_uri").toString
+    val uriConf = conf.copy(workDir = s"file:$b/work", outDir = s"$b/out",
+      rssFeedDir = Some(feedDirWithOneAdvisory(b)))
+    val counts = CyberPipeline.run(spark, uriConf, nerFixture)
+    assert(counts("alert_nodes") == 3)
+    assert(counts("alert_cve_edge") == 3)
+  }
+
+  test("pipeline: a changed scraped-alerts table recomputes alerts_clean and its dependents") {
+    // own dirs and own copy of the alerts table: the shared conf's
+    // checkpoints stay untouched
+    val b = Files.createTempDirectory("graft_pipeline_stale").toString
+    spark.read.parquet(conf.alertsParquet).write.parquet(s"$b/alerts_raw")
+    val staleConf = conf.copy(alertsParquet = s"$b/alerts_raw",
+      workDir = s"$b/work", outDir = s"$b/out")
+    val counts = CyberPipeline.run(spark, staleConf, nerFixture)
+    assert(counts("alert_nodes") == 2)
+    assert(counts("alert_cve_edge") == 2)
+    Seq(("/alert/aa22-004a", "AA22-004A", "Third Alert",
+         "Original release date: May 2, 2022",
+         "Attackers chain CVE-2022-0003 with [T1064] scripting."))
+      .toDF("link", "alert_id", "title", "date", "text")
+      .write.mode("append").parquet(s"$b/alerts_raw")
+    val counts2 = CyberPipeline.run(spark, staleConf, nerFixture)
+    assert(counts2("alert_nodes") == 3, "re-run served the stale alerts_clean")
+    assert(counts2("alert_cve_edge") == 3)
+    assert(counts2("alert_ttp_data") == 3)
   }
 
   test("pipeline: re-run resumes from checkpoints (stage outputs not recomputed)") {
