@@ -227,17 +227,6 @@ object Bench {
         name -> runOne(name, SparkEntry.queries(name), sfDir,
           nReps = 3, forceGc = true)._1
       }.toMap
-    // consume-once memo families (static producer lists): an ISOLATED
-    // refloor of a consumer gate rebuilds the whole family per rep, so
-    // its floor reads ~the producer's cost while its suite reading is
-    // near-zero — correct, but misleading without this tag (r12 VERDICT
-    // item: g06/g08 floors of 2.65/2.86 s next to 0.03 s suite readings).
-    val memoProducer = Map(
-      "g06_louvain_histogram" -> "g05_communities",
-      "g07_triangles" -> "g05_communities",
-      "g08_louvain_weighted" -> "g05_communities",
-      "d13_leakage_safe_split" -> "d06_dedup_resolve",
-      "d16_soft_dedup_weights" -> "d06_dedup_resolve")
     // DESIGNED comparators (r13 VERDICT item 6): gates kept deliberately
     // unguarded to price what a guard buys — at hostile scale they time
     // out BY DESIGN while their production twin runs clean. Tagged in the
@@ -275,15 +264,11 @@ object Bench {
     val rfBase = prevFile.map(f => "\"" + esc(f.getName) + "\"").getOrElse("null")
     val rfSkippedNames = movers.drop(refloorCap).map(m => "\"" + m._1 + "\"")
       .mkString("[", ",", "]")
-    val rfMemo = refloors.keys.toSeq.sorted.flatMap(k =>
-      memoProducer.get(k).map(p => "\"" + k + "\":\"isolated floor rebuilds " +
-        p + " memo per rep; compare suite reading\""))
-      .mkString("{", ",", "}")
     val dcTags = results.keys.toSeq.sorted.flatMap(k =>
       designedComparator.get(k).map(t => "\"" + k + "\":\"" + esc(t) + "\""))
       .mkString("{", ",", "}")
     val forcedJson = forced.map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","reps":$reps,"isolate":$isolate,"timeout_sec":$timeoutSec,"calibration_sec":${jnum(calibrationSec)},"queries":$qs,"errors":$errs,"designed_comparators":$dcTags,"auto_refloors":$rf,"auto_refloor_base":$rfBase,"auto_refloor_cap":$refloorCap,"forced_refloors":$forcedJson,"auto_refloors_skipped":${math.max(0, movers.size - refloorCap)},"auto_refloors_skipped_names":$rfSkippedNames,"auto_refloor_memo_notes":$rfMemo,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","reps":$reps,"isolate":$isolate,"timeout_sec":$timeoutSec,"calibration_sec":${jnum(calibrationSec)},"queries":$qs,"errors":$errs,"designed_comparators":$dcTags,"auto_refloors":$rf,"auto_refloor_base":$rfBase,"auto_refloor_cap":$refloorCap,"forced_refloors":$forcedJson,"auto_refloors_skipped":${math.max(0, movers.size - refloorCap)},"auto_refloors_skipped_names":$rfSkippedNames,"sf":"$sfDir"}"""
     println(line)
     // self-contained artifact (r10 VERDICT item 5): the driver captures
     // stdout, which truncated BENCH_r10.json mid-JSON — so the full

@@ -27,9 +27,9 @@ object SparkEntry {
     Relational.q03.run(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. ListMap keeps
-    * registry order: Verify/Bench iterate deterministically, so suite
-    * runs execute g05 before g06/g08 and the three-gate Louvain memo
-    * always has g05 as its producer (GraphQueries.statsMemo).
+    * registry order, so Verify/Bench iterate deterministically. No gate's
+    * result depends on that order (MemoOrderSpec runs the graph and
+    * dedup families forward, alone and reversed).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     scala.collection.immutable.ListMap(

@@ -233,26 +233,9 @@ object EntityResolution {
     */
   private[graft] def withFeatures(pairs: DataFrame, labels: DataFrame,
       broadcastLabelLimit: Int,
-      broadcastByteLimit: Long = FeatureBroadcastByteLimit): DataFrame =
-    withCheapFeatures(pairs, labels, broadcastLabelLimit, broadcastByteLimit)
-      .withColumn("f_lev_sim", levSim)
-
-  /** 1 − levenshtein/maxlen on the joined label columns — the ONE
-    * expensive (O(len²), non-codegen-vectorizable) feature, factored out
-    * so [[scorePairs]] can defer it until after the cheap-bound prune.
-    */
-  private def levSim: Column =
-    lit(1.0) - levenshtein(col("label_a"), col("label_b")).cast("double") /
-      greatest(length(col("label_a")), length(col("label_b"))).cast("double")
-
-  /** All of [[featureCols]] EXCEPT `f_lev_sim` (see [[levSim]]) — the
-    * join plus the cheap exact features, in both broadcast-hoisted and
-    * narrow form (value-identical, branch pinned by ErEvalSpec).
-    */
-  private def withCheapFeatures(pairs: DataFrame, labels: DataFrame,
-      broadcastLabelLimit: Int, broadcastByteLimit: Long): DataFrame = {
+      broadcastByteLimit: Long = FeatureBroadcastByteLimit): DataFrame = {
     val l = labels.select(col("id"), lower(col("label")).as("label"))
-    if (featureBroadcastFits(l, broadcastLabelLimit, broadcastByteLimit)) {
+    val joined = if (featureBroadcastFits(l, broadcastLabelLimit, broadcastByteLimit)) {
       val pre = l
         .withColumn("toks",
           array_distinct(SimilarityJoin.whitespaceTokens(col("label"))))
@@ -292,6 +275,9 @@ object EntityResolution {
         .withColumn("f_is_char",
           when(col("type").isin(charTypes.toSeq: _*), 1.0).otherwise(0.0))
     }
+    joined.withColumn("f_lev_sim", lit(1.0) -
+      levenshtein(col("label_a"), col("label_b")).cast("double") /
+        greatest(length(col("label_a")), length(col("label_b"))).cast("double"))
   }
 
   /** Similarity features + combined score for candidate pairs, all on
@@ -300,61 +286,14 @@ object EntityResolution {
     *  - plural fold: score 1.0 when the stripS-folded labels are equal;
     *  - char score ([[charTypes]] only): 0.5·3-gram-Jaccard + 0.5·lev.
     * Final score = greatest of the applicable features.
-    *
-    * `pruneBelow`: a per-pair threshold Column (may reference `type`)
-    * below which the caller will DISCARD the pair anyway — scoring then
-    * skips [[levSim]] wherever a cheap argument decides the outcome:
-    * fold-equal pairs score exactly 1.0, and a pair whose cheap upper
-    * bound (lev_sim ≤ 1 − |len_a−len_b|/max_len substituted into the
-    * exact formula) sits under the threshold comes back scored AS its
-    * bound (< threshold, so the caller's filter drops it identically).
-    * Value contract pinned by ErEvalSpec: above-threshold rows are
-    * exactly the unpruned scores; placeholders dominate the true score
-    * and stay below the threshold.
-    *
-    * MEASURED NEGATIVE (BENCH_ER r15 `phases` A/B) — production paths
-    * ([[cluster]], [[elbowSweep]]) deliberately do NOT use it: on the
-    * reference-shaped vocabulary the prune reads 2–3.9× SLOWER than the
-    * plain scorer at 1×/10×/100× in BOTH implementations tried. The
-    * arithmetic: the whole per-pair score costs ~0.8 µs of which lev is
-    * ≲25%, so a perfect skip caps at ~20% — while a bound FILTER gets
-    * its predicate pushed through the feature projection (jaccards
-    * computed twice), and this CaseWhen form widens the projection past
-    * what codegen handles well; near-equal-length labels also keep the
-    * length bound ≈ 1, so little prunes. Retained as an opt-in for
-    * corpora with real label-length dispersion — measure with the
-    * BENCH_ER A/B before enabling.
     */
-  def scorePairs(pairs: DataFrame, labels: DataFrame,
-      pruneBelow: Option[Column] = None): DataFrame = {
-    val cheap = withCheapFeatures(pairs, labels,
-      FeatureBroadcastLabelLimit, FeatureBroadcastByteLimit)
-    val scored = pruneBelow match {
-      case None =>
-        val f = cheap.withColumn("f_lev_sim", levSim)
-        val wordScore = col("f_word_jac") * 0.5 + col("f_lev_sim") * 0.5
-        val charScore = when(col("f_is_char") === 1.0,
-          col("f_gram_jac") * 0.5 + col("f_lev_sim") * 0.5).otherwise(0.0)
-        f.withColumn("score",
-          greatest(wordScore, col("f_plural_eq"), charScore))
-      case Some(thr) =>
-        val levUb = lit(1.0) -
-          abs(length(col("label_a")) - length(col("label_b"))).cast("double") /
-            greatest(length(col("label_a")), length(col("label_b"))).cast("double")
-        val wordUb = col("f_word_jac") * 0.5 + levUb * 0.5
-        val charUb = when(col("f_is_char") === 1.0,
-          col("f_gram_jac") * 0.5 + levUb * 0.5).otherwise(0.0)
-        val bound = greatest(wordUb, col("f_plural_eq"), charUb)
-        val lev = levSim
-        val wordScore = col("f_word_jac") * 0.5 + lev * 0.5
-        val charScore = when(col("f_is_char") === 1.0,
-          col("f_gram_jac") * 0.5 + lev * 0.5).otherwise(0.0)
-        cheap.withColumn("score",
-          when(col("f_plural_eq") === 1.0, lit(1.0)) // exact: greatest is 1.0
-            .when(bound < thr, bound) // exact enough: can't pass, caller drops
-            .otherwise(greatest(wordScore, col("f_plural_eq"), charScore)))
-    }
-    scored.drop(featureCols: _*)
+  def scorePairs(pairs: DataFrame, labels: DataFrame): DataFrame = {
+    val wordScore = col("f_word_jac") * 0.5 + col("f_lev_sim") * 0.5
+    val charScore = when(col("f_is_char") === 1.0,
+      col("f_gram_jac") * 0.5 + col("f_lev_sim") * 0.5).otherwise(0.0)
+    withFeatures(pairs, labels)
+      .withColumn("score", greatest(wordScore, col("f_plural_eq"), charScore))
+      .drop(featureCols: _*)
   }
 
   /** The reference's LEARNED scoring option (data_integration.ipynb c41:4
@@ -441,10 +380,6 @@ object EntityResolution {
     }
     val pairs = scorer match {
       case Some(m) => scorePairsLearned(blocked, labels, m)
-      // deliberately UNPRUNED: the cheap-bound levenshtein prune is
-      // value-identical but measured SLOWER here in both of its forms
-      // (BENCH_ER r15 A/B — see the scorePairs docstring), so the
-      // production path keeps the plain scorer
       case None => scorePairs(blocked, labels)
     }
     val edges = pairs.filter(col("score") >= thr)

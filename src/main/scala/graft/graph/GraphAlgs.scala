@@ -22,13 +22,13 @@ object GraphAlgs {
     * driver-local replay instead of distributed supersteps. At gate scale
     * the filtered graphs are a few thousand edges, and a superstep loop's
     * cost there is pure job-dispatch overhead (30–40 Spark jobs ≈ 10 s
-    * for g05+g06's shared Louvain at sf0.1 — none of it data); the
+    * for the g05/g06 Louvain at sf0.1 — none of it data); the
     * driver replay is milliseconds and produces IDENTICAL labels (see
     * [[louvainLocal]] / the union-find in [[connectedComponents]]).
     * The hybrids: Louvain ([[louvainDF]], [[louvainUnd]]), connected
     * components ([[connectedComponents]] — the entry of ER's `cluster`,
-    * the d06/d13/d16 near-dup closures and g03 — and
-    * [[connectedComponentsUnd]]), [[GraphQueries.triangleStats]] and
+    * the d06/d13/d16 near-dup closures, g03 and the g05/g06/g08 Louvain
+    * invariants), [[GraphQueries.triangleStats]] and
     * ArticleRank ([[articleRankDF]]: above the limit it runs
     * [[articleRankPull]], whose ranks agree with the driver path to
     * float-summation noise).
@@ -561,54 +561,23 @@ object GraphAlgs {
     }
   }
 
-  /** Connected components over an ALREADY-SYMMETRIZED (src, dst) edge
-    * DataFrame — the shared-edge-build entry point: a caller that has
-    * cached the undirected edge list (e.g. the g05/g06 gates, which feed
-    * the same table to Louvain, CC, and the invariant joins) skips the
-    * second symmetrization pass [[connectedComponents]] would do. The
-    * caller's contract: for every (a, b) row, (b, a) is present too.
-    */
-  def connectedComponentsUnd(und: DataFrame,
-                             driverLimit: Int = DefaultDriverGraphLimit): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    if (driverLimit > 0) {
-      val probe = und.select(col("src").cast("long"), col("dst").cast("long"))
-        .limit(driverLimit + 1).collect()
-      if (probe.length <= driverLimit) {
-        val comp = unionFindMin(probe.iterator.map(r => (r.getLong(0), r.getLong(1))))
-        return comp.toSeq.toDF("node_id", "component")
-      }
-    }
-    // GraphX keeps the input RDD's partition count through every Pregel
-    // superstep — coalesce to the edge-proportional width first (the
-    // count is cheap: the caller's contract is a cached edge table)
-    val parts = loopParts(spark, und.count())
-    val e: RDD[Edge[Unit]] = und
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-      .coalesce(parts)
-    Graph.fromEdges(e, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .connectedComponents().vertices
-      .map { case (id, comp) => (id, comp) }.toDF("node_id", "component")
-  }
-
-  /** Connected components over a DIRECTED (long, long) edge-pair
-    * DataFrame whose row count the caller already knows (it has the
-    * edges cached/counted — the elbow-sweep step shape): symmetrizes,
-    * then sizes the GraphX partitioning to the edge count like
-    * [[connectedComponentsUnd]], so a small step graph pays small
-    * supersteps instead of full-width task barriers.
+  /** Connected components over a (long, long) edge-pair DataFrame whose
+    * row count the caller already knows (it has the edges cached/counted
+    * — the elbow-sweep step shape): sizes the GraphX partitioning to the
+    * edge count (GraphX keeps the input RDD's partition count through
+    * every Pregel superstep), so a small step graph pays small supersteps
+    * instead of full-width task barriers. No symmetrization: GraphX's
+    * connectedComponents already messages along both edge directions
+    * (Pregel over `EdgeDirection.Either`).
     */
   def connectedComponentsSized(edges: DataFrame, src: String, dst: String,
                                nEdges: Long): DataFrame = {
     val spark = SparkSession.active
     import spark.implicits._
     val parts = loopParts(spark, nEdges)
-    val e0 = edges.select(col(src).cast("long"), col(dst).cast("long"))
+    val e = edges.select(col(src).cast("long"), col(dst).cast("long"))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ())).coalesce(parts)
-    val sym = e0.flatMap(x => Iterator(x, Edge(x.dstId, x.srcId, x.attr)))
-    Graph.fromEdges(sym, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
+    Graph.fromEdges(e, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
       .connectedComponents().vertices
       .map { case (id, comp) => (id, comp) }.toDF("node_id", "component")
   }
@@ -766,13 +735,12 @@ object GraphAlgs {
   }
 
   /** Louvain over an ALREADY-SYMMETRIZED, loop-free, deduplicated
-    * (src, dst) edge DataFrame — the shared-edge-build twin of
-    * [[connectedComponentsUnd]]: the caller's cached undirected edge list
-    * IS the internal representation with unit weights, so the canon
-    * groupBy + re-symmetrization union of [[louvainDF]] (a full shuffle
-    * of the edge table — the dominant cost at 100x, VERDICT r3/r4) is
-    * skipped entirely. Caller contract: every (a, b) has its (b, a) row,
-    * no (a, a) rows, no duplicates.
+    * (src, dst) edge DataFrame (the g05/g06 invariant build): the
+    * caller's cached undirected edge list IS the internal representation
+    * with unit weights, so the canon groupBy + re-symmetrization union of
+    * [[louvainDF]] (a full shuffle of the edge table — the dominant cost
+    * at 100x, VERDICT r3/r4) is skipped entirely. Caller contract: every
+    * (a, b) has its (b, a) row, no (a, a) rows, no duplicates.
     */
   def louvainUnd(und: DataFrame, maxLevels: Int = 3,
                  maxSweeps: Int = 8,

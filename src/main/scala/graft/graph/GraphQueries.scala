@@ -200,293 +200,110 @@ object GraphQueries {
     *     degenerate singleton collapse) turns one value into −1 and
     *     hash-fails the gate.
     */
-  /** Every scalar the g05 + g06 invariant gates read, from ONE Louvain +
-    * CC run (VERDICT r6 item 2: the pair used to run the same algorithm
-    * twice on the same edges — half the most expensive work in the suite).
+  /** Every scalar the Louvain invariant gates read: g05/g06 on the
+    * unweighted Q7 graph, g08 on the multiplicity-weighted one. The
+    * unweighted graph is the weighted one with every edge weight fixed
+    * at 1, so one set of formulas serves both: m2 = Σ symmetrized weight,
+    * degree = weighted degree, modularity numerators Q·m2² = within·m2 −
+    * Σc degc², all exact int64.
     */
   private[graph] final case class LouvainStats(
       m2: Long, nNodes: Long, nComps: Long, maxCsz: Long,
       nComms: Long, minSize: Long, maxSize: Long, sumSizes: Long,
       ccModNum: Long, lvModNum: Long, valid: Boolean, refines: Boolean)
 
-  /** Every scalar the g08 weighted-invariant gate reads. Same shape as
-    * [[LouvainStats]] but under integer edge WEIGHTS (m2 = Σ symmetrized
-    * weight, degree = weighted degree, modularity numerators weighted).
-    */
-  private[graph] final case class WeightedStats(
-      m2: Long, nNodes: Long, nComps: Long, nComms: Long,
-      ccModNum: Long, lvModNum: Long, valid: Boolean, refines: Boolean)
-
-  /** Consume-once handoff among the THREE Louvain gates (plain scalars,
-    * keyed by dir + producing gate): when g05 or g06 runs first it
-    * computes the FUSED stats — one orders⋈lineitem scan, one symmetrized
-    * build, ONE connected-components run (weights don't change topology,
-    * so CC is shared verbatim), both Louvains — and stores them; each of
-    * the other two gates consumes its half instead of re-running
-    * anything (r9 VERDICT item 7, generalizing the r6 g05/g06 pair
-    * memo). A gate never consumes its own entry, so repeated runs of the
-    * SAME gate (bench reps) each pay the full cost. g08 running FRESH
-    * computes only its weighted side (no unweighted Louvain — its
-    * isolated floor must not pay for data it doesn't emit) and stores
-    * nothing. Scalars, not DataFrames: the bench harness unpersists all
-    * RDDs between queries, which would orphan a memoized
-    * localCheckpoint.
-    */
-  private final case class MemoEntry(producer: String, dir: String,
-      un: LouvainStats, w: Option[WeightedStats],
-      g07: Option[Seq[(Long, Long, Long, Double)]], consumed: Set[String])
-
-  private val louvainGates = Set("g05", "g06", "g08", "g07")
-
-  private def consumers(e: MemoEntry): Set[String] =
-    (louvainGates - e.producer) --
-      (if (e.w.isEmpty) Set("g08") else Set.empty) --
-      (if (e.g07.isEmpty) Set("g07") else Set.empty)
-
-  private val statsMemo =
-    new java.util.concurrent.atomic.AtomicReference[Option[MemoEntry]](None)
-
-  private def consumeFrom(e: MemoEntry, gate: String): Unit = {
-    val c = e.consumed + gate
-    statsMemo.set(if (consumers(e).subsetOf(c)) None
-                  else Some(e.copy(consumed = c)))
-  }
-
-  private def louvainStats(s: SparkSession, dir: String, gate: String): LouvainStats =
-    statsMemo.synchronized {
-      statsMemo.get() match {
-        case Some(e) if e.dir == dir && e.producer != gate && !e.consumed(gate) =>
-          consumeFrom(e, gate)
-          e.un
-        case _ =>
-          // only the designated producer (g05, first in registry order)
-          // pays for the weighted and g07 sides — a fresh g06 (isolated
-          // refloor, bench rep) computes just what it emits, the same
-          // principle the lean fresh-g08 path follows (r10 review
-          // finding). A leaner recompute must NOT clobber a fuller entry
-          // g07/g08 have yet to consume (bench reps: g06 rep 2 would
-          // otherwise overwrite g05's entry and strand them on their
-          // fresh paths).
-          val (unOpt, w, g7) = computeFusedStats(s, dir,
-            withUnweighted = true, withWeighted = gate == "g05",
-            withG07 = gate == "g05")
-          val un = unOpt.get
-          val keepExisting = w.isEmpty && statsMemo.get().exists(e =>
-            e.dir == dir && (e.w.isDefined || e.g07.isDefined))
-          if (!keepExisting)
-            statsMemo.set(Some(MemoEntry(gate, dir, un, w, g7, Set.empty)))
-          un
-      }
-    }
-
-  private def weightedStats(s: SparkSession, dir: String): WeightedStats =
-    statsMemo.synchronized {
-      statsMemo.get() match {
-        case Some(e) if e.dir == dir && e.producer != "g08" &&
-            e.w.isDefined && !e.consumed("g08") =>
-          consumeFrom(e, "g08")
-          e.w.get
-        case _ =>
-          // lean fresh path (isolated g08 refloor / bench rep): the SAME
-          // fused build with the unweighted Louvain skipped — one
-          // definition of the invariant machinery for all three gates
-          // (the r10 review duplication finding), still computing only
-          // what g08 emits.
-          computeFusedStats(s, dir,
-            withUnweighted = false, withWeighted = true)._2.get
-      }
-    }
-
-  /** Consume the g07 triangle rows from a producer's fused run, if one is
-    * pending for this dir — None sends the gate down its own fresh path
-    * (isolated refloors / bench reps stay honest).
-    */
-  private def g07FromMemo(dir: String): Option[Seq[(Long, Long, Long, Double)]] =
-    statsMemo.synchronized {
-      statsMemo.get() match {
-        case Some(e) if e.dir == dir && e.producer != "g07" &&
-            e.g07.isDefined && !e.consumed("g07") =>
-          consumeFrom(e, "g07")
-          e.g07
-        case _ => None
-      }
-    }
-
-  /** One edge build, one Louvain, one CC, THREE scalar jobs (VERDICT r6
+  /** One edge build, one Louvain, one CC, three scalar jobs (VERDICT r6
     * item 5 — the per-invariant actions used to be ~6 separate jobs):
     *   1. validity/counts/refinement aggregate over the full-outer
     *      (assign ⋈ cc ⋈ deg) table;
-    *   2. within-community/-component edge counts (one edge join);
-    *   3. a fused explode pass computing, for BOTH partitions at once,
-    *      the exact-integer modularity piece Σc (Σdeg)² AND the
+    *   2. within-community/-component edge weight sums (one edge join);
+    *   3. a fused explode pass computing, for both partitions at once,
+    *      the exact-integer modularity piece Σc (Σdeg)² and the
     *      community-size histogram stats (count/min/max/sum).
-    *
-    * `withG07` (producer runs only): the g07 triangle gate reads the SAME
-    * orders⋈lineitem scan this build pays for — its sampled
-    * customer–customer projection is derived from the one cached joined
-    * base instead of a second scan (r10 VERDICT item 4), and its small
-    * result rides the memo.
+    * `weighted`: each edge weighs its (cust, supp) pair multiplicity in
+    * the filtered orders⋈lineitem rows (g08); otherwise every distinct
+    * edge weighs 1 (g05, g06).
     */
-  private def computeFusedStats(s: SparkSession, dir: String,
-      withUnweighted: Boolean, withWeighted: Boolean,
-      withG07: Boolean = false)
-      : (Option[LouvainStats], Option[WeightedStats],
-         Option[Seq[(Long, Long, Long, Double)]]) = {
-    require(withUnweighted || withWeighted, "at least one side must run")
-    // ONE orders⋈lineitem scan feeds every side: the weighted groupBy is
-    // the same shuffle the unweighted path paid for distinct(), and its
-    // key set IS the distinct edge set. Everything downstream is DEEPLY
-    // fused (r9 VERDICT item 7): one symmetrized build carrying the
-    // weight column, one degree pass emitting BOTH unweighted and
-    // weighted degrees, ONE connected-components run (weights don't
-    // change topology), one ext table holding both assignments, and one
-    // validity/edge-join/explode job each computing both partitions'
-    // invariants — only the two Louvain runs themselves are separate
-    // work, because they are genuinely different algorithms' inputs.
+  private def louvainStats(s: SparkSession, dir: String,
+      weighted: Boolean): LouvainStats = {
     val o = Tables.load(s, dir, "orders")
     val li = Tables.load(s, dir, "lineitem")
-    val base = o.join(li, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey"), col("l_suppkey"), col("l_quantity"),
-        col("l_shipdate"))
-    // the g07 side re-derives the join rather than caching it: the two
-    // consumers need different narrow projections of a join whose output
-    // is corpus-sized, and materializing it to storage costs more than
-    // the second pushdown-pruned scan (measured: caching grew the
-    // producer gate +1.5 s at sf0.1 while the re-scan adds ~0.3 s)
-    // multiplicity-weighted (cust, supp) edges — `edges(filtered = true)`
-    // with the pre-dedup pair count as integer weight; its key set IS the
-    // unweighted distinct edge set (the groupBy replaces the distinct)
-    val wEdges = base
+    // `edges(filtered = true)` with a weight column: the groupBy's key set
+    // IS the distinct edge set, so it replaces the distinct()
+    val wEdges = o.join(li, col("o_orderkey") === col("l_orderkey"))
       .filter(col("l_quantity") === 1 && month(col("l_shipdate")) === 1)
       .groupBy((col("o_custkey") * 2).as("src"),
         (col("l_suppkey") * 2 + 1).as("dst"))
-      .agg(count(lit(1)).cast("long").as("weight"))
+      .agg((if (weighted) count(lit(1)) else lit(1L)).cast("long").as("weight"))
       .cache()
     // shared representation with the oracles: symmetrized distinct edges.
     // wEdges is distinct and loop-free by construction (customer ids
     // even, supplier ids odd), so the union halves cannot collide — no
-    // distinct() needed — and the unweighted und the oracles replay is
-    // exactly wUnd minus its weight column.
+    // distinct() needed.
     val wUnd = wEdges
       .union(wEdges.select(col("dst").as("src"), col("src").as("dst"),
         col("weight")))
       .cache()
     val und = wUnd.select(col("src"), col("dst"))
     val deg = wUnd.groupBy(col("src").as("node_id"))
-      .agg(count(lit(1)).as("deg"), sum(col("weight")).as("degw"))
+      .agg(sum(col("weight")).as("deg"))
       .cache()
-    // one fused scalar job: node count + unweighted 2m (= Σ deg, every
-    // und edge lands in exactly one src degree) + weighted 2m (= Σ degw)
-    val dstat = deg.agg(count(lit(1)),
-      coalesce(sum(col("deg")), lit(0L)),
-      coalesce(sum(col("degw")), lit(0L))).head()
+    // one scalar job: node count + 2m (= Σ deg, every und edge lands in
+    // exactly one src degree)
+    val dstat = deg.agg(count(lit(1)), coalesce(sum(col("deg")), lit(0L))).head()
     val nNodes = dstat.getLong(0)
     val m2 = dstat.getLong(1)
-    val m2w = dstat.getLong(2)
     // vertex-sized sides: broadcast only below the same limit the
     // iterative algorithms use (at 100 TB these fall back to shuffles)
     def small(df: DataFrame): DataFrame =
       if (nNodes < 1000000L) broadcast(df) else df
 
     // 2 levels / 4 sweeps: the gate graph converges within these budgets;
-    // each extra sweep is pure fixed overhead at gate SF.
-    val assignOpt =
-      if (withUnweighted)
-        Some(GraphAlgs.louvainUnd(und, maxLevels = 2, maxSweeps = 4)
-          .localCheckpoint(true))
-      else None
-    val cc = GraphAlgs.connectedComponentsUnd(und)
-      .localCheckpoint(true)
+    // each extra sweep is pure fixed overhead at gate SF. Unit weights
+    // hand Louvain the cached undirected edge list directly.
+    val assign =
+      (if (weighted) GraphAlgs.louvainDF(wEdges, maxLevels = 2, maxSweeps = 4)
+       else GraphAlgs.louvainUnd(und, maxLevels = 2, maxSweeps = 4))
+        .localCheckpoint(true)
+    val cc = GraphAlgs.connectedComponents(und, "src", "dst")
 
-    // full-outer (node -> communityU, communityW, component, degrees)
-    // table: a missing side anywhere (lost/extra/duplicated assignment
-    // rows) surfaces as a null flag in the single validity aggregate.
-    // Each Louvain run (the genuinely separate algorithms) only happens
-    // when a consumer for it exists; the absent side's column rides along
-    // as null so every fused job keeps one shape — the lean fresh-g08
-    // path is this same build with withUnweighted = false.
-    val lwOpt =
-      if (withWeighted)
-        Some(GraphAlgs.louvainDF(wEdges, maxLevels = 2, maxSweeps = 4)
-          .localCheckpoint(true).toDF("node_id", "lw"))
-      else None
-    val withLw = (assignOpt, lwOpt) match {
-      case (Some(a), Some(lw)) =>
-        a.toDF("node_id", "lc").join(lw, Seq("node_id"), "full")
-      case (Some(a), None) =>
-        a.toDF("node_id", "lc").withColumn("lw", lit(null).cast("long"))
-      case (None, Some(lw)) =>
-        lw.select(col("node_id"), lit(null).cast("long").as("lc"), col("lw"))
-      case (None, None) => sys.error("unreachable: require above")
-    }
-    val ext = withLw
+    // full-outer (node -> community, component, degree) table: a missing
+    // side anywhere (lost/extra/duplicated assignment rows) surfaces as a
+    // null flag in the single validity aggregate
+    val ext = assign.toDF("node_id", "lc")
       .join(cc.toDF("node_id", "ccmp"), Seq("node_id"), "full")
       .join(deg, Seq("node_id"), "full")
       .cache()
-    // each absent side's columns are SKIPPED, not computed-and-ignored:
-    // every extra countDistinct adds an Expand multiplier to this job,
-    // and the lean fresh-g08 path exists to pay only for what it emits
-    val vAggs = Seq(
-      count(lit(1)).as("rows"),
-      countDistinct(col("node_id")).as("nd"),
-      countDistinct(col("ccmp")).as("ncomp")) ++
-      (if (withUnweighted) Seq(
-        count(when(col("lc").isNull || col("ccmp").isNull || col("deg").isNull, 1))
-          .as("bad"),
-        countDistinct(col("lc")).as("ncomm"),
-        // refines ⟺ every community meets exactly one component ⟺
-        // #distinct (community, ccmp) pairs == #distinct community
-        countDistinct(col("lc"), col("ccmp")).as("npair"))
-       else Nil) ++
-      (if (withWeighted) Seq(
-        count(when(col("lw").isNull || col("ccmp").isNull || col("degw").isNull, 1))
-          .as("badw"),
-        countDistinct(col("lw")).as("ncommw"),
-        countDistinct(col("lw"), col("ccmp")).as("npairw"))
-       else Nil)
-    val v = ext.agg(vAggs.head, vAggs.tail: _*).head()
-    def vl(name: String): Long = v.getLong(v.fieldIndex(name))
-    val nComps = vl("ncomp")
-    val baseValid = vl("rows") == nNodes && vl("nd") == nNodes
+    val v = ext.agg(
+      count(lit(1)),
+      countDistinct(col("node_id")),
+      countDistinct(col("ccmp")),
+      count(when(col("lc").isNull || col("ccmp").isNull || col("deg").isNull, 1)),
+      countDistinct(col("lc")),
+      // refines ⟺ every community meets exactly one component ⟺
+      // #distinct (community, ccmp) pairs == #distinct community
+      countDistinct(col("lc"), col("ccmp"))).head()
+    val Seq(rows, nd, nComps, bad, nComms, nPairs) = (0 until 6).map(v.getLong)
 
     // exact integer modularity pieces Q·m2² = within·m2 − Σc degc², for
-    // BOTH algorithms and BOTH metrics in ONE edge join: unweighted
-    // within-counts for (lc, ccmp) and weighted within-sums for (lw, ccmp)
-    val jAggs =
-      (if (withUnweighted) Seq(
-        count(when(col("lcs") === col("lcd"), 1)).as("wl"),
-        count(when(col("ccs") === col("ccd"), 1)).as("wc"))
-       else Nil) ++
-      (if (withWeighted) Seq(
-        coalesce(sum(when(col("lws") === col("lwd"), col("weight"))), lit(0L))
-          .as("wlw"),
-        coalesce(sum(when(col("ccs") === col("ccd"), col("weight"))), lit(0L))
-          .as("wcw"))
-       else Nil)
-    val j = wUnd
+    // both partitions in ONE edge join
+    val within = wUnd
       .join(small(ext.select(col("node_id").as("src"), col("lc").as("lcs"),
-        col("lw").as("lws"), col("ccmp").as("ccs"))), Seq("src"))
+        col("ccmp").as("ccs"))), Seq("src"))
       .join(small(ext.select(col("node_id").as("dst"), col("lc").as("lcd"),
-        col("lw").as("lwd"), col("ccmp").as("ccd"))), Seq("dst"))
-      .agg(jAggs.head, jAggs.tail: _*).head()
-    def jl(name: String): Long = j.getLong(j.fieldIndex(name))
+        col("ccmp").as("ccd"))), Seq("dst"))
+      .agg(coalesce(sum(when(col("lcs") === col("lcd"), col("weight"))), lit(0L)),
+        coalesce(sum(when(col("ccs") === col("ccd"), col("weight"))), lit(0L)))
+      .head()
 
-    // fused per-partition pass: explode each node into its (partition,
-    // community-id, relevant-degree) memberships — unweighted Louvain and
-    // CC carry deg, weighted Louvain and CC carry degw — aggregate once
-    // per community, then once per partition: degree-mass squares for all
-    // four modularity numerators AND the unweighted size histogram in a
-    // single job
-    val memberships =
-      (if (withUnweighted) Seq(
+    // fused per-partition pass: explode each node into its Louvain and CC
+    // memberships, aggregate once per community, then once per partition:
+    // degree-mass squares for both modularity numerators AND the size
+    // histograms in a single job
+    val ps = ext.select(explode(array(
         struct(lit("l").as("k"), col("lc").as("cid"), col("deg").as("d")),
-        struct(lit("c").as("k"), col("ccmp").as("cid"), col("deg").as("d")))
-       else Nil) ++
-      (if (withWeighted) Seq(
-        struct(lit("x").as("k"), col("lw").as("cid"), col("degw").as("d")),
-        struct(lit("y").as("k"), col("ccmp").as("cid"), col("degw").as("d")))
-       else Nil)
-    val ps = ext.select(explode(array(memberships: _*)).as("kc"))
+        struct(lit("c").as("k"), col("ccmp").as("cid"), col("deg").as("d"))))
+        .as("kc"))
       .select(col("kc.k").as("k"), col("kc.cid").as("cid"), col("kc.d").as("d"))
       .groupBy(col("k"), col("cid"))
       .agg(coalesce(sum(col("d")), lit(0L)).as("dmass"),
@@ -500,61 +317,24 @@ object GraphQueries {
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val (dl, minSz, maxSz, sumSz) = ps.getOrElse("l", (0L, 0L, 0L, 0L))
     val (dc, _, maxCsz, _) = ps.getOrElse("c", (0L, 0L, 0L, 0L))
-    val dlw = ps.getOrElse("x", (0L, 0L, 0L, 0L))._1
-    val dcw = ps.getOrElse("y", (0L, 0L, 0L, 0L))._1
-
-    // g07's triangle stats from a RE-SCAN of the o⋈li join (deliberately
-    // not cached — see the wEdges comment above: the second
-    // pushdown-pruned scan is cheaper than materializing the corpus-sized
-    // join). Memoized driver-side (the rows are the gate's own small
-    // result: one per sampled customer); guarded by the same vertex bound
-    // as the broadcast sides — a graph past the guard sends g07 down its
-    // fresh distributed path instead.
-    val g7 =
-      if (withG07 && nNodes < 1000000L) {
-        val pe = base.filter(col("o_custkey") % 100 === 0)
-          .select((col("o_custkey") * 2).as("a"),
-            (col("l_suppkey") * 2 + 1).as("b"))
-          .distinct()
-        val proj = pe.as("x").join(pe.as("y"),
-            col("x.b") === col("y.b") && col("x.a") < col("y.a"))
-          .select(col("x.a").as("u"), col("y.a").as("v")).distinct()
-        Some(triangleStats(proj).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getDouble(3))).toSeq)
-      } else None
 
     // every invariant is computed — release the caches so nothing squats
     // on executor storage into the next query
     Seq(ext, deg, wUnd, wEdges).foreach(_.unpersist(blocking = false))
-    val un =
-      if (withUnweighted)
-        Some(LouvainStats(m2 = m2, nNodes = nNodes, nComps = nComps,
-          maxCsz = maxCsz,
-          nComms = vl("ncomm"), minSize = minSz, maxSize = maxSz,
-          sumSizes = sumSz,
-          ccModNum = jl("wc") * m2 - dc, lvModNum = jl("wl") * m2 - dl,
-          valid = baseValid && vl("bad") == 0L,
-          refines = vl("ncomm") == vl("npair")))
-      else None
-    val w =
-      if (withWeighted)
-        Some(WeightedStats(m2 = m2w, nNodes = nNodes, nComps = nComps,
-          nComms = vl("ncommw"),
-          ccModNum = jl("wcw") * m2w - dcw, lvModNum = jl("wlw") * m2w - dlw,
-          valid = baseValid && vl("badw") == 0L,
-          refines = vl("ncommw") == vl("npairw")))
-      else None
-    (un, w, g7)
+    LouvainStats(m2 = m2, nNodes = nNodes, nComps = nComps, maxCsz = maxCsz,
+      nComms = nComms, minSize = minSz, maxSize = maxSz, sumSizes = sumSz,
+      ccModNum = within.getLong(1) * m2 - dc,
+      lvModNum = within.getLong(0) * m2 - dl,
+      valid = rows == nNodes && nd == nNodes && bad == 0L,
+      refines = nComms == nPairs)
   }
-
 
   val g05 = QueryDef(
     "g05_communities",
     "Louvain partition invariants + CC-modularity cross-check (Q7)",
     (s, dir) => {
       import s.implicits._
-      val st = louvainStats(s, dir, "g05")
+      val st = louvainStats(s, dir, weighted = false)
       // value-encoded invariants (r9: no literal-TRUE pins left) — each
       // Louvain-specific invariant emits a value the oracle independently
       // recomputes from the raw tables, or -1 when it fails:
@@ -637,14 +417,14 @@ object GraphQueries {
     *     count.
     * A broken Louvain (lost/duplicated nodes, cross-component merges,
     * degenerate collapse) skews one of these values and hash-fails the
-    * gate. Shares one Louvain+CC run with g05 via [[louvainStats]].
+    * gate. Reads the same [[louvainStats]] g05 does, computed per call.
     */
   val g06 = QueryDef(
     "g06_louvain_histogram",
     "Louvain community-size histogram invariants (Q7 user shape)",
     (s, dir) => {
       import s.implicits._
-      val st = louvainStats(s, dir, "g06")
+      val st = louvainStats(s, dir, weighted = false)
       val inBounds = st.nComms >= st.nComps && st.nComms <= st.sumSizes
       val minOk = st.minSize >= 1L || st.nComms == 0L
       Seq((if (inBounds) st.nNodes else -1L,
@@ -702,10 +482,7 @@ object GraphQueries {
     "weighted Louvain invariants on the multiplicity-weighted graph (Q7 weight column)",
     (s, dir) => {
       import s.implicits._
-      // memo-aware: a preceding g05/g06 fused run already computed the
-      // weighted invariants from the shared scan + CC; fresh runs pay
-      // only the weighted side (computeFusedStats, withUnweighted=false)
-      val st = weightedStats(s, dir)
+      val st = louvainStats(s, dir, weighted = true)
       val inBounds = st.nComms >= st.nComps && st.nComms <= st.nNodes
       Seq((st.ccModNum,
         if (inBounds) st.nNodes else -1L,
@@ -800,7 +577,7 @@ object GraphQueries {
     } else {
       proj.count() // orientation + wedge + closing joins all reuse it
       // materialize (node-bounded rows), then release the projection
-      // cache — a long-lived session (RepeatCheck) must not accumulate
+      // cache — a long-lived session must not accumulate
       // one cached edge set per invocation
       val out = triangleFrame(proj).localCheckpoint(true)
       proj.unpersist(blocking = false)
@@ -845,8 +622,7 @@ object GraphQueries {
   }
 
   /** The lazy (node, degree, triangles, lcc) plan over a CACHED
-    * projection — the core of [[triangleStats]] (both the g07 gate's
-    * fresh path and the g05 fused build's memoized consumer run it).
+    * projection — the distributed core of [[triangleStats]].
     */
   private def triangleFrame(proj: DataFrame): DataFrame = {
     val deg = proj.select(explode(array(col("u"), col("v"))).as("n"))
@@ -878,18 +654,11 @@ object GraphQueries {
   val g07 = QueryDef(
     "g07_triangles",
     "per-node triangles + local clustering coefficient (oriented wedges)",
-    (s, dir) => g07FromMemo(dir) match {
-      // a preceding g05 fused run already derived these rows from the
-      // shared orders⋈lineitem scan (consume-once; node-ordered as the
-      // gate emits them)
-      case Some(rows) =>
-        import s.implicits._
-        rows.toDF("node", "degree", "triangles", "lcc")
-      case None =>
-        val e = edges(s, dir, filtered = false).filter(col("a") % 200 === 0)
-        triangleStats(e.as("x").join(e.as("y"),
-            col("x.b") === col("y.b") && col("x.a") < col("y.a"))
-          .select(col("x.a").as("u"), col("y.a").as("v")).distinct())
+    (s, dir) => {
+      val e = edges(s, dir, filtered = false).filter(col("a") % 200 === 0)
+      triangleStats(e.as("x").join(e.as("y"),
+          col("x.b") === col("y.b") && col("x.a") < col("y.a"))
+        .select(col("x.a").as("u"), col("y.a").as("v")).distinct())
     },
     Some("""WITH e AS (SELECT DISTINCT o_custkey*2 AS a, l_suppkey*2+1 AS b
               FROM orders JOIN lineitem ON o_orderkey = l_orderkey

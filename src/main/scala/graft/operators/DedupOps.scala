@@ -837,8 +837,8 @@ object DedupOps {
     * is one left join against the corpus keyed by doc_id. The oracle replays the same minhash chain in SQL
     * and closes it with the recursive min-label CTE used by g03.
     */
-  /** d06 core, reused by d13: the total (doc_id → canonical_id) map from
-    * the LSH pair set's transitive closure (unpaired docs map to
+  /** d06 core, reused by d13 and d16: the total (doc_id → canonical_id)
+    * map from the LSH pair set's transitive closure (unpaired docs map to
     * themselves).
     */
   private[graft] def canonicalMap(docs: DataFrame): DataFrame = {
@@ -848,47 +848,6 @@ object DedupOps {
       .join(comp, col("doc_id") === col("node_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("canonical_id"))
-  }
-
-  /** Consume-once handoff of the d06 canonical map among its three gates
-    * (d06 → d13 → d16 in registry order) — the GraphQueries Louvain-memo
-    * discipline applied to the LSH + transitive-closure run: ONE closure
-    * computation feeds all three when they run as a suite, while an
-    * isolated gate (refloor, bench rep: `producer == gate`, or an already
-    * consumed entry) still computes its own, keeping isolated timings
-    * honest. Unlike the Louvain memo this entry holds a corpus-sized
-    * CACHED frame, not scalars, so release is deferred: a frame leaving
-    * the memo (fully consumed or replaced) is PARKED, not unpersisted —
-    * the departing consumer's action has not run yet and an immediate
-    * unpersist would force the closure to recompute — and freed on the
-    * next production. Lingering cache is bounded to one map (≤ one row
-    * per doc: doc_id, canonical_id).
-    */
-  private final case class CmEntry(producer: String, dir: String,
-      cm: DataFrame, consumed: Set[String])
-  private val cmGates = Set("d06_dedup_resolve", "d13_leakage_safe_split",
-    "d16_soft_dedup_weights")
-  private val cmMemo =
-    new java.util.concurrent.atomic.AtomicReference[Option[CmEntry]](None)
-  private var cmParked: List[DataFrame] = Nil
-
-  private[graft] def canonicalMapFor(s: SparkSession, dir: String,
-      gate: String): DataFrame = cmMemo.synchronized {
-    cmMemo.get() match {
-      case Some(e) if e.dir == dir && e.producer != gate && !e.consumed(gate) =>
-        val c = e.consumed + gate
-        if (cmGates.subsetOf(c + e.producer)) {
-          cmMemo.set(None); cmParked ::= e.cm
-        } else cmMemo.set(Some(e.copy(consumed = c)))
-        e.cm
-      case prev =>
-        val cm = canonicalMap(Tables.load(s, dir, "documents")).cache()
-        cm.count() // materialize inside the producing gate
-        cmParked.foreach(_.unpersist(blocking = false))
-        cmParked = prev.map(_.cm).toList
-        cmMemo.set(Some(CmEntry(gate, dir, cm, Set.empty)))
-        cm
-    }
   }
 
   /** DuckDB replay of [[canonicalMap]] (d06's oracle body, shared with
@@ -913,7 +872,7 @@ object DedupOps {
   val d06 = QueryDef(
     "d06_dedup_resolve",
     "near-dup clusters -> canonical doc map (LSH pairs + transitive closure)",
-    (s, dir) => canonicalMapFor(s, dir, "d06_dedup_resolve")
+    (s, dir) => canonicalMap(Tables.load(s, dir, "documents"))
       .orderBy(col("doc_id")),
     Some(s"""$canonicalMapSqlCtes
       SELECT d.doc_id, $canonicalIdSql AS canonical_id
@@ -1264,7 +1223,7 @@ object DedupOps {
   val d13 = QueryDef(
     "d13_leakage_safe_split",
     "near-dup-cluster-aware 80/10/10 split (t06 rule on d06 canonical ids)",
-    (s, dir) => canonicalMapFor(s, dir, "d13_leakage_safe_split")
+    (s, dir) => canonicalMap(Tables.load(s, dir, "documents"))
       .select(col("doc_id"), col("canonical_id"),
         TextOps.trainSplitColOn(col("canonical_id")).as("split"))
       .orderBy(col("doc_id")),
@@ -1580,7 +1539,7 @@ object DedupOps {
     "d16_soft_dedup_weights",
     "soft dedup: per-doc weight 1/|near-dup cluster| (cluster mass = 1)",
     (s, dir) =>
-      softDedupWeights(canonicalMapFor(s, dir, "d16_soft_dedup_weights")),
+      softDedupWeights(canonicalMap(Tables.load(s, dir, "documents"))),
     Some(s"""$canonicalMapSqlCtes,
       cm AS (SELECT d.doc_id, $canonicalIdSql AS canonical_id
              FROM (SELECT DISTINCT doc_id FROM documents) d
@@ -1626,8 +1585,8 @@ object DedupOps {
     // materialize BEFORE releasing: an early unpersist would mean the
     // cache filled by the contract counts never serves the actual
     // execution (r10 ADVICE) — and eagerness lets BOTH caches go,
-    // including arr, so a long-lived session (RepeatCheck's double
-    // sweep) accumulates nothing from this gate
+    // including arr, so a long-lived session accumulates nothing from
+    // this gate
     val out = corp
       .select(col("doc_id"), size(col("shArr")).cast("bigint").as("n_sh"))
       .join(hits, Seq("doc_id"), "left")

@@ -948,7 +948,7 @@ object IndexStore {
     * batches (the d08 batch convention), query from the result — which
     * must hash-match a08's one-shot SQL exactly, because append ≡ full
     * rebuild at the table level. A fresh temp location per invocation so
-    * every call (bench rep, RepeatCheck sweep) exercises the real
+    * every call (bench rep, a long-lived session) exercises the real
     * build+append+merge chain, not a cached artifact.
     */
   val a12 = QueryDef(

@@ -6,7 +6,7 @@ import graft.Tables
 
 /** The ONE local-session builder for the driver-contract mains (Verify,
   * Bench, CyberPipeline) and the `graft.tools` drivers (PipelineBench,
-  * RepeatCheck, ScaleData, SkewData, StreamBatchBench). Each used to
+  * ScaleData, SkewData, StreamBatchBench). Each used to
   * inline the identical six-line incantation —
   * requiredConf fold, `SPARK_GRAFT_CPUS` master, 32 shuffle partitions,
   * UTC session timezone, UI off — and the copies had already started to

@@ -256,52 +256,6 @@ class ErEvalSpec extends AnyFunSuite with graft.SparkTestSession {
       "the row limit still applies on its own")
   }
 
-  test("scorePairs prune: bounds dominate the score, so pruned == unpruned above the threshold") {
-    import spark.implicits._
-    // the r14 VERDICT item 2 contract: lev_sim ≤ 1 − |Δlen|/maxlen, so a
-    // pair whose cheap-bound combined score sits under the threshold can
-    // skip levenshtein entirely — surviving pairs are value-identical
-    // and no passer is ever pruned. Fixture mixes near-dups, length-
-    // mismatched pairs (the prune's target), and plural folds.
-    val labels = Seq(
-      (0L, "Entity1 Corp", "ORG"), (1L, "Entity1 Corp inc", "ORG"),
-      (2L, "Entity1 Corps", "ORG"), (3L, "Acme Systems", "ORG"),
-      (4L, "Acme Systems Worldwide Holdings International", "ORG"),
-      (5L, "North Atlantica", "GPE"), (6L, "North Atlantic", "GPE"),
-      (7L, "Kimsukys", "PERSON"), (8L, "Kimsuky", "PERSON"),
-      (9L, "K", "PERSON"))
-      .toDF("id", "label", "type")
-    val pairs = EntityResolution.blockPairs(labels)
-    val thr = lit(0.6)
-    def edges(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.filter(col("score") >= 0.6)
-        .select(col("id_a"), col("id_b"), col("score"))
-        .collect().map(_.toString).sorted.toSeq
-    val unpruned = EntityResolution.scorePairs(pairs, labels)
-    val pruned = EntityResolution.scorePairs(pairs, labels, Some(thr))
-    assert(edges(pruned) == edges(unpruned),
-      "prune changed the above-threshold edge set or its scores")
-    // same pair set comes back (the prune is a lazy CaseWhen, not a row
-    // drop), and every below-threshold placeholder is the pair's upper
-    // BOUND — which must itself sit under the threshold AND dominate the
-    // true score (bound >= score), so the caller's filter behaves
-    // identically to filtering true scores
-    assert(pruned.count() == unpruned.count())
-    val joined = pruned.select(col("id_a"), col("id_b"), col("score").as("sp"))
-      .join(unpruned.select(col("id_a"), col("id_b"), col("score").as("su")),
-        Seq("id_a", "id_b"))
-    assert(joined.filter(col("sp") >= 0.6 && col("sp") =!= col("su")).isEmpty,
-      "an above-threshold pair's score diverged from the unpruned scorer")
-    assert(joined.filter(col("sp") < 0.6 && col("su") >= 0.6).isEmpty,
-      "a true passer was pruned — the bound failed to dominate the score")
-    assert(joined.filter(col("sp") < col("su")).isEmpty,
-      "a placeholder fell below the true score — not an upper bound")
-    // the fixture exercises the placeholder branch (length-mismatched
-    // pairs whose bound can't reach the threshold)
-    assert(joined.filter(col("sp") < 0.6 && col("sp") =!= col("su")).count() > 0,
-      "fixture exercised no pruning — every pair's bound cleared the threshold")
-  }
-
   /** Hostile blocking vocabulary: 1218·scale entities × 3 spelling
     * variants ("EntityN Corp" / "EntityN Corp inc" / "EntityN Corps")
     * across the 4 NER types — 3,654 labels per unit scale, the

@@ -48,9 +48,10 @@ class GraphAlgsSpec extends AnyFunSuite with graft.SparkTestSession {
   }
 
   test("connectedComponentsSized matches connectedComponents (elbow-sweep distributed path)") {
-    // the elbow sweep's beyond-driver-cap fallback: directed pairs in,
-    // symmetrized internally, edge-proportional partitioning — labels
-    // must be the same min-member ids the driver path produces
+    // the elbow sweep's beyond-driver-cap fallback: directed pairs in
+    // (GraphX CC follows both edge directions), edge-proportional
+    // partitioning — labels must be the same min-member ids the driver
+    // path produces
     val e = edgeDf(1L -> 2L, 2L -> 3L, 10L -> 11L, 7L -> 3L, 20L -> 20L)
     val viaSized = ccMap(GraphAlgs.connectedComponentsSized(e, "src", "dst", 5L))
     val viaEntry = ccMap(GraphAlgs.connectedComponents(e, "src", "dst"))

@@ -293,29 +293,6 @@ class DedupOpsSpec extends AnyFunSuite with graft.SparkTestSession {
       3L -> ((2L, 0L, 0.0, "clean"))), s"got=$got")
   }
 
-  test("canonical-map memo: one closure run feeds d06/d13/d16, reps recompute") {
-    val dir = "/root/testdata/sf0.001"
-    val a = DedupOps.canonicalMapFor(spark, dir, "d06_dedup_resolve")
-    val b = DedupOps.canonicalMapFor(spark, dir, "d13_leakage_safe_split")
-    val c = DedupOps.canonicalMapFor(spark, dir, "d16_soft_dedup_weights")
-    assert((b eq a) && (c eq a), "suite consumers share the produced frame")
-    // fully consumed -> cleared: the next call produces a FRESH frame
-    val d = DedupOps.canonicalMapFor(spark, dir, "d06_dedup_resolve")
-    assert(!(d eq a), "post-consumption rep recomputes")
-    // a bench rep by the producer itself must not consume its own entry
-    val e = DedupOps.canonicalMapFor(spark, dir, "d06_dedup_resolve")
-    assert(!(e eq d), "producer rep recomputes (isolated floors stay honest)")
-    // and the values are the real canonical map either way
-    val viaMemo = e.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val direct = DedupOps.canonicalMap(
-      graft.Tables.load(spark, dir, "documents"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(viaMemo.sameElements(direct))
-    // leave the memo clean for other suites: consume the live entry out
-    DedupOps.canonicalMapFor(spark, dir, "d13_leakage_safe_split")
-    DedupOps.canonicalMapFor(spark, dir, "d16_soft_dedup_weights")
-  }
-
   test("capBands: oversized buckets truncate to the cap lowest ids, healthy buckets untouched") {
     import spark.implicits._
     // five byte-identical docs share EVERY band signature: one 5-member
