@@ -11,7 +11,6 @@ set -e
 cd /root/repo
 OUT=/tmp/full100
 mkdir -p $OUT
-echo '{}' > $OUT/no_prev.json   # disable auto-refloors: reps=1 is not a floor
 
 # 1. materialize 100x of ALL tables (region/nation stay base dimension
 #    tables by ScaleData's model)
@@ -27,7 +26,6 @@ fi
 #    measures query-only floors, the build cost is in BENCH_INDEX)
 SPARK_GRAFT_SF_DIR=/tmp/graft_full100 SPARK_GRAFT_REPS=1 \
 SPARK_GRAFT_TIMEOUT_SEC=900 \
-SPARK_GRAFT_PREV_BENCH=$OUT/no_prev.json \
 SPARK_GRAFT_BENCH_OUT=$OUT/suite100.json SPARK_DRIVER_MEM=48g \
   sbt -batch "runMain graft.Bench" > $OUT/suite.log 2>&1 || true
 tail -1 $OUT/suite100.json 2>/dev/null || echo "(no artifact)"

@@ -12,7 +12,6 @@ cd /root/repo
 GATES="t01_,d01_,d02_,d06_,d08_,d19_"
 OUT=/tmp/skewbench
 mkdir -p $OUT
-echo '{}' > $OUT/no_prev.json   # disable auto-refloors for special runs
 
 # 1. materialize the skewed corpora
 sbt -batch "runMain graft.tools.SkewData /root/testdata/sf0.1 /tmp/graft_skew/sf0.1" \
@@ -32,7 +31,6 @@ run_bench() { # name sfdir cap reps timeout
   echo "=== $name (dir=$dir cap=$cap) ==="
   SPARK_GRAFT_SF_DIR=$dir SPARK_GRAFT_ONLY=$GATES SPARK_GRAFT_REPS=$reps \
   SPARK_GRAFT_TIMEOUT_SEC=$to SPARK_GRAFT_BAND_CAP=$cap \
-  SPARK_GRAFT_PREV_BENCH=$OUT/no_prev.json \
   SPARK_GRAFT_BENCH_OUT=$OUT/$name.json SPARK_DRIVER_MEM=32g \
     sbt -batch "runMain graft.Bench" > $OUT/$name.log 2>&1 || true
   tail -1 $OUT/$name.json 2>/dev/null || echo "(no artifact)"

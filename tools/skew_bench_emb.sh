@@ -8,7 +8,6 @@ cd /root/repo
 GATES="d04_,d20_"
 OUT=/tmp/skewbench
 mkdir -p $OUT
-echo '{}' > $OUT/no_prev.json
 
 # regenerate the skew dirs with the embedding rule (SkewData now skews
 # embeddings too), and a 10x documents+embeddings scale base
@@ -30,7 +29,6 @@ run_bench() { # name sfdir reps timeout
   echo "=== $name (dir=$dir) ==="
   SPARK_GRAFT_SF_DIR=$dir SPARK_GRAFT_ONLY=$GATES SPARK_GRAFT_REPS=$reps \
   SPARK_GRAFT_TIMEOUT_SEC=$to \
-  SPARK_GRAFT_PREV_BENCH=$OUT/no_prev.json \
   SPARK_GRAFT_BENCH_OUT=$OUT/$name.json SPARK_DRIVER_MEM=32g \
     sbt -batch "runMain graft.Bench" > $OUT/$name.log 2>&1 || true
   tail -1 $OUT/$name.json 2>/dev/null || echo "(no artifact)"
