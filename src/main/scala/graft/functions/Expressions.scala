@@ -179,12 +179,8 @@ object ExpressionHelpers {
     var bestS = 0.0
     var i = 0
     while (i < ids.length) {
-      val div = norm * norms(i)
-      val dNull = dotNull(emb, embs(i))
-      if (ansi && !normNull && div == 0 && !dNull)
-        throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero in nearest_centroid")
-      val sNull = dNull || normNull || div == 0
-      val s = if (sNull) 0.0 else dot(emb, embs(i)) / div
+      val sNull = scoreNull(emb, normNull, norm, embs(i), norms(i), ansi)
+      val s = if (sNull) 0.0 else dot(emb, embs(i)) / (norm * norms(i))
       val cmp = compareScores(sNull, s, bestNull, bestS)
       if (best < 0 || cmp > 0 || (cmp == 0 && ids(i) < ids(best))) {
         best = i; bestNull = sNull; bestS = s
@@ -193,6 +189,35 @@ object ExpressionHelpers {
     }
     best
   }
+
+  /** Whether the cosine of `emb` against centroid `c` is null under
+    * `Divide`; a zero divisor raises under ANSI when the dot product is
+    * not null.
+    */
+  private def scoreNull(emb: Array[Double], normNull: Boolean, norm: Double,
+      c: Array[Double], cNorm: Double, ansi: Boolean): Boolean = {
+    val div = norm * cNorm
+    val dNull = dotNull(emb, c)
+    if (ansi && !normNull && div == 0 && !dNull)
+      throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero in nearest_centroid")
+    dNull || normNull || div == 0
+  }
+
+  /** The `n` best centroids of [[nearestCentroid]]'s ranking, best first,
+    * as `(index, score)` with a null score as None: the same scores,
+    * `Divide` semantics and order (null lowest, NaN highest, -0.0 equal
+    * to 0.0, ties to the smallest id).
+    */
+  def rankCentroids(emb: Array[Double], norm: Double,
+      embs: Array[Array[Double]], norms: Array[Double], ids: Array[Long],
+      ansi: Boolean, n: Int): Seq[(Int, Option[Double])] =
+    ids.indices.map { i =>
+      val sNull = scoreNull(emb, normNull = false, norm, embs(i), norms(i), ansi)
+      (i, if (sNull) None else Some(dot(emb, embs(i)) / (norm * norms(i))))
+    }.sortWith { case ((i, a), (j, b)) =>
+      val cmp = compareScores(a.isEmpty, a.getOrElse(0.0), b.isEmpty, b.getOrElse(0.0))
+      cmp > 0 || (cmp == 0 && ids(i) < ids(j))
+    }.take(n)
 
   /** [[PqCode]]'s per-row loop over the code indices `cands` at the
     * row's subspace: the index of the winning code, -1 when none.

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.{QueryDef, Tables}
+import graft.functions.ExpressionHelpers
 import graft.functions.GraftFunctions.{pqCode, vecDot}
 
 /** Approximate/exact nearest-neighbor search over the `embeddings` table.
@@ -65,11 +67,7 @@ object AnnOps {
       .crossJoin(broadcast(q))
       .select(col("q_id"), col("vec_id"),
         (dotCol / (col("norm") * col("q_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("rank"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
+    topKPerQuery(scored, "sim", k)
   }
 
   /** Brute-force cosine top-k (k=10) for query vectors vec_id < 5. */
@@ -180,11 +178,7 @@ object AnnOps {
       .join(broadcast(q), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
         (dotCol / (col("norm") * col("q_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("rank"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
+    topKPerQuery(scored, "sim", k)
   }
 
   /** The [[lshKnn]] default (8 planes x 4 bands, k=10) as a gated query:
@@ -258,137 +252,91 @@ object AnnOps {
   }
 
   /** IVF search core shared by the seeded gate ([[a03]]) and the
-    * k-means-trained path ([[ivfKnnTrained]]): assign every vector to its
-    * nearest centroid by cosine (ties to the smallest c_id), probe the
-    * `nProbes` nearest centroids per query (vec_id < 5, the gate's query
-    * convention), and exactly score ONLY the probed cells. `cents` must
-    * carry (c_id, c_emb, c_norm); a coarse quantizer is k << corpus by
-    * definition, so it is collected for the assignment and broadcast for
-    * the probe pick.
+    * k-means-trained path ([[ivfKnnTrained]]), from collected panels:
+    * assign every vector to its nearest centroid by cosine
+    * ([[CentroidAssign.nearestOf]]), probe each query's `nProbes` nearest
+    * cells ([[probedCands]]) and exactly score ONLY the probed cells.
+    * `qs` is the query panel (vec_id < 5, the gate's query convention)
+    * and `cents` the centroids, both `(id, emb, norm)`: a coarse
+    * quantizer is k << corpus by definition, so assignment, probe pick
+    * and the broadcast query side all derive from these literal rows.
     */
-  private[operators] def ivfSearch(e: DataFrame, cents: DataFrame,
-      nProbes: Int = 2, topK: Int = 10): DataFrame =
-    exactScoreCands(e, ivfCandidates(e, cents, nProbes), topK)
-
-  /** [[ivfSearch]] from a PRE-COLLECTED seed panel (r18, r17 VERDICT Next
-    * #5 — trim the seeded-collect round-trips): the seeded gate's queries
-    * (vec_id < 5) are a subset of its centroids (vec_id < 16), so ONE
-    * collect yields centroids, the per-query probe pick ([[probeRowsOf]],
-    * driver-side over k·|Q| scalars), and the broadcast query panel —
-    * where the r17 form paid a separate collect inside the assignment and
-    * rebuilt probe/query frames from the cached corpus. Values identical:
-    * same assignment expression ([[CentroidAssign.nearestOf]]), same
-    * probe ordering, same literal floats (collected, not recomputed).
-    */
-  private[operators] def ivfSearchSeeded(e: DataFrame,
-      seeds: Seq[(Long, Seq[Double], Double)],
+  private[operators] def ivfSearch(e: DataFrame,
+      qs: Seq[(Long, Seq[Double], Double)],
+      cents: Seq[(Long, Seq[Double], Double)],
       nProbes: Int = 2, topK: Int = 10): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    val qs = seeds.filter(_._1 < 5)
-    val probes = probeRowsOf(qs, seeds, nProbes).toDF("q_id", "c_id")
-    val cand = broadcast(probes)
-      .join(CentroidAssign.nearestOf(e, seeds), Seq("c_id"))
-      .filter(col("vec_id") >= 5)
-      .select(col("q_id"), col("vec_id"))
-    exactScoreCands(e, cand, topK, qPanel = Some(qs))
-  }
-
-  /** The exact-cosine scoring + rank tail shared by [[ivfSearch]] and
-    * [[ivfSearchSeeded]] — one definition of the score/tie-break/top-k
-    * contract. `qPanel` substitutes a collected query panel for the
-    * corpus-derived broadcast frame (same rows, literal floats).
-    */
-  private def exactScoreCands(e: DataFrame, cand: DataFrame, topK: Int,
-      qPanel: Option[Seq[(Long, Seq[Double], Double)]] = None): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    val q = qPanel match {
-      case Some(rows) => rows.toDF("q_id", "q_emb", "q_norm")
-      case None => e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
-    }
-    val scored = cand
+    val scored = probedCands(qs, cents, CentroidAssign.nearestOf(e, cents), nProbes)
       .join(e, Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
+      .join(broadcast(qs.toDF("q_id", "q_emb", "q_norm")), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
         (dotCol / (col("norm") * col("q_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
+    topKPerQuery(scored, "sim", topK)
+  }
+
+  /** Each query's top `k` rows of `scored` by `score` desc, ties to the
+    * smaller vec_id, as `(q_id, vec_id, rank, score)` ordered by
+    * (q_id, rank): the rank tail of every top-k search here.
+    */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col(score).desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id"), col("rank"), col("sim"))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("vec_id"), col("rank"), col(score))
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** ONE collect of the seeded model panel (vec_id < kSeeds, with norms):
-    * centroids, the PQ codebook rows ([[seededCodes]]), the probe pick and
-    * the query panel all derive from these k rows driver-side — one
-    * driver round-trip per gate invocation where r17 paid one per model
-    * table (the honestly-recorded a03/a07 regression mechanism).
+  /** `(vec_id, emb, norm)` rows with `vec_id < below`, collected: the
+    * seeded model panel (centroids and PQ codebook rows, [[seededCodes]])
+    * or, with `below = 5`, the query panel.
     */
   private[operators] def collectSeeds(e: DataFrame,
-      kSeeds: Int): Seq[(Long, Seq[Double], Double)] =
-    e.filter(col("vec_id") < kSeeds)
+      below: Int): Seq[(Long, Seq[Double], Double)] =
+    e.filter(col("vec_id") < below)
       .select(col("vec_id"), col("emb"), col("norm")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
 
-  /** [[ivfProbes]]' per-query probe pick computed driver-side from
-    * collected panels — value-identical to the window form: [[dotSeq]] ≡
-    * vecDot bitwise, identical IEEE divide/multiply, and
-    * `java.lang.Double.compare` orders NaN largest exactly as Spark's
-    * double ordering (desc ⇒ NaN first), ties to the smallest c_id.
+  /** A centroid frame `(c_id, c_emb, c_norm)` collected as literal rows. */
+  private[operators] def collectCents(cents: DataFrame): Seq[(Long, Seq[Double], Double)] =
+    cents.select(col("c_id").cast("long"), col("c_emb"), col("c_norm")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
+
+  /** THE probe pick of the IVF family: each query's `nProbes` nearest
+    * centroids by cosine, best first, as `(q_id, c_id, psim)` with a null
+    * psim as None. Scores, order and zero-divisor handling are
+    * [[graft.functions.ExpressionHelpers.rankCentroids]]', i.e. the
+    * assignment's ([[CentroidAssign]]): `Divide` semantics (a zero norm
+    * scores null and ranks lowest, or raises under ANSI), NaN highest,
+    * ties to the smallest c_id — the DuckDB oracles' `ORDER BY psim
+    * DESC, c_id` order. Driver-side over |Q|·k scalars.
     */
-  private def probeRowsOf(qs: Seq[(Long, Seq[Double], Double)],
+  private[operators] def probeRowsOf(qs: Seq[(Long, Seq[Double], Double)],
       cents: Seq[(Long, Seq[Double], Double)],
-      nProbes: Int): Seq[(Long, Long)] = {
-    val ord = new Ordering[(Long, Double)] {
-      def compare(a: (Long, Double), b: (Long, Double)): Int = {
-        val c = java.lang.Double.compare(b._2, a._2) // psim DESC, NaN first
-        if (c != 0) c else java.lang.Long.compare(a._1, b._1)
-      }
-    }
+      nProbes: Int): Seq[(Long, Long, Option[Double])] = {
+    val ids = cents.map(_._1).toArray
+    val embs = cents.map(_._2.toArray).toArray
+    val norms = cents.map(_._3).toArray
+    val ansi = SQLConf.get.ansiEnabled
     qs.flatMap { case (qid, qe, qn) =>
-      cents.map { case (cid, ce, cn) => (cid, dotSeq(qe, ce) / (qn * cn)) }
-        .sorted(ord).take(nProbes).map { case (cid, _) => (qid, cid) }
+      ExpressionHelpers.rankCentroids(qe.toArray, qn, embs, norms, ids, ansi, nProbes)
+        .map { case (i, psim) => (qid, ids(i), psim) }
     }
   }
 
-  /** ONE definition of IVF candidate generation, shared by the
-    * full-precision path ([[ivfSearch]] → a03/ivfKnnTrained) and the
-    * PQ-ADC path ([[ivfPqAdcScored]] → a06/a07): assign every corpus
-    * vector to its nearest centroid by cosine (ties to the smallest
-    * c_id), pick the `nProbes` nearest cells per query (vec_id < 5, the
-    * gate query convention), and emit the (q_id, vec_id) candidates in
-    * the probed cells. Both families' oracles pin the same tie-break and
-    * probe conventions, so a fix here reaches both by construction.
+  /** The (q_id, vec_id) candidates of the IVF family: the vectors of
+    * `assign` `(vec_id, c_id)` in each query's probed cells
+    * ([[probeRowsOf]]), corpus side `vec_id >= 5`.
     */
-  private def ivfCandidates(e: DataFrame, cents: DataFrame,
-                            nProbes: Int): DataFrame =
-    broadcast(ivfProbes(e, cents, nProbes))
-      .join(CentroidAssign.nearest(e, cents), Seq("c_id"))
+  private def probedCands(qs: Seq[(Long, Seq[Double], Double)],
+      cents: Seq[(Long, Seq[Double], Double)], assign: DataFrame,
+      nProbes: Int): DataFrame = {
+    val s = assign.sparkSession
+    import s.implicits._
+    broadcast(probeRowsOf(qs, cents, nProbes).map(t => (t._1, t._2)).toDF("q_id", "c_id"))
+      .join(assign, Seq("c_id"))
       .filter(col("vec_id") >= 5)
       .select(col("q_id"), col("vec_id"))
-
-  /** The per-query probe pick alone (q_id, c_id) — factored from
-    * [[ivfCandidates]] so the [[IndexStore]] query path can join it
-    * against a PERSISTED assignment table instead of recomputing the
-    * corpus assignment (the whole point of the at-rest index).
-    */
-  private[operators] def ivfProbes(e: DataFrame, cents: DataFrame,
-                                   nProbes: Int): DataFrame = {
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("psim").desc, col("c_id"))
-    e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm").as("q_norm"))
-      .crossJoin(broadcast(cents))
-      .select(col("q_id"), col("c_id"),
-        (vecDot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-          .as("psim"))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nProbes)
-      .select(col("q_id"), col("c_id"))
   }
 
   /** Deterministic-structure Lloyd (k-means) refinement for the IVF
@@ -446,13 +394,11 @@ object AnnOps {
   def ivfKnnTrained(s: SparkSession, dir: String, k: Int = 16,
       iters: Int = 2, nProbes: Int = 2, topK: Int = 10): DataFrame = {
     val e = embTable(s, dir)
-    // materialize the k trained rows once: ivfSearch references the
-    // centroid frame twice, and each uncached reference would replay the
-    // full Lloyd lineage (iters corpus-wide assignments) per use
-    val cents = kmeansCentroids(e, k, iters).cache()
-    cents.count()
-    val out = ivfSearch(e, cents, nProbes, topK).localCheckpoint(true)
-    Seq(cents, e).foreach(_.unpersist(blocking = false))
+    // the k trained rows are a local frame: collecting them runs no job
+    val cents = collectCents(kmeansCentroids(e, k, iters))
+    val out = ivfSearch(e, collectSeeds(e, 5), cents, nProbes, topK)
+      .localCheckpoint(true)
+    e.unpersist(blocking = false)
     out
   }
 
@@ -485,7 +431,7 @@ object AnnOps {
       // materialize the small top-k result, then release the corpus-sized
       // embTable cache (r10 review: the hygiene fix freed only the k-row
       // frames while the corpus cache accumulated per call)
-      val out = ivfSearchSeeded(e, seeds).localCheckpoint(true)
+      val out = ivfSearch(e, seeds.filter(_._1 < 5), seeds).localCheckpoint(true)
       e.unpersist(blocking = false)
       out
     },
@@ -579,34 +525,13 @@ object AnnOps {
     "a06_pq_adc",
     "product-quantization ADC top-k (8x8-dim subspaces, 16 seeded codes)",
     (s, dir) => {
-      // ONE collect of the 16 seed rows yields the codebook for the
-      // encode projection and the ADC LUT (vecDot's exact summation).
-      import s.implicits._
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x AS double))").as("emb"))
-      val subs = e
-        .select(col("vec_id"), explode(sequence(lit(0), lit(7))).as("s"),
-          col("emb"))
-        .select(col("vec_id"), col("s"),
-          expr("slice(emb, s * 8 + 1, 8)").as("xs"))
-      val seedEmb = e.filter(col("vec_id") < 16)
-        .select(col("vec_id"), col("emb")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-      val codes = seededCodes(seedEmb)
-      val encJ = pqEncodeOf(subs.filter(col("vec_id") >= 5), codes)
-        .select(col("vec_id"), col("s"), col("j"))
-      val lut = adcLutFromRows(seedEmb.filter(_._1 < 5), codes)
-        .toDF("q_id", "s", "j", "term")
-      val scored = encJ.join(broadcast(lut), Seq("s", "j"))
-        .groupBy(col("q_id"), col("vec_id"))
-        .agg(round(sum(col("term")), 6).as("adc"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("adc").desc, col("vec_id"))
-      scored.withColumn("rank", row_number().over(w).cast("bigint"))
-        .filter(col("rank") <= 10)
-        .select(col("q_id"), col("vec_id"), col("rank"), col("adc"))
-        .orderBy(col("q_id"), col("rank"))
+      // ONE collect of the 16 seed rows yields the codebook for the
+      // encode projection and the ADC LUT (vecDot's exact summation)
+      val seedEmb = embRows(e, 16)
+      pqAdcTopK(subvectors(e), seedEmb.filter(_._1 < 5), seededCodes(seedEmb), 10)
     },
     Some("""WITH e AS (SELECT vec_id,
               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
@@ -682,34 +607,39 @@ object AnnOps {
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x AS double))").as("emb"))
-    val subs = e
-      .select(col("vec_id"), explode(sequence(lit(0), lit(7))).as("s"),
-        col("emb"))
-      .select(col("vec_id"), col("s"),
-        expr("slice(emb, s * 8 + 1, 8)").as("xs"))
-      .cache()
-    subs.count() // single fill: codebook training + encode + queries
-    val cb = pqCodebooks(subs, k).cache()
-    cb.count() // materialize: ADC references it twice per downstream use
-    val enc = pqEncode(subs.filter(col("vec_id") >= 5), cb)
-      .select(col("vec_id"), col("s"), col("cs"))
-    val q = subs.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("s"), col("xs").as("qs"))
-    val scored = enc.join(broadcast(q), Seq("s"))
-      .withColumn("term", vecDot(col("qs"), col("cs")))
+    val subs = subvectors(e).cache()
+    subs.count() // single fill: codebook training + encode
+    // the trained codebook is a local frame: collecting it runs no job
+    val codes = collectCodes(pqCodebooks(subs, k))
+    // materialize the (queries × topK)-row result, then release the cached
+    // sub-vector table (r9 ADVICE session-cache hygiene)
+    val out = pqAdcTopK(subs, embRows(e, 5), codes, topK).localCheckpoint(true)
+    subs.unpersist(blocking = false)
+    out
+  }
+
+  /** `(vec_id, emb)` rows with `vec_id < below`, collected. */
+  private def embRows(e: DataFrame, below: Int): Seq[(Long, Seq[Double])] =
+    e.filter(col("vec_id") < below).select(col("vec_id"), col("emb")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+
+  /** PQ-ADC top-k of the queries `qs` over the whole `vec_id >= 5` side of
+    * `subs` `(vec_id, s, xs)`, from codebook rows held on the driver:
+    * encode against `codes`, then one broadcast lookup of the
+    * |Q|×8×|codes| LUT ([[adcLutFromRows]]) per code, summed and rounded
+    * 6-dp before the rank window.
+    */
+  private def pqAdcTopK(subs: DataFrame, qs: Seq[(Long, Seq[Double])],
+      codes: Seq[(Long, Int, Seq[Double])], topK: Int): DataFrame = {
+    val s = subs.sparkSession
+    import s.implicits._
+    val encJ = pqEncodeOf(subs.filter(col("vec_id") >= 5), codes)
+      .select(col("vec_id"), col("s"), col("j"))
+    val lut = adcLutFromRows(qs, codes).toDF("q_id", "s", "j", "term")
+    val scored = encJ.join(broadcast(lut), Seq("s", "j"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(round(sum(col("term")), 6).as("adc"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").desc, col("vec_id"))
-    // materialize the (queries × topK)-row result, then release the cached
-    // sub-vector table and codebook (r9 ADVICE session-cache hygiene)
-    val out = scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id"), col("rank"), col("adc"))
-      .orderBy(col("q_id"), col("rank"))
-      .localCheckpoint(true)
-    Seq(subs, cb).foreach(_.unpersist(blocking = false))
-    out
+    topKPerQuery(scored, "adc", topK)
   }
 
   /** IVF-PQ — the production pairing the a03/a06 docs point at: the
@@ -724,49 +654,30 @@ object AnnOps {
   def ivfPqKnn(s: SparkSession, dir: String, kCells: Int = 16,
                nProbes: Int = 2, topK: Int = 10): DataFrame = {
     val e = embTable(s, dir)
-    val scored = ivfPqAdcScored(e, kCells, nProbes)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").desc, col("vec_id"))
-    val out = scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id"), col("rank"), col("adc"))
-      .orderBy(col("q_id"), col("rank"))
+    val out = topKPerQuery(ivfPqAdcScored(e, kCells, nProbes), "adc", topK)
       .localCheckpoint(true)
     e.unpersist(blocking = false)
     out
   }
 
-  /** The IVF-PQ candidate scoring shared by [[ivfPqKnn]] and
-    * [[ivfPqKnnRefined]]: probe cells, PQ-encode the corpus side, ADC
-    * every in-cell candidate. Returns `(q_id, vec_id, adc)` — rounded
-    * 6-dp before any rank window, the a06 float convention.
-    *
-    * ONE seed-panel collect feeds the centroids, the probe pick, the
-    * codebook rows AND the ADC LUT; scoring is one broadcast LUT lookup
-    * ([[adcScoreLut]]). The seeded queries (vec_id < 5) are a subset of
-    * the seeds (vec_id < kCells ≥ 16), so no second panel read exists.
+  /** The in-memory IVF-PQ candidate scoring of [[ivfPqKnn]] and
+    * [[ivfPqKnnRefined]]: ONE seed-panel collect feeds the centroids, the
+    * codebook rows and the query panel (the seeded queries, vec_id < 5,
+    * are a subset of the seeds, vec_id < kCells ≥ 16), then
+    * [[adcScoreLut]] over the corpus assignment and codes. Returns
+    * `(q_id, vec_id, adc)`.
     */
   private[operators] def ivfPqAdcScored(e: DataFrame, kCells: Int,
                              nProbes: Int): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
     // one collect covers both conventions: cells are vec_id < kCells,
     // the codebook is vec_id < 16 regardless of kCells
     val seeds = collectSeeds(e, math.max(kCells, 16))
     val cells = seeds.filter(_._1 < kCells)
-    val qs = seeds.filter(_._1 < 5)
-    val probes = probeRowsOf(qs, cells, nProbes).toDF("q_id", "c_id")
-    val cand = broadcast(probes)
-      .join(CentroidAssign.nearestOf(e, cells), Seq("c_id"))
-      .filter(col("vec_id") >= 5)
-      .select(col("q_id"), col("vec_id"))
-    // the codebook convention is vec_id < 16 regardless of kCells
     val codes = seededCodes(seeds.filter(_._1 < 16).map(t => (t._1, t._2)))
     val encJ = pqEncodeOf(subvectors(e).filter(col("vec_id") >= 5), codes)
       .select(col("vec_id"), col("s"), col("j"))
-    val lut = adcLutFromRows(qs.map(t => (t._1, t._2)), codes)
-      .toDF("q_id", "s", "j", "term")
-    adcScoreLut(cand, encJ, lut)
+    adcScoreLut(seeds.filter(_._1 < 5), cells, codes,
+      CentroidAssign.nearestOf(e, cells), encJ, nProbes)
   }
 
   // ---- factored IVF-PQ building blocks, shared verbatim with the
@@ -797,7 +708,7 @@ object AnnOps {
     * Spark expression inside hash-gated plans.
     */
   private def dotSeq(a: Seq[Double], b: Seq[Double]): Double =
-    graft.functions.ExpressionHelpers.dot(a.toArray, b.toArray)
+    ExpressionHelpers.dot(a.toArray, b.toArray)
 
   /** A codebook frame `(j, s, cs)` collected as literal rows. */
   private[operators] def collectCodes(cb: DataFrame): Seq[(Long, Int, Seq[Double])] =
@@ -841,11 +752,10 @@ object AnnOps {
 
   /** Driver-side ADC lookup table (the classic |Q|×8×|codes| LUT):
     * term(q, s, j) = qsubs(q,s)·cs(j,s) with [[dotSeq]]'s exact vecDot
-    * summation order, so every term is bit-identical to the join form's
-    * `vecDot(qs, cs)`. Scoring then needs ONE broadcast join of literal
-    * rows instead of codebook ⋈ query-subvector joins plus a per-row dot
-    * product. Codebook rows come as `(j, s, cs)`: seeded or a persisted
-    * (possibly trained) [[IndexStore]] table.
+    * summation order, so every term is bit-identical to `vecDot(qs, cs)`
+    * and scoring is ONE broadcast join of literal rows. Codebook rows
+    * come as `(j, s, cs)`: seeded, trained, or a persisted
+    * [[IndexStore]] table.
     */
   private[operators] def adcLutFromRows(qs: Seq[(Long, Seq[Double])],
       cb: Seq[(Long, Int, Seq[Double])]): Seq[(Long, Int, Long, Double)] =
@@ -854,24 +764,32 @@ object AnnOps {
       (j, si, csv) <- cb
     } yield (qid, si, j, dotSeq(qemb.slice(si * 8, si * 8 + 8), csv))
 
-  /** ADC over candidates via the literal LUT: Σ_s term(q, s, code) per
-    * (q_id, vec_id), ROUND 6 (the a06 float convention) before any rank
-    * window, with the scoring join collapsed to one broadcast lookup.
-    * `encJ` carries (vec_id, s, j); the join multiset is identical to
-    * the cb⋈qsubs form (exactly one LUT row per (q_id, s, j)), so the
-    * 8-term sums see the same values in the same partition order.
+  /** THE IVF-PQ query form, shared by the in-memory gates
+    * ([[ivfPqAdcScored]]) and the at-rest index
+    * ([[IndexStore.ivfPqRefinedFromIndex]], hence every epoch leg): the
+    * query panel `qs` (vec_id < 5), centroids `cents` and codebook rows
+    * `codes` are collected by the caller; probes come from
+    * [[probedCands]] over `assign` `(vec_id, c_id)`, and each candidate's
+    * codes `encJ` `(vec_id, s, j)` look up the literal LUT
+    * ([[adcLutFromRows]]) in one broadcast join. Returns `(q_id, vec_id,
+    * adc)`: Σ_s term(q, s, code), ROUND 6 (the a06 float convention)
+    * before any rank window. Candidates join the codes first, so decode
+    * work is bounded by |cand| · 8 subspaces, never the corpus.
     */
-  private[operators] def adcScoreLut(cand: DataFrame, encJ: DataFrame,
-      lut: DataFrame): DataFrame =
-    cand.join(encJ, Seq("vec_id"))
+  private[operators] def adcScoreLut(qs: Seq[(Long, Seq[Double], Double)],
+      cents: Seq[(Long, Seq[Double], Double)],
+      codes: Seq[(Long, Int, Seq[Double])], assign: DataFrame,
+      encJ: DataFrame, nProbes: Int): DataFrame = {
+    val s = assign.sparkSession
+    import s.implicits._
+    val lut = adcLutFromRows(qs.map(t => (t._1, t._2)), codes)
+      .toDF("q_id", "s", "j", "term")
+    probedCands(qs, cents, assign, nProbes)
+      .join(encJ, Seq("vec_id"))
       .join(broadcast(lut), Seq("q_id", "s", "j"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(round(sum(col("term")), 6).as("adc"))
-
-  /** Query-side subvectors (vec_id < 5, the gate query convention). */
-  private[operators] def querySubs(subs: DataFrame): DataFrame =
-    subs.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("s"), col("xs").as("qs"))
+  }
 
   /** IVF-PQ with the standard REFINE step — the production retrieval
     * quality path (r9 VERDICT item 4): ADC ranks the probed candidates,
@@ -919,17 +837,11 @@ object AnnOps {
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
         col("norm").as("q_norm"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    shortlist.join(e, Seq("vec_id"))
+    val rescored = shortlist.join(e, Seq("vec_id"))
       .join(broadcast(q), Seq("q_id"))
       .withColumn("cos", round(
         vecDot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm")), 6))
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id"), col("rank"), col("cos"))
-      .orderBy(col("q_id"), col("rank"))
-      .localCheckpoint(true)
+    topKPerQuery(rescored, "cos", topK).localCheckpoint(true)
   }
 
   /** a07's full DuckDB replica, parameterized on an extra candidate-side
@@ -1027,12 +939,8 @@ private[operators] object CentroidAssign {
     * (materialized, a pruned scan, or local), or its lineage replays here.
     */
   def nearest(e: DataFrame, cents: DataFrame,
-              carry: Seq[String] = Nil): DataFrame = {
-    val rows = cents
-      .select(col("c_id").cast("long"), col("c_emb"), col("c_norm")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
-    nearestOf(e, rows, carry)
-  }
+              carry: Seq[String] = Nil): DataFrame =
+    nearestOf(e, AnnOps.collectCents(cents), carry)
 
   /** [[nearest]] from centroid rows the caller already holds. */
   private[operators] def nearestOf(e: DataFrame,

@@ -234,19 +234,11 @@ object EpochIndex {
     val e = AnnOps.embTable(s, dir)
     // try/finally (r17 ADVICE): a throwing leg must not leave the
     // corpus-sized embTable cache pinned for the session.
-    // r18: the query panel is collected ONCE and shared by every leg —
-    // each leg then scores ADC through the literal LUT (one broadcast
-    // lookup join per leg instead of codebook ⋈ query-subvector joins;
-    // measured a15 7.46 → 6.61 s on the matched A/B).
     val per =
-      try {
-        val qRows = e.filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("emb")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-        FanOut.inParallel(eps.map(name => () => IndexStore.ivfPqRefinedFromIndex(
-          s, dir, epochLoc(root, name), nProbes, topK, refineFactor,
-          ownEmbCache = false, qPanel = Some(qRows))))
-      } finally e.unpersist(blocking = false)
+      try FanOut.inParallel(eps.map(name => () => IndexStore.ivfPqRefinedFromIndex(
+        s, dir, epochLoc(root, name), nProbes, topK, refineFactor,
+        ownEmbCache = false)))
+      finally e.unpersist(blocking = false)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     per.reduce(_.unionByName(_))
@@ -315,28 +307,21 @@ object EpochIndex {
       maxStaleMs: Long = -1L): (DataFrame, Seq[String]) = {
     val eps = epochs.getOrElse(epochsCached(s, root, maxStaleMs))
     require(eps.nonEmpty, s"no committed epoch indexes under $root")
-    val qs = AnnOps.embTable(s, dir).filter(col("vec_id") < 5)
-      .select(col("vec_id"), col("emb"), col("norm")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+    val qs = AnnOps.collectSeeds(AnnOps.embTable(s, dir), 5)
     // NOTE: no unpersist of the panel source here (r16 ADVICE) — the
     // embTable cache is plan-matched and SHARED; uncaching it out from
     // under a caller's handle forced every leg to re-cache it. As of
     // r17 the legs run with ownEmbCache = false for the same reason,
     // so the fill is paid ONCE per call; the caller that created the
     // embTable handle (the a16 gate) releases it.
-    // per-epoch best coarse-centroid cosine per query: one broadcast-
-    // shaped comparison, computed driver-side (the tables are tiny)
+    // per-epoch best coarse-centroid cosine per query: the legs' own
+    // probe pick ([[AnnOps.probeRowsOf]]) at one probe, driver-side (the
+    // tables are tiny); a null cosine (zero norm) counts as -1.0
     val best: Map[String, Map[Long, Double]] = eps.map { name =>
-      val cents = IndexStore.readTable(s, epochLoc(root, name), "centroids")
-        .select(col("c_emb"), col("c_norm")).collect()
-        .map(r => (r.getSeq[Double](0).toArray, r.getDouble(1)))
-      name -> qs.map { case (qid, qe, qn) =>
-        qid -> cents.map { case (ce, cn) =>
-          var d = 0.0; var i = 0
-          while (i < qe.length) { d += qe(i) * ce(i); i += 1 }
-          if (qn * cn == 0.0) -1.0 else d / (qn * cn)
-        }.max
-      }.toMap
+      val cents = AnnOps.collectCents(
+        IndexStore.readTable(s, epochLoc(root, name), "centroids"))
+      name -> AnnOps.probeRowsOf(qs, cents, 1)
+        .map { case (qid, _, psim) => qid -> psim.getOrElse(-1.0) }.toMap
     }.toMap
     val order = eps.sortBy(n => -best(n).values.max)
     // running per-query shortlist (vec_id -> best cos, trimmed to the
@@ -346,15 +331,12 @@ object EpochIndex {
       scala.collection.mutable.Map[Long, scala.collection.mutable.Map[Long, Double]]()
     def floorOf(q: Long): Option[Double] =
       shortlist.get(q).filter(_.size >= topK).map(_.values.min)
-    // r18: the already-collected query panel doubles as the legs' ADC
-    // LUT input — the pruned fan-out pays zero extra jobs for the LUT
-    val qPanel = Some(qs.toSeq.map { case (qid, qe, _) => (qid, qe.toSeq) })
     def runLeg(name: String): Array[(Long, Long, Double)] =
       // ownEmbCache = false (r17): the query panel above filled the
       // shared embTable cache; a leg unpersisting it forced every later
       // leg to refill (the serial-leg twin of the r16 ADVICE panel fix)
       IndexStore.ivfPqRefinedFromIndex(s, dir, epochLoc(root, name),
-          nProbes, topK, refineFactor, ownEmbCache = false, qPanel = qPanel)
+          nProbes, topK, refineFactor, ownEmbCache = false)
         .select(col("q_id"), col("vec_id"), col("cos")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     def absorb(rows: Array[(Long, Long, Double)]): Unit =
@@ -365,22 +347,11 @@ object EpochIndex {
       }
     val visited = scala.collection.mutable.ArrayBuffer[String]()
     val (head, tail) = order.splitAt(math.max(1, prefetch))
-    if (head.size <= 1) head.foreach { n => visited += n; absorb(runLeg(n)) }
-    else {
-      // concurrent prefix: P legs submitted as parallel Spark jobs from
-      // a transient daemon pool; absorbed in rank order (deterministic)
-      val pool2 = java.util.concurrent.Executors.newFixedThreadPool(head.size,
-        (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool2)
-      val futs = head.map(n => n -> scala.concurrent.Future(runLeg(n)))
-      futs.foreach { case (n, f) =>
-        visited += n
-        absorb(scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-      }
-      pool2.shutdown()
-    }
+    // concurrent prefix: the P legs run as parallel Spark jobs (a failing
+    // leg cancels and awaits its siblings), absorbed in rank order
+    // (deterministic)
+    FanOut.inParallel(head.map(n => () => runLeg(n))).zip(head)
+      .foreach { case (rows, n) => visited += n; absorb(rows) }
     tail.foreach { name =>
       val prune = qs.forall { case (qid, _, _) =>
         floorOf(qid).exists(f => best(name)(qid) + margin < f)

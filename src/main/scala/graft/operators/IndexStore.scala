@@ -208,21 +208,22 @@ object IndexStore {
       val base = IndexManifest.currentVersion(s, loc) // CAS base: replace-all still commits base+1
       val (docsObs, sig) = observeDocSig(docs)
       val ix = RetrievalOps.buildIndexTables(docsObs) // tf cached by the build
-      // the three table writes read ONE cached tf and are independent —
-      // run them as concurrent jobs (guide §2.6: later jobs back-fill the
-      // executor tail of the current one); the sig metrics fired on the
-      // build's own scalar action, before any write
-      val Seq(posts, dl, dfq) = FanOut.inParallel(Seq(
-        () => writeVersion(ix.tf, loc, "postings"),
-        () => writeVersion(ix.dl, loc, "doclen"),
-        () => writeVersion(ix.dfreq, loc, "dfreq")))
-      val (sc, ss, sch) = sig()
-      val st = writeVersion(
-        statsDf(s, ix.nDocs, ix.sumTf, sc, ss, sch), loc, "stats")
-      IndexLock.verify(s, tok) // fenced-out builders die before the commit
-      IndexManifest.publish(s, loc, Map("postings" -> Seq(posts),
-        "doclen" -> Seq(dl), "dfreq" -> Seq(dfq), "stats" -> Seq(st)), base)
-      ix.tf.unpersist(blocking = false)
+      try {
+        // the three table writes read ONE cached tf and are independent —
+        // run them as concurrent jobs (guide §2.6: later jobs back-fill the
+        // executor tail of the current one); the sig metrics fired on the
+        // build's own scalar action, before any write
+        val Seq(posts, dl, dfq) = FanOut.inParallel(Seq(
+          () => writeVersion(ix.tf, loc, "postings"),
+          () => writeVersion(ix.dl, loc, "doclen"),
+          () => writeVersion(ix.dfreq, loc, "dfreq")))
+        val (sc, ss, sch) = sig()
+        val st = writeVersion(
+          statsDf(s, ix.nDocs, ix.sumTf, sc, ss, sch), loc, "stats")
+        IndexLock.verify(s, tok) // fenced-out builders die before the commit
+        IndexManifest.publish(s, loc, Map("postings" -> Seq(posts),
+          "doclen" -> Seq(dl), "dfreq" -> Seq(dfq), "stats" -> Seq(st)), base)
+      } finally ix.tf.unpersist(blocking = false)
     }
   }
 
@@ -324,30 +325,31 @@ object IndexStore {
       val (docsObs, sig) = observeDocSig(newDocs) // sig rides the tokenize pass (r17)
       val st = tbl(s, m, "stats").head()
       val nix = RetrievalOps.buildIndexTables(docsObs) // batch-sized, cached
-      IndexLock.renew(s, tok) // lease heartbeat before the write stage
-      // batch segments + merged dfreq all derive from the one cached
-      // batch tf (the merge also reads the OLD committed dfreq — a
-      // different table) — independent writes, concurrent jobs
-      val merged = tbl(s, m, "dfreq")
-        .unionByName(nix.dfreq)
-        .groupBy(col("w")).agg(sum(col("df")).cast("long").as("df"))
-      val Seq(postSeg, dlSeg, dfq) = FanOut.inParallel(Seq(
-        () => writeVersion(nix.tf, loc, "postings"),
-        () => writeVersion(nix.dl, loc, "doclen"),
-        () => writeVersion(merged, loc, "dfreq")))
-      val (sc, ss, sch) = sig()
-      val stV = writeVersion(statsDf(s,
-        st.getAs[Long]("n_docs") + nix.nDocs,
-        st.getAs[Long]("sum_tf") + nix.sumTf,
-        st.getAs[Long]("sig_count") + sc,
-        st.getAs[Long]("sig_sum") + ss,
-        st.getAs[Long]("sig_chars") + sch), loc, "stats")
-      IndexLock.verify(s, tok) // fenced-out appenders die before the commit
-      IndexManifest.publish(s, loc, m.tables ++ Map(
-        "postings" -> (m.tables("postings") :+ postSeg),
-        "doclen" -> (m.tables("doclen") :+ dlSeg),
-        "dfreq" -> Seq(dfq), "stats" -> Seq(stV)), m.version)
-      nix.tf.unpersist(blocking = false)
+      try {
+        IndexLock.renew(s, tok) // lease heartbeat before the write stage
+        // batch segments + merged dfreq all derive from the one cached
+        // batch tf (the merge also reads the OLD committed dfreq — a
+        // different table) — independent writes, concurrent jobs
+        val merged = tbl(s, m, "dfreq")
+          .unionByName(nix.dfreq)
+          .groupBy(col("w")).agg(sum(col("df")).cast("long").as("df"))
+        val Seq(postSeg, dlSeg, dfq) = FanOut.inParallel(Seq(
+          () => writeVersion(nix.tf, loc, "postings"),
+          () => writeVersion(nix.dl, loc, "doclen"),
+          () => writeVersion(merged, loc, "dfreq")))
+        val (sc, ss, sch) = sig()
+        val stV = writeVersion(statsDf(s,
+          st.getAs[Long]("n_docs") + nix.nDocs,
+          st.getAs[Long]("sum_tf") + nix.sumTf,
+          st.getAs[Long]("sig_count") + sc,
+          st.getAs[Long]("sig_sum") + ss,
+          st.getAs[Long]("sig_chars") + sch), loc, "stats")
+        IndexLock.verify(s, tok) // fenced-out appenders die before the commit
+        IndexManifest.publish(s, loc, m.tables ++ Map(
+          "postings" -> (m.tables("postings") :+ postSeg),
+          "doclen" -> (m.tables("doclen") :+ dlSeg),
+          "dfreq" -> Seq(dfq), "stats" -> Seq(stV)), m.version)
+      } finally nix.tf.unpersist(blocking = false)
     }
   }
 
@@ -372,32 +374,33 @@ object IndexStore {
     IndexLock.withLock(s, loc) { tok =>
       val m = manifest(s, loc)
       val del = ids.select(col("doc_id")).distinct().cache()
-      del.count()
-      val st = tbl(s, m, "stats").head()
-      // exact decrements from the index's OWN tables (only docs actually
-      // indexed count — a deleted id that never had postings changes nothing)
-      val dec = tbl(s, m, "doclen")
-        .join(del, Seq("doc_id"))
-        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-      val (dDocs, dTf) = (dec.getLong(0), dec.getLong(1))
-      val dfDec = tbl(s, m, "postings")
-        .join(del, Seq("doc_id"))
-        .groupBy(col("w")).agg(count(lit(1)).as("ddf"))
-      val merged = tbl(s, m, "dfreq")
-        .join(dfDec, Seq("w"), "left")
-        .select(col("w"),
-          (col("df") - coalesce(col("ddf"), lit(0L))).cast("long").as("df"))
-        .filter(col("df") > 0)
-      val dfq = writeVersion(merged, loc, "dfreq")
-      val tombSeg = writeVersion(del, loc, "deleted")
-      val stV = writeVersion(statsDf(s, st.getAs[Long]("n_docs") - dDocs,
-        st.getAs[Long]("sum_tf") - dTf, -1L, -1L, -1L), // poisoned fingerprint
-        loc, "stats")
-      IndexLock.verify(s, tok) // fenced-out deleters die before the commit
-      IndexManifest.publish(s, loc, m.tables ++ Map(
-        "dfreq" -> Seq(dfq), "stats" -> Seq(stV),
-        "deleted" -> (m.tables.getOrElse("deleted", Nil) :+ tombSeg)), m.version)
-      del.unpersist(blocking = false)
+      try {
+        del.count()
+        val st = tbl(s, m, "stats").head()
+        // exact decrements from the index's OWN tables (only docs actually
+        // indexed count — a deleted id that never had postings changes nothing)
+        val dec = tbl(s, m, "doclen")
+          .join(del, Seq("doc_id"))
+          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+        val (dDocs, dTf) = (dec.getLong(0), dec.getLong(1))
+        val dfDec = tbl(s, m, "postings")
+          .join(del, Seq("doc_id"))
+          .groupBy(col("w")).agg(count(lit(1)).as("ddf"))
+        val merged = tbl(s, m, "dfreq")
+          .join(dfDec, Seq("w"), "left")
+          .select(col("w"),
+            (col("df") - coalesce(col("ddf"), lit(0L))).cast("long").as("df"))
+          .filter(col("df") > 0)
+        val dfq = writeVersion(merged, loc, "dfreq")
+        val tombSeg = writeVersion(del, loc, "deleted")
+        val stV = writeVersion(statsDf(s, st.getAs[Long]("n_docs") - dDocs,
+          st.getAs[Long]("sum_tf") - dTf, -1L, -1L, -1L), // poisoned fingerprint
+          loc, "stats")
+        IndexLock.verify(s, tok) // fenced-out deleters die before the commit
+        IndexManifest.publish(s, loc, m.tables ++ Map(
+          "dfreq" -> Seq(dfq), "stats" -> Seq(stV),
+          "deleted" -> (m.tables.getOrElse("deleted", Nil) :+ tombSeg)), m.version)
+      } finally del.unpersist(blocking = false)
     }
   }
 
@@ -507,19 +510,18 @@ object IndexStore {
 
   /** IVF-PQ + refine served from the at-rest index: cell assignment and
     * 4-bit codes come from parquet (the search path touches NO
-    * full-precision corpus vector until the refine point-fetch); queries
-    * and the refine fetch read the embeddings table. Same chain as
-    * [[AnnOps.ivfPqKnnRefined]] with the persisted tables substituted —
-    * probes/ADC/refine are the SAME factored cores. LOCK-FREE snapshot
-    * read (one manifest resolve), materialized top-k.
+    * full-precision corpus vector until the refine point-fetch); the
+    * query panel and the refine fetch read the embeddings table. Same
+    * query form as [[AnnOps.ivfPqKnnRefined]] ([[AnnOps.adcScoreLut]]
+    * over the collected panel, centroids and codebook) with the persisted
+    * tables substituted. LOCK-FREE snapshot read (one manifest resolve),
+    * materialized top-k.
     */
   def ivfPqRefinedFromIndex(s: SparkSession, dir: String, loc: String,
       nProbes: Int = 4, topK: Int = 10, refineFactor: Int = 8,
-      at: Option[Long] = None, ownEmbCache: Boolean = true,
-      qPanel: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
+      at: Option[Long] = None, ownEmbCache: Boolean = true): DataFrame = {
     val m = manifest(s, loc, at)
-    val e = AnnOps.embTable(s, dir) // cached: probes + qsubs + refine fetch
-    val cents = tbl(s, m, "centroids")
+    val e = AnnOps.embTable(s, dir) // cached: query panel + refine fetch
     // tombstones ([[deleteIvfPq]]): retired vectors drop out of the cell
     // assignment here, so they can never become candidates — their codes
     // stay committed until [[compactIvfPq]] but are unreachable
@@ -527,49 +529,12 @@ object IndexStore {
     val tomb = tombstones(s, m)
     val assign = tomb.foldLeft(tbl(s, m, "assign"))(
       (a, t) => a.join(t, Seq("vec_id"), "left_anti"))
-    val cand = broadcast(AnnOps.ivfProbes(e, cents, nProbes))
-      .join(assign, Seq("c_id"))
-      .filter(col("vec_id") >= 5)
-      .select(col("q_id"), col("vec_id"))
-    // ADC scoring, two value-identical shapes (r17 VERDICT Next #4,
-    // adjudicated by matched-window A/B at sf0.1):
-    //  - `qPanel` given (the epoch fan-out, which holds the collected
-    //    query panel anyway): the classic |Q|×8×k literal LUT — terms
-    //    qs·cs precomputed driver-side with dotSeq's exact vecDot
-    //    summation, ONE broadcast lookup join instead of codebook ⋈
-    //    query-subvector joins + a per-row vecDot. Measured a15 7.46 →
-    //    6.61 s / a16 6.57 → 5.70 s (reps=5, calibration-matched).
-    //  - no panel (a11/a14 single-shot queries): the r17 join form —
-    //    building the LUT here costs two EXTRA driver collects per
-    //    invocation, measured a11 1.22 → 1.40 s / a14 3.79 → 4.17 s on
-    //    the same A/B, the a03-collect mechanism again; negative
-    //    recorded, join form kept.
-    // Candidate restriction stays BEFORE the code decode in both shapes
-    // (cand ⋈ codes first): decode work is bounded by |cand| · 8
-    // subspaces, never the corpus.
-    val scored = qPanel match {
-      case Some(qRows) =>
-        val cbRows = AnnOps.collectCodes(tbl(s, m, "codebooks"))
-        import s.implicits._
-        val lut = AnnOps.adcLutFromRows(qRows, cbRows)
-          .toDF("q_id", "s", "j", "term")
-        AnnOps.adcScoreLut(cand, tbl(s, m, "codes"), lut)
-      case None =>
-        val cb = tbl(s, m, "codebooks")
-        val candCodes = tbl(s, m, "codes")
-          .join(cand, Seq("vec_id"))
-        val qsubs = AnnOps.querySubs(
-          AnnOps.subvectors(e.filter(col("vec_id") < 5)))
-        candCodes
-          .join(broadcast(cb), Seq("s", "j"))
-          .join(broadcast(qsubs), Seq("q_id", "s"))
-          .withColumn("term",
-            graft.functions.GraftFunctions.vecDot(col("qs"), col("cs")))
-          .groupBy(col("q_id"), col("vec_id"))
-          .agg(round(sum(col("term")), 6).as("adc"))
-    }
+    val scored = AnnOps.adcScoreLut(AnnOps.collectSeeds(e, 5),
+      AnnOps.collectCents(tbl(s, m, "centroids")),
+      AnnOps.collectCodes(tbl(s, m, "codebooks")), assign, tbl(s, m, "codes"),
+      nProbes)
+    // materialized by the refine (top-k bounded)
     val out = AnnOps.refineAdcShortlist(scored, e, topK, refineFactor)
-      .localCheckpoint(true) // materialize; top-k bounded
     // `ownEmbCache = false` (r17): a multi-leg fan-out (EpochIndex
     // searchTopK / searchTopKPruned) fills the plan-matched embTable
     // cache ONCE and runs its legs — possibly concurrently — against it;
@@ -595,28 +560,29 @@ object IndexStore {
     IndexLock.withLock(s, loc) { tok =>
       val base = IndexManifest.currentVersion(s, loc)
       val (eObs, sig) = observeEmbSig(e) // sig rides the assign write (r18)
-      val cents = AnnOps.kmeansCentroids(e, k, iters).cache()
-      cents.count() // materialize: persist + assignment both read it
+      // the trained centroids and codebooks are local frames: persisting
+      // and reading them again runs no training job
+      val cents = AnnOps.kmeansCentroids(e, k, iters)
       val centsRel = writeVersion(cents, loc, "centroids")
       val subs = AnnOps.subvectors(e).cache()
-      subs.count() // codebook training + encode share one fill
-      IndexLock.renew(s, tok) // heartbeat: k-means stages are the cost
-      val cb = AnnOps.pqCodebooks(subs, k).cache()
-      cb.count()
-      // codebook persist + full-input assign/encode writes are
-      // independent once training materialized — concurrent jobs
-      val Seq(cbRel, asg, codes) = FanOut.inParallel(Seq(
-        () => writeVersion(cb, loc, "codebooks"),
-        () => writeVersion(CentroidAssign.nearest(eObs, cents), loc, "assign"),
-        () => writeVersion(AnnOps.pqEncode(subs.filter(col("vec_id") >= 5), cb)
-          .select(col("vec_id"), col("s"), col("j")), loc, "codes")))
-      val (sc, ss, sd) = sig()
-      val st = writeVersion(ivfStatsDf(s, sc, ss, sd), loc, "stats")
-      IndexLock.verify(s, tok)
-      IndexManifest.publish(s, loc, Map("centroids" -> Seq(centsRel),
-        "codebooks" -> Seq(cbRel), "assign" -> Seq(asg), "codes" -> Seq(codes),
-        "stats" -> Seq(st)), base)
-      Seq(cents, subs, cb).foreach(_.unpersist(blocking = false))
+      try {
+        subs.count() // codebook training + encode share one fill
+        IndexLock.renew(s, tok) // heartbeat: k-means stages are the cost
+        val cb = AnnOps.pqCodebooks(subs, k)
+        // codebook persist + full-input assign/encode writes are
+        // independent once training is done — concurrent jobs
+        val Seq(cbRel, asg, codes) = FanOut.inParallel(Seq(
+          () => writeVersion(cb, loc, "codebooks"),
+          () => writeVersion(CentroidAssign.nearest(eObs, cents), loc, "assign"),
+          () => writeVersion(AnnOps.pqEncode(subs.filter(col("vec_id") >= 5), cb)
+            .select(col("vec_id"), col("s"), col("j")), loc, "codes")))
+        val (sc, ss, sd) = sig()
+        val st = writeVersion(ivfStatsDf(s, sc, ss, sd), loc, "stats")
+        IndexLock.verify(s, tok)
+        IndexManifest.publish(s, loc, Map("centroids" -> Seq(centsRel),
+          "codebooks" -> Seq(cbRel), "assign" -> Seq(asg), "codes" -> Seq(codes),
+          "stats" -> Seq(st)), base)
+      } finally subs.unpersist(blocking = false)
     }
   }
 
@@ -823,15 +789,13 @@ object IndexStore {
         val m = manifest(s, loc)
         val tomb = tombstones(s, m)
         val live = tomb.foldLeft(e)((d, t) => d.join(t, Seq("vec_id"), "left_anti"))
-        val cents = AnnOps.kmeansCentroids(live, k, iters).cache()
-        cents.count() // materialize: persist + re-assignment both read it
+        val cents = AnnOps.kmeansCentroids(live, k, iters) // a local frame
         val centsRel = writeVersion(cents, loc, "centroids")
         IndexLock.renew(s, tok)
         val asg = writeVersion(CentroidAssign.nearest(live, cents), loc, "assign")
         IndexLock.verify(s, tok)
         IndexManifest.publish(s, loc, m.tables ++ Map(
           "centroids" -> Seq(centsRel), "assign" -> Seq(asg)), m.version)
-        cents.unpersist(blocking = false)
         true
       }
     }
@@ -863,26 +827,27 @@ object IndexStore {
       val st = tbl(s, m, "stats").head()
       val tomb = tombstones(s, m)
       val live = tomb.foldLeft(e)((d, t) => d.join(t, Seq("vec_id"), "left_anti"))
-      val cents = AnnOps.kmeansCentroids(live, k, iters).cache()
-      cents.count()
+      // the trained centroids and codebooks are local frames (no re-training
+      // on re-read); only the subvector table is cached
+      val cents = AnnOps.kmeansCentroids(live, k, iters)
       IndexLock.renew(s, tok) // heartbeat between the k-means stages
       val subs = AnnOps.subvectors(live).cache()
-      subs.count()
-      val cb = AnnOps.pqCodebooks(subs, k).cache()
-      cb.count()
-      IndexLock.renew(s, tok)
-      val centsRel = writeVersion(cents, loc, "centroids")
-      val cbRel = writeVersion(cb, loc, "codebooks")
-      val asg = writeVersion(CentroidAssign.nearest(live, cents), loc, "assign")
-      val codes = writeVersion(AnnOps.pqEncode(subs.filter(col("vec_id") >= 5), cb)
-        .select(col("vec_id"), col("s"), col("j")), loc, "codes")
-      val stV = writeVersion(ivfStatsDf(s, st.getAs[Long]("sig_count"),
-        st.getAs[Long]("sig_sum"), st.getAs[Long]("sig_dims")), loc, "stats")
-      IndexLock.verify(s, tok)
-      IndexManifest.publish(s, loc, Map("centroids" -> Seq(centsRel),
-        "codebooks" -> Seq(cbRel), "assign" -> Seq(asg), "codes" -> Seq(codes),
-        "stats" -> Seq(stV)), m.version)
-      Seq(cents, subs, cb).foreach(_.unpersist(blocking = false))
+      try {
+        subs.count()
+        val cb = AnnOps.pqCodebooks(subs, k)
+        IndexLock.renew(s, tok)
+        val centsRel = writeVersion(cents, loc, "centroids")
+        val cbRel = writeVersion(cb, loc, "codebooks")
+        val asg = writeVersion(CentroidAssign.nearest(live, cents), loc, "assign")
+        val codes = writeVersion(AnnOps.pqEncode(subs.filter(col("vec_id") >= 5), cb)
+          .select(col("vec_id"), col("s"), col("j")), loc, "codes")
+        val stV = writeVersion(ivfStatsDf(s, st.getAs[Long]("sig_count"),
+          st.getAs[Long]("sig_sum"), st.getAs[Long]("sig_dims")), loc, "stats")
+        IndexLock.verify(s, tok)
+        IndexManifest.publish(s, loc, Map("centroids" -> Seq(centsRel),
+          "codebooks" -> Seq(cbRel), "assign" -> Seq(asg), "codes" -> Seq(codes),
+          "stats" -> Seq(stV)), m.version)
+      } finally subs.unpersist(blocking = false)
     }
   }
 

@@ -84,7 +84,9 @@ object RetrievalOps {
       .cache() // inverted index: feeds df/dl aggregates + the probe join
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val dfreq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val scal = tf.agg(sum(col("tf")), countDistinct(col("doc_id"))).head
+    val scal =
+      try tf.agg(sum(col("tf")), countDistinct(col("doc_id"))).head
+      catch { case t: Throwable => tf.unpersist(blocking = false); throw t }
     val nDocs = scal.getLong(1)
     // empty/all-blank corpus: SUM is null and nDocs 0 — every downstream
     // frame is empty anyway, so any finite avgdl yields the correct

@@ -288,6 +288,18 @@ class EpochIndexSpec extends AnyFunSuite with graft.SparkTestSession {
     // and the prefetched prefix is the top-2 centroid-ranked epochs —
     // the serial prune's first leg is the prefix's first element
     assert(v2.head == v1.head)
+    // a failing prefetched leg: the top-ranked epoch lost its codes, so
+    // its leg raises while its sibling runs; the error surfaces, and the
+    // sibling's jobs are cancelled and awaited rather than left running
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"${EpochIndex.epochLoc(root, v1.head)}/codes"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      EpochIndex.searchTopKPruned(spark, dir, root,
+        nProbes = 16, topK = 10, refineFactor = 1000000, margin = -2.0,
+        prefetch = 2)
+    }
+    org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
     e.unpersist(blocking = false)
   }
 

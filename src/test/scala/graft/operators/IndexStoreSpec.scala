@@ -102,6 +102,63 @@ class IndexStoreSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(collectSorted(fromIx) == collectSorted(inMem))
   }
 
+  test("fault injection: a build whose input raises commits nothing, leaks nothing, and vacuums clean") {
+    import org.apache.spark.sql.functions._
+    val sc = spark.sparkContext
+    val dir = "/root/testdata/sf0.001"
+    val e = graft.Tables.load(spark, dir, "embeddings")
+      .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("emb"))
+      .withColumn("norm", sqrt(graft.functions.GraftFunctions.vecDot(col("emb"), col("emb"))))
+    // true only inside the build's concurrent table writes (FanOut tags
+    // their jobs): training and the cached subvectors are in place and
+    // the centroids are written when the assign write raises
+    val inWrite = udf(() => Option(org.apache.spark.TaskContext.get())
+      .flatMap(t => Option(t.getLocalProperty("spark.job.tags")))
+      .exists(_.contains("graft-fanout"))).asNondeterministic()
+    val raising = e.withColumn("norm",
+      when(inWrite(), raise_error(lit("injected write fault"))).otherwise(col("norm")))
+    def versionDirs(loc: String): Set[String] =
+      new java.io.File(loc).listFiles.filter(f => f.isDirectory && !f.getName.startsWith("_"))
+        .flatMap(t => t.listFiles.filter(_.getName.startsWith("v-")).map(v => s"${t.getName}/${v.getName}"))
+        .toSet
+    def referenced(loc: String): Set[String] =
+      IndexManifest.current(spark, loc).toSeq.flatMap(_.tables.values.flatten).toSet
+    /** `build` raises with `msg`; afterwards the loc is at `version`, no
+      * job runs and no RDD or plan stays cached; the same loc rebuilds at
+      * once, and vacuum leaves exactly the live version dirs.
+      */
+    def check(loc: String, msg: String)(failing: => Unit)(rebuild: => Unit): Unit = {
+      val version = IndexManifest.currentVersion(spark, loc)
+      val rdds = sc.getPersistentRDDs.keySet.toSet[Int]
+      val plans = org.apache.spark.sql.CacheProbe.cachedPlans(spark)
+      val err = intercept[Exception](failing)
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(msg)), err.toString)
+      assert(IndexManifest.currentVersion(spark, loc) == version)
+      org.apache.spark.ListenerBusProbe.drain(sc)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
+      assert((sc.getPersistentRDDs.keySet.toSet -- rdds).isEmpty, "a persisted RDD leaked")
+      assert(org.apache.spark.sql.CacheProbe.cachedPlans(spark) == plans,
+        "a cached plan leaked")
+      rebuild
+      assert(IndexManifest.currentVersion(spark, loc) == version + 1)
+      IndexManifest.vacuum(spark, loc, keepManifests = 1, minAgeMs = 0)
+      assert(versionDirs(loc) == referenced(loc))
+    }
+    val ivf = tmpLoc("fault-ivf")
+    IndexStore.buildIvfPqTrained(e, ivf)
+    check(ivf, "injected write fault")(IndexStore.buildIvfPqTrained(raising, ivf)) {
+      assert(versionDirs(ivf) != referenced(ivf), "the failed build left no orphan")
+      IndexStore.buildIvfPqTrained(e, ivf)
+    }
+    val bm25 = tmpLoc("fault-bm25")
+    val docs = docsDf(docsFixture)
+    IndexStore.buildBm25(docs, bm25)
+    check(bm25, "injected tokenize fault")(IndexStore.buildBm25(docs.withColumn("text",
+      when(col("doc_id") === 7L, raise_error(lit("injected tokenize fault")))
+        .otherwise(col("text"))), bm25))(IndexStore.buildBm25(docs, bm25))
+  }
+
   test("BM25: streaming ingest maintains the index per micro-batch (st09 discipline)") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.streaming.Trigger
