@@ -20,8 +20,8 @@ import org.apache.spark.sql.SparkSession
   * the call stops starting thunks, cancels every thunk's tag, waits for
   * all of them to finish and rethrows that first failure: no sibling job
   * outlives the call. Results come back in input order; the pool is
-  * daemon + bounded and always shut down. Single-element input
-  * short-circuits to a plain call.
+  * daemon, bounded by the session's cores and always shut down.
+  * Single-element input short-circuits to a plain call.
   */
 object FanOut {
   private val calls = new AtomicLong()
@@ -33,8 +33,10 @@ object FanOut {
       val call = calls.incrementAndGet()
       val tags = fs.indices.map(i => s"graft-fanout-$call-$i")
       val failed = new AtomicBoolean(false)
+      // more thunks than the session's task slots would only queue
+      // their jobs in the scheduler: the pool is sized to the slots
       val pool = Executors.newFixedThreadPool(
-        math.min(fs.size, 8),
+        math.min(fs.size, math.max(1, sc.defaultParallelism)),
         (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
       try {
         val done = new ExecutorCompletionService[A](pool)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, Round, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -142,7 +142,7 @@ object ExpressionHelpers {
   /** Spark's SQL double ordering (`SQLOrderingUtil.compareDoubles`), null
     * lowest: NaN is greatest and -0.0 equals 0.0.
     */
-  private def compareScores(aNull: Boolean, a: Double,
+  private[graft] def compareScores(aNull: Boolean, a: Double,
       bNull: Boolean, b: Double): Int =
     if (aNull || bNull) java.lang.Boolean.compare(!aNull, !bNull)
     else if (a == b) 0 else java.lang.Double.compare(a, b)
@@ -203,6 +203,19 @@ object ExpressionHelpers {
     dNull || normNull || div == 0
   }
 
+  /** `vec_dot(emb, c) / (norm * cNorm)` as Spark evaluates it, None for
+    * null: [[scoreNull]]'s `Divide` rule over dense-or-null arrays
+    * ([[denseOrNull]]).
+    */
+  def cosine(emb: Array[Double], normNull: Boolean, norm: Double,
+      c: Array[Double], cNorm: Double, ansi: Boolean): Option[Double] =
+    if (scoreNull(emb, normNull, norm, c, cNorm, ansi)) None
+    else Some(dot(emb, c) / (norm * cNorm))
+
+  /** `round(x, 6)` of a double, evaluated by Spark's own `Round`. */
+  def round6(x: Double): Double =
+    Round(Literal(x), Literal(6)).eval().asInstanceOf[Double]
+
   /** The `n` best centroids of [[nearestCentroid]]'s ranking, best first,
     * as `(index, score)` with a null score as None: the same scores,
     * `Divide` semantics and order (null lowest, NaN highest, -0.0 equal
@@ -212,8 +225,7 @@ object ExpressionHelpers {
       embs: Array[Array[Double]], norms: Array[Double], ids: Array[Long],
       ansi: Boolean, n: Int): Seq[(Int, Option[Double])] =
     ids.indices.map { i =>
-      val sNull = scoreNull(emb, normNull = false, norm, embs(i), norms(i), ansi)
-      (i, if (sNull) None else Some(dot(emb, embs(i)) / (norm * norms(i))))
+      (i, cosine(emb, normNull = false, norm, embs(i), norms(i), ansi))
     }.sortWith { case ((i, a), (j, b)) =>
       val cmp = compareScores(a.isEmpty, a.getOrElse(0.0), b.isEmpty, b.getOrElse(0.0))
       cmp > 0 || (cmp == 0 && ids(i) < ids(j))

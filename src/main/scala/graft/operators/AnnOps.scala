@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -238,15 +239,20 @@ object AnnOps {
   }
 
   /** The `embeddings` table in the ANN working shape:
-    * (vec_id, emb double[], norm), cached and materialized — assignment,
-    * probes and scoring all reuse it.
+    * (vec_id, emb double[], norm), a plain scan: a `vec_id` filter on it
+    * prunes the read.
     */
-  private[graft] def embTable(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(s, dir, "embeddings")
+  private[operators] def embeddings(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x AS double))").as("emb"))
       .withColumn("norm", sqrt(vecDot(col("emb"), col("emb"))))
-      .cache()
+
+  /** [[embeddings]], cached and materialized — assignment, probes and
+    * scoring all reuse it.
+    */
+  private[graft] def embTable(s: SparkSession, dir: String): DataFrame = {
+    val e = embeddings(s, dir).cache()
     e.count()
     e
   }
@@ -610,7 +616,7 @@ object AnnOps {
     val subs = subvectors(e).cache()
     subs.count() // single fill: codebook training + encode
     // the trained codebook is a local frame: collecting it runs no job
-    val codes = collectCodes(pqCodebooks(subs, k))
+    val codes = collectCodes(pqCodebooks(subs, k, iters))
     // materialize the (queries × topK)-row result, then release the cached
     // sub-vector table (r9 ADVICE session-cache hygiene)
     val out = pqAdcTopK(subs, embRows(e, 5), codes, topK).localCheckpoint(true)
@@ -789,6 +795,89 @@ object AnnOps {
       .join(broadcast(lut), Seq("q_id", "s", "j"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(round(sum(col("term")), 6).as("adc"))
+  }
+
+  /** [[adcScoreLut]] then [[refineAdcShortlist]] on the driver, over
+    * rows read filtered to what the query touches: `cands` are the
+    * `(q_id, vec_id)` pairs of each query's probed cells (corpus side,
+    * tombstones already dropped), `codes` `(vec_id, s, j)` is read over
+    * the candidates' id range and `e` `(vec_id, emb, norm)` for the
+    * shortlist only. Each candidate's ADC sums its LUT terms
+    * ([[adcLutFromRows]]) in subspace order and rounds 6-dp; the refine
+    * cosine is [[graft.functions.ExpressionHelpers.cosine]] (`Divide`'s
+    * null and ANSI rule), rounded 6-dp; both rank with [[byQuery]].
+    * Returns the refined top-k as a local frame, no job, or None above
+    * `driverLimit` code rows. vec_ids are unique in `codes` per subspace
+    * and in `e` (the tables' contract).
+    */
+  private[operators] def adcRefineLocal(qs: Seq[(Long, Seq[Double], Double)],
+      lutCodes: Seq[(Long, Int, Seq[Double])], cands: Seq[(Long, Long)],
+      codes: DataFrame, e: DataFrame, topK: Int, refineFactor: Int,
+      driverLimit: Int): Option[DataFrame] = {
+    // the candidates' codes: a range read (row-group pruned, cheaper to
+    // plan than an IN list of every candidate), kept to the candidates
+    // here; None when the range holds more than `driverLimit` code rows
+    val ids = cands.map(_._2).toSet
+    val inRange = if (ids.isEmpty) Array.empty[Row] else codes
+      .filter(col("vec_id").between(ids.min, ids.max))
+      .select(col("vec_id"), col("s").cast("int"), col("j").cast("long"))
+      .limit(driverLimit + 1).collect()
+    if (inRange.length > driverLimit) return None
+    val enc = inRange.filter(r => ids(r.getLong(0))).groupBy(_.getLong(0))
+      .map { case (v, rs) => v -> rs.map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1) }
+    val lut = adcLutFromRows(qs.map(t => (t._1, t._2)), lutCodes)
+      .map { case (q, si, j, term) => (q, si, j) -> term }.toMap
+    val adc = cands.flatMap { case (q, v) =>
+      val terms = enc.getOrElse(v, Array.empty[(Int, Long)])
+        .flatMap { case (si, j) => lut.get((q, si, j)) }
+      if (terms.isEmpty) None
+      else Some((q, v, Some(ExpressionHelpers.round6(terms.foldLeft(0.0)(_ + _)))))
+    }
+    val shortlist = byQuery(adc, topK * refineFactor)
+    val vecs = e.filter(col("vec_id").isin(shortlist.map(_._1._2).distinct: _*))
+      .select(col("vec_id"), col("emb"), col("norm")).collect()
+      .map(r => r.getLong(0) -> r).toMap
+    val qv = qs.map { case (q, qe, qn) => q -> (qe.toArray, qn) }.toMap
+    val ansi = SQLConf.get.ansiEnabled
+    val cos = for {
+      ((q, v, _), _) <- shortlist
+      r <- vecs.get(v)
+      (qe, qn) <- qv.get(q)
+    } yield (q, v, ExpressionHelpers.cosine(
+      ExpressionHelpers.denseOrNull(
+        if (r.isNullAt(1)) null else new GenericArrayData(r.getSeq[Any](1))),
+      r.isNullAt(2), if (r.isNullAt(2)) 0.0 else r.getDouble(2), qe, qn, ansi)
+      .map(ExpressionHelpers.round6))
+    Some(rankedFrame(e.sparkSession, byQuery(cos, topK), "cos"))
+  }
+
+  /** The driver twin of [[topKPerQuery]] and [[RetrievalOps.rankTopK]]:
+    * each key's top `k` of `rows` by score desc under Spark's double
+    * ordering (null last, NaN first, -0.0 equal to 0.0), ties to the
+    * smaller id, each with its 1-based rank, ordered by (key, rank).
+    */
+  private[operators] def topKRows[T, K](rows: Seq[T], k: Int)(key: T => K,
+      id: T => Long, score: T => Option[Double])(implicit ord: Ordering[K]): Seq[(T, Long)] =
+    rows.groupBy(key).toSeq.sortBy(_._1).flatMap { case (_, rs) =>
+      rs.sortWith { (a, b) =>
+        val (sa, sb) = (score(a), score(b))
+        val c = ExpressionHelpers.compareScores(sa.isEmpty, sa.getOrElse(0.0),
+          sb.isEmpty, sb.getOrElse(0.0))
+        c > 0 || (c == 0 && id(a) < id(b))
+      }.take(k).zipWithIndex.map { case (r, i) => (r, i + 1L) }
+    }
+
+  /** [[topKRows]] over `(q_id, vec_id, score)` rows. */
+  private[operators] def byQuery(scored: Seq[(Long, Long, Option[Double])],
+      k: Int): Seq[((Long, Long, Option[Double]), Long)] =
+    topKRows(scored, k)(_._1, _._2, _._3)
+
+  /** [[byQuery]]'s rows as a local `(q_id, vec_id, rank, <score>)` frame. */
+  private[operators] def rankedFrame(s: SparkSession,
+      rows: Seq[((Long, Long, Option[Double]), Long)], score: String): DataFrame = {
+    import s.implicits._
+    rows.map { case ((q, v, sc), rank) => (q, v, rank, sc) }
+      .toDF("q_id", "vec_id", "rank", score)
   }
 
   /** IVF-PQ with the standard REFINE step — the production retrieval

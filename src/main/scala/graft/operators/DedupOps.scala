@@ -1021,9 +1021,9 @@ object DedupOps {
   def semanticDedupTrained(emb: DataFrame, k: Int = 16, iters: Int = 2,
                            tau: Double = 0.35): DataFrame = {
     val e = normedCached(emb)
-    val cents = AnnOps.kmeansCentroids(e, k, iters).cache()
-    cents.count()
-    semanticDedupCore(e, cents, tau, release = Seq(e, cents))
+    // a local frame: reading it again runs no training job
+    val cents = AnnOps.kmeansCentroids(e, k, iters)
+    semanticDedupCore(e, cents, tau, release = Seq(e))
   }
 
   val d11 = QueryDef(

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{FanOut, QueryDef}
@@ -218,6 +217,12 @@ object EpochIndex {
     * (the refresh/explicit-set contract), N ≥ 0 = a cross-process epoch
     * cut joins this reader's fan-out within N ms, at one amortized LIST
     * per window.
+    *
+    * The legs are independent snapshot reads, so they run as concurrent
+    * jobs (~max of the legs, not the sum, guide §2.6); each leg picks
+    * its own route ([[IndexStore.ivfPqRefinedFromIndex]]).
+    * The merge runs on the driver ([[mergeTopK]]) over at most
+    * K · |Q| · topK rows and returns a local frame.
     */
   def searchTopK(s: SparkSession, dir: String, root: String,
       nProbes: Int = 4, topK: Int = 10, refineFactor: Int = 8,
@@ -225,28 +230,33 @@ object EpochIndex {
       maxStaleMs: Long = -1L): DataFrame = {
     val eps = epochs.getOrElse(epochsCached(s, root, maxStaleMs))
     require(eps.nonEmpty, s"no committed epoch indexes under $root")
-    // r17: each leg materializes (localCheckpoint) inside
-    // ivfPqRefinedFromIndex, so the fan-out's wall time was the SUM of
-    // leg latencies — the legs are independent snapshot reads, so they
-    // now run as concurrent jobs (~max, guide §2.6) over ONE shared
-    // embTable fill (ownEmbCache = false: the old per-leg unpersist made
-    // every later leg refill the cache)
-    val e = AnnOps.embTable(s, dir)
-    // try/finally (r17 ADVICE): a throwing leg must not leave the
-    // corpus-sized embTable cache pinned for the session.
-    val per =
-      try FanOut.inParallel(eps.map(name => () => IndexStore.ivfPqRefinedFromIndex(
-        s, dir, epochLoc(root, name), nProbes, topK, refineFactor,
-        ownEmbCache = false)))
-      finally e.unpersist(blocking = false)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    per.reduce(_.unionByName(_))
-      .groupBy(col("q_id"), col("vec_id")).agg(max(col("cos")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id"), col("rank"), col("cos"))
-      .orderBy(col("q_id"), col("rank"))
+    val legs = FanOut.inParallel(eps.map(name => () =>
+      legRows(s, dir, epochLoc(root, name), nProbes, topK, refineFactor)))
+    AnnOps.rankedFrame(s, mergeTopK(legs.flatten, topK), "cos")
+  }
+
+  /** One epoch's refined top-k as collected `(q_id, vec_id, cos)` rows. */
+  private def legRows(s: SparkSession, dir: String, loc: String, nProbes: Int,
+      topK: Int, refineFactor: Int): Seq[(Long, Long, Option[Double])] =
+    IndexStore.ivfPqRefinedFromIndex(s, dir, loc, nProbes, topK, refineFactor)
+      .select(col("q_id"), col("vec_id"), col("cos")).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+
+  /** THE cross-epoch merge of [[searchTopK]] and [[searchTopKPruned]]:
+    * a vec_id found by several legs keeps its greatest cos (Spark's `max`:
+    * nulls ignored, NaN greatest), then each query keeps its top `topK`
+    * by cos desc, ties to the smaller vec_id ([[AnnOps.byQuery]]), with
+    * its rank, ordered by (q_id, rank).
+    */
+  private[graft] def mergeTopK(cands: Seq[(Long, Long, Option[Double])],
+      topK: Int): Seq[((Long, Long, Option[Double]), Long)] = {
+    def greater(a: Option[Double], b: Option[Double]): Option[Double] =
+      if (graft.functions.ExpressionHelpers.compareScores(a.isEmpty, a.getOrElse(0.0),
+          b.isEmpty, b.getOrElse(0.0)) >= 0) a else b
+    AnnOps.byQuery(cands.groupBy(t => (t._1, t._2)).toSeq.map { case ((q, v), ts) =>
+      (q, v, ts.map(_._3).reduce(greater))
+    }, topK)
   }
 
   /** Fold one (vec_id, cos) candidate into a query's running prune
@@ -307,13 +317,7 @@ object EpochIndex {
       maxStaleMs: Long = -1L): (DataFrame, Seq[String]) = {
     val eps = epochs.getOrElse(epochsCached(s, root, maxStaleMs))
     require(eps.nonEmpty, s"no committed epoch indexes under $root")
-    val qs = AnnOps.collectSeeds(AnnOps.embTable(s, dir), 5)
-    // NOTE: no unpersist of the panel source here (r16 ADVICE) — the
-    // embTable cache is plan-matched and SHARED; uncaching it out from
-    // under a caller's handle forced every leg to re-cache it. As of
-    // r17 the legs run with ownEmbCache = false for the same reason,
-    // so the fill is paid ONCE per call; the caller that created the
-    // embTable handle (the a16 gate) releases it.
+    val qs = AnnOps.collectSeeds(AnnOps.embeddings(s, dir), 5)
     // per-epoch best coarse-centroid cosine per query: the legs' own
     // probe pick ([[AnnOps.probeRowsOf]]) at one probe, driver-side (the
     // tables are tiny); a null cosine (zero norm) counts as -1.0
@@ -325,25 +329,20 @@ object EpochIndex {
     }.toMap
     val order = eps.sortBy(n => -best(n).values.max)
     // running per-query shortlist (vec_id -> best cos, trimmed to the
-    // topK best DISTINCT ids) and the candidate pool
-    val pool = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
+    // topK best DISTINCT ids; a null cos never raises the floor) and the
+    // candidate pool
+    val pool = scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Double])]()
     val shortlist =
       scala.collection.mutable.Map[Long, scala.collection.mutable.Map[Long, Double]]()
     def floorOf(q: Long): Option[Double] =
       shortlist.get(q).filter(_.size >= topK).map(_.values.min)
-    def runLeg(name: String): Array[(Long, Long, Double)] =
-      // ownEmbCache = false (r17): the query panel above filled the
-      // shared embTable cache; a leg unpersisting it forced every later
-      // leg to refill (the serial-leg twin of the r16 ADVICE panel fix)
-      IndexStore.ivfPqRefinedFromIndex(s, dir, epochLoc(root, name),
-          nProbes, topK, refineFactor, ownEmbCache = false)
-        .select(col("q_id"), col("vec_id"), col("cos")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    def absorb(rows: Array[(Long, Long, Double)]): Unit =
+    def runLeg(name: String): Seq[(Long, Long, Option[Double])] =
+      legRows(s, dir, epochLoc(root, name), nProbes, topK, refineFactor)
+    def absorb(rows: Seq[(Long, Long, Option[Double])]): Unit =
       rows.foreach { case (q, v, c) =>
         pool += ((q, v, c))
-        foldShortlist(shortlist.getOrElseUpdate(q,
-          scala.collection.mutable.Map.empty), v, c, topK)
+        c.foreach(foldShortlist(shortlist.getOrElseUpdate(q,
+          scala.collection.mutable.Map.empty), v, _, topK))
       }
     val visited = scala.collection.mutable.ArrayBuffer[String]()
     val (head, tail) = order.splitAt(math.max(1, prefetch))
@@ -358,16 +357,7 @@ object EpochIndex {
       }
       if (!prune) { visited += name; absorb(runLeg(name)) }
     }
-    // the same merge contract as searchTopK (dedup to max cos, ties to
-    // the smaller vec_id), over the visited legs' candidates
-    val merged = pool.groupBy(t => (t._1, t._2))
-      .map { case ((q, v), ts) => (q, v, ts.map(_._3).max) }.toSeq
-      .groupBy(_._1).toSeq.flatMap { case (_, cands) =>
-        cands.sortBy(t => (-t._3, t._2)).take(topK).zipWithIndex
-          .map { case ((q, v, c), i) => (q, v, (i + 1).toLong, c) }
-      }.sortBy(t => (t._1, t._3))
-    import s.implicits._
-    (merged.toDF("q_id", "vec_id", "rank", "cos"), visited.toSeq)
+    (AnnOps.rankedFrame(s, mergeTopK(pool.toSeq, topK), "cos"), visited.toSeq)
   }
 
   /** One tick of the EPOCH-level maintenance ladder — the decision rung

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.{FanOut, QueryDef, Tables}
 
@@ -123,6 +127,37 @@ object IndexStore {
     if (ps.isEmpty) None else Some(s.read.parquet(ps: _*))
   }
 
+  /** Rows each read of a reading call's driver route may collect: the
+    * hot-term postings and the doclen rows in the hits' id range of a
+    * BM25 query, or the probed cells' assignment rows and the code rows
+    * in the candidates' id range of an IVF-PQ query. Each such read is
+    * one bounded `limit(driverLimit + 1)` collect, the
+    * [[graft.graph.GraphAlgs.DefaultDriverGraphLimit]] convention: at or
+    * under the limit the call scores on the driver from pruned,
+    * join-free reads and returns a local frame; above it, or with
+    * `driverLimit = 0` (which specs use to pin the two routes together),
+    * the distributed plan runs, the only one that serves inputs larger
+    * than driver memory. Small work runs centrally, large work
+    * distributed (F1 Query, VLDB 2018).
+    *
+    * 20,000 is where the driver route stopped winning in a warm JVM
+    * (local[4], 4 cores; median of 3 calls per route): BM25 at 18,000
+    * postings 0.82 s driver vs 0.92 s distributed, at 51,000 0.87 vs
+    * 0.81 s; IVF-PQ over every cell at 2,500 vectors (20,000 code rows)
+    * 0.84 vs 1.03 s, and with an exact refine window 0.84 vs 1.18 s, at
+    * 5,000 vectors (40,000 code rows) 0.99 vs 0.96 s exact. The driver
+    * thread allocated 185-260 MB per call at those sizes.
+    */
+  val DefaultDriverIndexLimit: Int = 20000
+
+  /** The ids of [[tombstones]] as a driver set (`id` is `doc_id` or
+    * `vec_id`); a null id matches nothing, as in the anti-join.
+    */
+  private def tombstoneIds(s: SparkSession, m: IndexManifest.Manifest,
+      id: String): Set[Long] =
+    tombstones(s, m).map(_.select(col(id).cast("long")).collect()
+      .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet).getOrElse(Set.empty)
+
   // ---------------------------------------------------------------- BM25
 
   private def sigCharCol(docs: DataFrame) =
@@ -158,7 +193,10 @@ object IndexStore {
     try {
       val m = scala.concurrent.Await.result(fut,
         scala.concurrent.duration.Duration(30, "s"))
-      (m("sc").asInstanceOf[Long], m("ss").asInstanceOf[Long],
+      // an input the optimizer proves empty (a false filter) loses the
+      // observed node, and its observation completes with no metrics
+      if (m.isEmpty) fallback
+      else (m("sc").asInstanceOf[Long], m("ss").asInstanceOf[Long],
         m("sch").asInstanceOf[Long])
     } catch {
       case _: java.util.concurrent.TimeoutException =>
@@ -245,11 +283,12 @@ object IndexStore {
     * vacuum retention drops them — the audit/repro read).
     */
   private[operators] def loadBm25(s: SparkSession, loc: String,
-      at: Option[Long] = None): RetrievalOps.Bm25Index = {
-    val m = manifest(s, loc, at)
-    val st = tbl(s, m, "stats").head()
-    val nDocs = st.getAs[Long]("n_docs")
-    val sumTf = st.getAs[Long]("sum_tf")
+      at: Option[Long] = None): RetrievalOps.Bm25Index =
+    bm25Of(s, manifest(s, loc, at))
+
+  private def bm25Of(s: SparkSession,
+      m: IndexManifest.Manifest): RetrievalOps.Bm25Index = {
+    val (nDocs, sumTf) = bm25Scalars(s, m)
     // tombstones ([[deleteBm25]]): postings/doclen rows of deleted docs
     // stay on disk until [[compactBm25]] folds them in; the load applies
     // them as an anti-join, and the model scalars/dfreq were decremented
@@ -263,8 +302,14 @@ object IndexStore {
       dl = minus(tbl(s, m, "doclen")),
       dfreq = tbl(s, m, "dfreq"),
       nDocs = nDocs,
-      avgdl = if (nDocs == 0) 1.0 else sumTf.toDouble / nDocs,
+      avgdl = RetrievalOps.avgdlOf(nDocs, sumTf),
       sumTf = sumTf)
+  }
+
+  /** `(n_docs, sum_tf)` from the stats row of manifest `m`. */
+  private def bm25Scalars(s: SparkSession, m: IndexManifest.Manifest): (Long, Long) = {
+    val st = tbl(s, m, "stats").head()
+    (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_tf"))
   }
 
   /** BM25 top-k from the PERSISTED index (hot-terms probe derivation —
@@ -272,12 +317,75 @@ object IndexStore {
     * read: the whole frame derives from one committed manifest, so it
     * observes exactly one index state — never old scalars over new
     * postings. Materialized (top-k-bounded) so a later vacuum cannot
-    * pull files out from under a caller that holds the frame.
+    * pull files out from under a caller that holds the frame. Up to
+    * `driverLimit` hot-term postings it scores on the driver
+    * ([[bm25HotTermsLocal]]); above it, [[RetrievalOps.hotTermsTopK]]
+    * runs distributed ([[DefaultDriverIndexLimit]]).
     */
   def bm25TopKHotTermsFromIndex(s: SparkSession, loc: String, nProbes: Int = 3,
-      k: Int = 10, at: Option[Long] = None): DataFrame =
-    RetrievalOps.hotTermsTopK(loadBm25(s, loc, at), nProbes, k)
-      .localCheckpoint(true)
+      k: Int = 10, at: Option[Long] = None,
+      driverLimit: Int = DefaultDriverIndexLimit): DataFrame = {
+    val m = manifest(s, loc, at)
+    bm25HotTermsLocal(s, m, nProbes, k, driverLimit).getOrElse(
+      RetrievalOps.hotTermsTopK(bm25Of(s, m), nProbes, k).localCheckpoint(true))
+  }
+
+  /** [[RetrievalOps.hotTermsTopK]] on the driver, or None above
+    * `driverLimit` hot-term postings or doclen rows in the hits' id
+    * range (or for a non-bigint `doc_id`). Reads, each pruned and
+    * join-free: the stats row, the top-`nProbes` dfreq rows, the
+    * postings of those terms, the tombstone ids and the doclen rows in
+    * the surviving hits' id range (both bounded collects). Tombstones
+    * drop on the driver; the joined rows score with the one formula,
+    * [[RetrievalOps.termScore]] rounded 6-dp, over a local relation
+    * (the optimizer folds the projection, no job), and rank by
+    * (score desc, doc_id) as [[RetrievalOps.rankTopK]] does. `w` is
+    * unique in dfreq and `doc_id` in doclen (the build's group-bys).
+    */
+  private def bm25HotTermsLocal(s: SparkSession, m: IndexManifest.Manifest,
+      nProbes: Int, k: Int, driverLimit: Int): Option[DataFrame] = {
+    val posts = tbl(s, m, "postings")
+    if (driverLimit <= 0 || posts.schema("doc_id").dataType != LongType) return None
+    val probes = tbl(s, m, "dfreq").orderBy(col("df").desc, col("w")).limit(nProbes)
+      .select(col("w"), col("df").cast("long")).collect()
+    val hot = posts.filter(col("w").isin(probes.map(_.getString(0)): _*))
+      .select(col("doc_id"), col("w"), col("tf").cast("long"))
+      .limit(driverLimit + 1).collect()
+    if (hot.length > driverLimit) return None
+    val (nDocs, sumTf) = bm25Scalars(s, m)
+    val dead = tombstoneIds(s, m, "doc_id")
+    val live = hot.filter(r => !r.isNullAt(0) && !dead(r.getLong(0)))
+    // the hits' doc lengths: a range read (pushed down to row-group
+    // stats; cheaper to plan than an IN list of every hit) kept to the
+    // hits on the driver, bounded by the same limit
+    val ids = live.map(_.getLong(0)).toSet
+    val inRange = if (ids.isEmpty) Array.empty[Row] else tbl(s, m, "doclen")
+      .filter(col("doc_id").between(ids.min, ids.max))
+      .select(col("doc_id"), col("dl").cast("long"))
+      .limit(driverLimit + 1).collect()
+    if (inRange.length > driverLimit) return None
+    val dl = inRange.filter(r => ids(r.getLong(0))).map(r => r.getLong(0) -> r.get(1)).toMap
+    val df = probes.map(r => r.getString(0) -> r.get(1)).toMap
+    val joined = live.flatMap(r => dl.get(r.getLong(0)).map(l =>
+      Row(r.getString(1), r.getLong(0), r.get(2), df(r.getString(1)), l)))
+    val schema = StructType(Seq(StructField("w", StringType),
+      StructField("doc_id", LongType), StructField("tf", LongType),
+      StructField("df", LongType), StructField("dl", LongType)))
+    val scored = s.createDataFrame(joined.toSeq.asJava, schema)
+      .select(col("w"), col("doc_id"), col("tf"),
+        round(RetrievalOps.termScore(nDocs, RetrievalOps.avgdlOf(nDocs, sumTf),
+          1.2, 0.75), 6).as("score"))
+      .collect()
+    // terms rank in Spark's string order (UTF-8 bytes), as `orderBy(q)`
+    val ranked = AnnOps.topKRows(scored.toSeq, k)(r => UTF8String.fromString(r.getString(0)),
+        _.getLong(1), r => if (r.isNullAt(3)) None else Some(r.getDouble(3)))(
+        Ordering.fromLessThan(_.compareTo(_) < 0))
+      .map { case (r, rk) => Row(r.getString(0), rk, r.getLong(1), r.getLong(2), r.get(3)) }
+    Some(s.createDataFrame(ranked.asJava, StructType(Seq(
+      StructField("q", StringType), StructField("rk", LongType),
+      StructField("doc_id", LongType), StructField("tf", LongType),
+      StructField("score", DoubleType)))))
+  }
 
   /** Build-if-absent (fingerprint-guarded) BM25 index for the `documents`
     * table of a testdata dir; returns the index location. The guard makes
@@ -512,36 +620,57 @@ object IndexStore {
     * 4-bit codes come from parquet (the search path touches NO
     * full-precision corpus vector until the refine point-fetch); the
     * query panel and the refine fetch read the embeddings table. Same
-    * query form as [[AnnOps.ivfPqKnnRefined]] ([[AnnOps.adcScoreLut]]
-    * over the collected panel, centroids and codebook) with the persisted
-    * tables substituted. LOCK-FREE snapshot read (one manifest resolve),
-    * materialized top-k.
+    * query form as [[AnnOps.ivfPqKnnRefined]] (probes from
+    * [[AnnOps.probeRowsOf]], ADC from the LUT over the collected panel,
+    * centroids and codebook) with the persisted tables substituted.
+    * LOCK-FREE snapshot read (one manifest resolve), materialized top-k.
+    *
+    * Up to `driverLimit` probed assignment rows, and as many code rows in
+    * the candidates' id range, the whole query scores on the driver
+    * ([[AnnOps.adcRefineLocal]]: vectors read for the shortlist only);
+    * above it the distributed
+    * [[AnnOps.adcScoreLut]] + [[AnnOps.refineAdcShortlist]] plan runs
+    * ([[DefaultDriverIndexLimit]]).
     */
   def ivfPqRefinedFromIndex(s: SparkSession, dir: String, loc: String,
       nProbes: Int = 4, topK: Int = 10, refineFactor: Int = 8,
-      at: Option[Long] = None, ownEmbCache: Boolean = true): DataFrame = {
+      at: Option[Long] = None,
+      driverLimit: Int = DefaultDriverIndexLimit): DataFrame = {
     val m = manifest(s, loc, at)
-    val e = AnnOps.embTable(s, dir) // cached: query panel + refine fetch
+    val emb = AnnOps.embeddings(s, dir) // panel and refine fetch: one schema read
+    val qs = AnnOps.collectSeeds(emb, 5)
+    val cents = AnnOps.collectCents(tbl(s, m, "centroids"))
+    val codes = AnnOps.collectCodes(tbl(s, m, "codebooks"))
+    val probes = AnnOps.probeRowsOf(qs, cents, nProbes)
+    val probed = if (driverLimit <= 0) None else Some(
+      tbl(s, m, "assign").filter(col("c_id").isin(probes.map(_._2).distinct: _*))
+        .select(col("vec_id"), col("c_id").cast("long"))
+        .limit(driverLimit + 1).collect()).filter(_.length <= driverLimit)
     // tombstones ([[deleteIvfPq]]): retired vectors drop out of the cell
     // assignment here, so they can never become candidates — their codes
     // stay committed until [[compactIvfPq]] but are unreachable
     // (candidates drive the code decode, not the other way round)
-    val tomb = tombstones(s, m)
-    val assign = tomb.foldLeft(tbl(s, m, "assign"))(
-      (a, t) => a.join(t, Seq("vec_id"), "left_anti"))
-    val scored = AnnOps.adcScoreLut(AnnOps.collectSeeds(e, 5),
-      AnnOps.collectCents(tbl(s, m, "centroids")),
-      AnnOps.collectCodes(tbl(s, m, "codebooks")), assign, tbl(s, m, "codes"),
-      nProbes)
-    // materialized by the refine (top-k bounded)
-    val out = AnnOps.refineAdcShortlist(scored, e, topK, refineFactor)
-    // `ownEmbCache = false` (r17): a multi-leg fan-out (EpochIndex
-    // searchTopK / searchTopKPruned) fills the plan-matched embTable
-    // cache ONCE and runs its legs — possibly concurrently — against it;
-    // a leg unpersisting the shared cache forced every later leg to
-    // refill it (and raced concurrent legs into recomputes).
-    if (ownEmbCache) e.unpersist(blocking = false)
-    out
+    val local = probed.flatMap { rows =>
+      val dead = tombstoneIds(s, m, "vec_id")
+      val byCell = rows.filter(r => !r.isNullAt(0) && r.getLong(0) >= 5 &&
+          !dead(r.getLong(0)))
+        .groupBy(_.getLong(1)).map { case (c, rs) => c -> rs.map(_.getLong(0)) }
+      val cands = probes.flatMap { case (q, c, _) =>
+        byCell.getOrElse(c, Array.empty[Long]).map(v => (q, v))
+      }
+      AnnOps.adcRefineLocal(qs, codes, cands, tbl(s, m, "codes"), emb,
+        topK, refineFactor, driverLimit)
+    }
+    local.getOrElse {
+      val assign = tombstones(s, m).foldLeft(tbl(s, m, "assign"))(
+        (a, t) => a.join(t, Seq("vec_id"), "left_anti"))
+      val scored = AnnOps.adcScoreLut(qs, cents, codes, assign,
+        tbl(s, m, "codes"), nProbes)
+      // materialized by the refine (top-k bounded); an uncached scan:
+      // the refine's panel read is a pruned `vec_id < 5` filter, and no
+      // corpus-wide cache is filled per call or shared between legs
+      AnnOps.refineAdcShortlist(scored, emb, topK, refineFactor)
+    }
   }
 
   /** [[buildIvfPq]] with TRAINED model tables — the production shape
@@ -568,7 +697,7 @@ object IndexStore {
       try {
         subs.count() // codebook training + encode share one fill
         IndexLock.renew(s, tok) // heartbeat: k-means stages are the cost
-        val cb = AnnOps.pqCodebooks(subs, k)
+        val cb = AnnOps.pqCodebooks(subs, k, iters)
         // codebook persist + full-input assign/encode writes are
         // independent once training is done — concurrent jobs
         val Seq(cbRel, asg, codes) = FanOut.inParallel(Seq(
@@ -834,7 +963,7 @@ object IndexStore {
       val subs = AnnOps.subvectors(live).cache()
       try {
         subs.count()
-        val cb = AnnOps.pqCodebooks(subs, k)
+        val cb = AnnOps.pqCodebooks(subs, k, iters)
         IndexLock.renew(s, tok)
         val centsRel = writeVersion(cents, loc, "centroids")
         val cbRel = writeVersion(cb, loc, "codebooks")

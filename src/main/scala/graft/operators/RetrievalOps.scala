@@ -92,9 +92,14 @@ object RetrievalOps {
     // frame is empty anyway, so any finite avgdl yields the correct
     // empty result instead of an NPE / division by zero
     val sumTf = if (nDocs == 0) 0L else scal.getLong(0)
-    val avgdl = if (nDocs == 0) 1.0 else sumTf.toDouble / nDocs
-    Bm25Index(tf, dl, dfreq, nDocs, avgdl, sumTf)
+    Bm25Index(tf, dl, dfreq, nDocs, avgdlOf(nDocs, sumTf), sumTf)
   }
+
+  /** The corpus mean document length; 1.0 for an empty corpus, where any
+    * finite value scores the (empty) result correctly.
+    */
+  private[operators] def avgdlOf(nDocs: Long, sumTf: Long): Double =
+    if (nDocs == 0) 1.0 else sumTf.toDouble / nDocs
 
   private def withIndex(docsDf: DataFrame)(f: Bm25Index => DataFrame): DataFrame = {
     val ix = buildIndexTables(docsDf)
@@ -106,12 +111,13 @@ object RetrievalOps {
   /** The per-(posting, probe-term) BM25 contribution — THE scoring
     * formula, written once: idf(df) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl)).
     */
-  private[operators] def termScore(ix: Bm25Index, k1: Double, b: Double): Column = {
-    val idf = log(lit(1.0) + (lit(ix.nDocs.toDouble) - col("df") + lit(0.5))
+  private[operators] def termScore(nDocs: Long, avgdl: Double, k1: Double,
+      b: Double): Column = {
+    val idf = log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + lit(0.5))
       / (col("df") + lit(0.5)))
     idf * col("tf").cast("double") * lit(k1 + 1.0) /
       (col("tf").cast("double")
-        + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(ix.avgdl)))
+        + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl)))
   }
 
   /** Byte threshold above which the doclen side of the scoring join is
@@ -184,7 +190,7 @@ object RetrievalOps {
     hits
       .join(pruneDl(ix.dl, hits, ix.nDocs), Seq("doc_id"))
       .select(col("w").as("q"), col("doc_id"), col("tf"),
-        round(termScore(ix, k1, b), 6).as("score"))
+        round(termScore(ix.nDocs, ix.avgdl, k1, b), 6).as("score"))
   }
 
   private[operators] def rankTopK(scored: DataFrame, k: Int): DataFrame =
@@ -262,7 +268,7 @@ object RetrievalOps {
     hits
       .join(pruneDl(ix.dl, hits, ix.nDocs), Seq("doc_id"))
       .groupBy(col("q_id"), col("doc_id"))
-      .agg(round(sum(termScore(ix, k1, b)), 6).as("score"))
+      .agg(round(sum(termScore(ix.nDocs, ix.avgdl, k1, b)), 6).as("score"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("doc_id"))))
       .filter(col("rk") <= k)

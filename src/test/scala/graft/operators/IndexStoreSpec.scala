@@ -314,6 +314,29 @@ class IndexStoreSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(table(locDel, "stats").head().getAs[Long]("sig_count") == -1L)
   }
 
+  test("IVF-PQ: a trained build's, a retrain's and pqAdcTrained's iters reach the codebooks") {
+    val dir = "/root/testdata/sf0.001"
+    val e = AnnOps.embTable(spark, dir)
+    try {
+      def built(iters: Int): Seq[String] = {
+        val loc = tmpLoc(s"ivfpq-iters$iters")
+        IndexStore.buildIvfPqTrained(e, loc, iters = iters)
+        collectSorted(table(loc, "codebooks"))
+      }
+      assert(built(1) != built(4), "buildIvfPqTrained: iters = 1 and 4 trained one codebook")
+      def retrained(iters: Int): Seq[String] = {
+        val loc = tmpLoc(s"ivfpq-retrain$iters")
+        IndexStore.buildIvfPq(e, loc)
+        IndexStore.retrainIvfPq(e, loc, iters = iters)
+        collectSorted(table(loc, "codebooks"))
+      }
+      assert(retrained(1) != retrained(4), "retrainIvfPq: iters = 1 and 4 trained one codebook")
+      assert(collectSorted(AnnOps.pqAdcTrained(spark, dir, iters = 1)) !=
+        collectSorted(AnnOps.pqAdcTrained(spark, dir, iters = 4)),
+        "pqAdcTrained: iters = 1 and 4 scored alike")
+    } finally e.unpersist(blocking = false)
+  }
+
   test("IVF-PQ: cell-skew rebalance retrains routing only, recall at the rebuild floor") {
     import org.apache.spark.sql.functions.col
     val dir = "/root/testdata/sf0.001"
